@@ -161,7 +161,7 @@ def _expand_ranges(starts: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, 
     subtraction pass of the naive formulation are folded into the
     small per-run addend before it is repeated. Measured 0.77x of the
     two-repeat+gather form isolated, burn phase 0.977x, bit-exact
-    against it (tools/ab_expand_ranges_r7.py; the single-cumsum
+    against it (BENCH/BASELINE.md round 7; the single-cumsum
     delta-scatter rewrite suggested by VERDICT r06 #5 measured SLOWER
     — 1.16-1.49x isolated, burn 1.05-1.08x — and was rejected).
     """

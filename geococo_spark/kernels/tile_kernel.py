@@ -484,124 +484,6 @@ def _kernel_fields():
     return KERNEL_OUT.fields
 
 
-def pairs_frame_from_arrays(row) -> pd.DataFrame:
-    """Rebuild the kernel's pairs frame from the broadcast-path
-    position-zipped primitive arrays (one row per image group): the
-    ``g_*`` arrays carry each label's WKB once, the ``p_*`` arrays are
-    the thin (window, label) pairs — the same two-part layout
-    pipeline._with_geom_rows unions for the cogroup path, so
-    run_tile_kernel consumes either unchanged. Every column lands as a
-    numpy vector (no per-pair Python objects beyond the WKB bytes)."""
-    cols = ["col_off", "row_off", "width", "height", "label_idx", "geometry", "id"]
-    n_g = len(row["g_label_idx"])
-    g = pd.DataFrame(
-        {
-            "col_off": [None] * n_g,
-            "row_off": [None] * n_g,
-            "width": [None] * n_g,
-            "height": [None] * n_g,
-            "label_idx": row["g_label_idx"],
-            "geometry": row["g_geometry"],
-            "id": [None] * n_g,
-        }
-    )
-    p = pd.DataFrame(
-        {
-            "col_off": row["p_col_off"],
-            "row_off": row["p_row_off"],
-            "width": row["p_width"],
-            "height": row["p_height"],
-            "label_idx": row["p_label_idx"],
-            "geometry": None,
-            "id": row["p_id"],
-        }
-    )
-    return pd.concat([g[cols], p[cols]], ignore_index=True)
-
-
-def map_kernel(
-    out_fmt: str = "jpeg",
-    acc: dict | None = None,
-    tile_sink_dir: str | None = None,
-    cache_max_bytes: int | None = None,
-):
-    """Factory for the broadcast-path ``mapInPandas`` kernel (VERDICT r03
-    #1): each input row is one self-contained image group — the image
-    row's own columns plus its aggregated ``pair_arr``/``geom_arr``
-    structs, attached by a BROADCAST hash join in the pipeline. Unlike
-    the cogroup path there is NO exchange on the images side: the ~MB of
-    encoded image bytes flow scan -> broadcast-join -> kernel inside one
-    pipelined stage instead of through a hash-partitioning shuffle
-    write + read. Output and semantics are byte-identical to
-    :func:`cogroup_kernel` (pinned by test)."""
-
-    def _fn(batches):
-        import time as _time
-
-        if cache_max_bytes is not None:
-            _decode_cache.set_budget(cache_max_bytes)
-        for pdf in batches:
-            for i in range(len(pdf)):
-                t0 = _time.perf_counter()
-                row = pdf.iloc[i]
-                out = run_tile_kernel(
-                    pdf.iloc[[i]],
-                    pairs_frame_from_arrays(row),
-                    out_fmt=out_fmt,
-                    acc=acc,
-                    tile_sink_dir=tile_sink_dir,
-                )
-                if acc is not None and "kernel_ms" in acc:
-                    acc["kernel_ms"].add(int((_time.perf_counter() - t0) * 1000))
-                if len(out):
-                    yield out
-
-    return _fn
-
-
-def cogroup_packed_kernel(
-    out_fmt: str = "jpeg",
-    acc: dict | None = None,
-    tile_sink_dir: str | None = None,
-    cache_max_bytes: int | None = None,
-):
-    """Cogroup factory over a PACKED pairs side: one row per
-    (image_id, band) carrying the broadcast-path position-zipped
-    primitive arrays (``p_*``/``g_*``) instead of one row per pair.
-
-    Why: the cogroup kernel stage's wall is dominated by its INPUT
-    row count, not bytes — tools/ab_kernel_floor_r7.py measured the
-    512-image stage floor at ~4 s with 1M per-pair rows vs ~2 s with
-    100k, image payload bytes free in both. Packing moves the per-pair
-    data through the exchange + Arrow boundary as a handful of
-    contiguous arrays per group (the layout map_kernel already proved
-    out), cutting boundary rows ~2000x while keeping the exchange
-    count identical (the packing groupBy hashes on the same
-    (image_id, band) key the cogroup needs). Output is byte-identical
-    to :func:`cogroup_kernel` (pinned by test)."""
-
-    def _fn(image_pdf: pd.DataFrame, packed_pdf: pd.DataFrame) -> pd.DataFrame:
-        import time as _time
-
-        if cache_max_bytes is not None:
-            _decode_cache.set_budget(cache_max_bytes)
-        t0 = _time.perf_counter()
-        if len(image_pdf) == 0 or len(packed_pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in _kernel_fields()])
-        out = run_tile_kernel(
-            image_pdf,
-            pairs_frame_from_arrays(packed_pdf.iloc[0]),
-            out_fmt=out_fmt,
-            acc=acc,
-            tile_sink_dir=tile_sink_dir,
-        )
-        if acc is not None and "kernel_ms" in acc:
-            acc["kernel_ms"].add(int((_time.perf_counter() - t0) * 1000))
-        return out
-
-    return _fn
-
-
 def cogroup_kernel(
     out_fmt: str = "jpeg",
     acc: dict | None = None,

@@ -488,7 +488,7 @@ def minhash_lsh_pairs(
     bucket) rows: both self-join sides otherwise recompute the
     signature Arrow pass + banding from the shingle cache (no
     ReusedExchange across the sides). Measured 1.13x at sf0.1
-    (tools/ab_emb_persist_r7.py's sibling probe, equality-gated); the
+    (round-7 A/B in BENCH/BASELINE.md, equality-gated); the
     pinned footprint is 3 scalars x bands per doc.
     """
     rows_per_band = num_perm // bands
@@ -809,7 +809,7 @@ def duplicate_clusters(
     is fixpoint-neutral (min-label propagation is monotone decreasing
     over reachable labels; if a fused round changes nothing, each inner
     step changed nothing) — but it MEASURED SLOWER on the bench-shaped
-    sf0.1 graph (tools/ab_cc_fused_r7.py: 1.34x localCheckpoint path,
+    sf0.1 graph (BENCH/BASELINE.md round 7: 1.34x localCheckpoint path,
     1.30x durable path): the unmaterialized intermediate labeling is
     referenced twice per extra step (as the next step's join input AND
     the least() base) and recomputed each time, which costs more than

@@ -547,7 +547,7 @@ def embedding_near_duplicates(
     the quantized (qv, norm) table, which otherwise each compute TWICE
     (both sides of the candidate self-join / both verify attaches —
     ReusedExchange never fires because the sides differ). Measured 1.15x
-    at the bench scale (tools/ab_emb_persist_r7.py); the saving is two
+    at the bench scale (BENCH/BASELINE.md round 7); the saving is two
     full-corpus Arrow passes, so it grows with corpus size. The pinned
     footprint is ~(1 + n_tables) thin rows per vector plus the quantized
     vectors — disable when executor storage is the binding constraint.

@@ -12,15 +12,12 @@ plan mandated by the north_rule:
      hot cells are replicated across ``n_salt`` sub-keys, tiles hash to
      one sub-key — a hot cell's probe work fans out over n_salt tasks,
 3. bbox residual (pure column predicate, evaluated in the join),
-4. exact residual ``intersects(tile_box, label_polygon)`` — by default a
-   pure Spark SQL expression over per-label vertex arrays
-   (``exact_mode="sql"``: bbox-disjoint early-out, containment
-   short-circuit, then Liang-Barsky/even-odd; the pandas-UDF shape
-   remains as ``exact_mode="udf"``),
-5. reference-point dedupe (``dedupe_mode="refpoint"``): a pair is kept
-   only in the cell containing its bbox-intersection min corner — a
-   pure filter, so multi-cell duplication costs no exchange
-   (``dedupe_mode="shuffle"`` keeps the old ``dropDuplicates``).
+4. exact residual ``intersects(tile_box, label_polygon)`` — a pure Spark
+   SQL expression over per-label vertex arrays (bbox-disjoint early-out,
+   containment short-circuit, then Liang-Barsky/even-odd),
+5. reference-point dedupe: a pair is kept only in the cell containing
+   its bbox-intersection min corner — a pure filter, so multi-cell
+   duplication costs no exchange.
 
 At 100 TB the only wide exchange left is the cell-key shuffle itself —
 skipped entirely in broadcast mode, where the pairs stage is now
@@ -231,8 +228,6 @@ def spatial_join(
     label_count: int | None = None,
     output_geometry: bool = True,
     dedupe: bool = True,
-    exact_mode: str | None = None,
-    dedupe_mode: str | None = None,
     broadcast_side: str = "labels",
 ) -> DataFrame:
     """Join tiles to intersecting labels.
@@ -249,10 +244,13 @@ def spatial_join(
     :param exact: apply the exact polygon residual (False = bbox-only
         join, the SQL-expressible skeleton used by the DuckDB oracle)
     :param label_count: optional known label count to skip the count job
+    :param dedupe: keep each pair once (reference-point filter); False
+        exposes the candidate stream, one row per shared cover cell —
+        diagnostics only, never correct as pipeline input
     :param output_geometry: keep the label WKB on the output rows. Pass
         False when the caller re-attaches geometry from the labels table
-        (pipeline does): the WKB then never rides the dedupe shuffle —
-        pair rows shrink ~10x on dense-label workloads
+        (pipeline does): the WKB then stays out of the pair rows, which
+        shrink ~10x on dense-label workloads
     :param broadcast_side: which side the caller KNOWS is small (round
         8, guide §8 "use what you know that the optimizer does not").
         ``"labels"`` (default — the pipeline shape: tiles ≫ labels)
@@ -265,18 +263,7 @@ def spatial_join(
     :return: one row per intersecting (tile, label) pair, with all tile
         and label columns
     """
-    if exact_mode is None:
-        # "sql" (default): pure JVM exact residual. "udf": the pandas-UDF
-        # shape kept for A/B and as a fallback; override via env for
-        # whole-pipeline comparisons without plumbing a parameter
-        import os
-
-        exact_mode = os.environ.get("GEOCOCO_EXACT_MODE", "sql")
-    if dedupe_mode is None:
-        import os
-
-        dedupe_mode = os.environ.get("GEOCOCO_DEDUPE_MODE", "refpoint")
-    if exact and exact_mode == "sql":
+    if exact:
         # vertex arrays attached per LABEL (O(labels) decode) so the
         # exact residual runs as a pure JVM expression on the join rows
         labels = (
@@ -286,8 +273,6 @@ def spatial_join(
             .withColumn("_gr", F.col("_ga.rid"))
             .drop("_ga")
         )
-    elif exact and exact_mode != "udf":
-        raise ValueError(f"unknown exact_mode: {exact_mode!r}")
     lbl_cells = cells.with_cell_cover(
         labels, cell_size, "label_minx", "label_miny", "label_maxx", "label_maxy"
     )
@@ -298,10 +283,7 @@ def spatial_join(
     if broadcast_side == "tiles":
         joined = lbl_cells.join(F.broadcast(tile_cells), "cell", "inner")
         joined = joined.filter(_bbox_overlap())
-        return _finish_join(
-            joined, tile_id, label_id, geometry, cell_size, exact, exact_mode,
-            dedupe, dedupe_mode, output_geometry,
-        )
+        return _finish_join(joined, geometry, cell_size, exact, dedupe, output_geometry)
     elif broadcast_side != "labels":
         raise ValueError(f"unknown broadcast_side: {broadcast_side!r}")
 
@@ -333,28 +315,21 @@ def spatial_join(
         joined = tile_salted.join(lbl_salted, ["cell", "salt"], "inner").drop("salt")
 
     joined = joined.filter(_bbox_overlap())
-    return _finish_join(
-        joined, tile_id, label_id, geometry, cell_size, exact, exact_mode,
-        dedupe, dedupe_mode, output_geometry,
-    )
+    return _finish_join(joined, geometry, cell_size, exact, dedupe, output_geometry)
 
 
 def _finish_join(
     joined: DataFrame,
-    tile_id: str,
-    label_id: str,
     geometry: str,
     cell_size: float,
     exact: bool,
-    exact_mode: str,
     dedupe: bool,
-    dedupe_mode: str,
     output_geometry: bool,
 ) -> DataFrame:
     """Shared tail of :func:`spatial_join` (both broadcast orientations
-    and the salted path): refpoint/shuffle dedupe, exact residual,
-    column cleanup."""
-    if dedupe and dedupe_mode == "refpoint":
+    and the salted path): refpoint dedupe, exact residual, column
+    cleanup."""
+    if dedupe:
         # reference-point dedupe (classic SpatialHadoop/Sedona technique):
         # a (tile, label) pair is joined once per SHARED cover cell; keep
         # it only in the cell containing the bbox-intersection min corner
@@ -372,48 +347,14 @@ def _finish_join(
             + F.floor(F.greatest("tile_miny", "label_miny") / cs).cast("long")
         )
         joined = joined.filter(F.col("cell") == ref_cell)
-    elif dedupe and dedupe_mode != "shuffle":
-        raise ValueError(f"unknown dedupe_mode: {dedupe_mode!r}")
-    if exact and exact_mode == "sql":
+    if exact:
         # JVM exact residual: containment CASE short-circuits ~85% of
         # candidates; the rest evaluate Liang-Barsky/even-odd over the
         # label's vertex arrays — no Arrow hop, no Python on the
-        # per-pair hot path (the pandas-UDF exact filter measured 4.1 s
-        # of the 7.4 s pairs phase at 512 images, while rejecting ~0
-        # rows on blob labels; the probe rows are in BENCH/BASELINE.md)
+        # per-pair hot path
         joined = joined.filter(_sql_exact_expr())
-    elif exact:
-        # the exact residual stays a SINGLE pipelined UDF filter inside
-        # the join stage. A "thin" split — containment decided JVM-side,
-        # WKB re-attached only to boundary straddlers — was built and
-        # A/B/A-profiled in round 3 and REGRESSED the pairs stage 3x at
-        # local[32] (7.3s -> 19.7-24.7s at 1024 images): the extra
-        # candidate materialization + straddler re-join cost far more
-        # than the WKB-through-Arrow it saved (the WKB is on the
-        # broadcast side and never rides a shuffle; the in-UDF
-        # containment fast path already skips decoding for ~85% of
-        # rows). Negative result kept here so it isn't retried.
-        joined = joined.filter(
-            _box_intersects_wkb(
-                F.col("tile_minx"),
-                F.col("tile_miny"),
-                F.col("tile_maxx"),
-                F.col("tile_maxy"),
-                F.col("label_minx"),
-                F.col("label_miny"),
-                F.col("label_maxx"),
-                F.col("label_maxy"),
-                F.col(geometry),
-            )
-        )
     drop = ["cell"] if output_geometry else ["cell", geometry]
-    joined = joined.drop(*drop, "_gx", "_gy", "_gr")
-    # dedupe=False exposes the pre-dedup candidate stream (a pair appears
-    # once per shared cell) — profiling/diagnostics only, never correct
-    # as pipeline input. refpoint mode already deduped with a filter.
-    if not dedupe or dedupe_mode == "refpoint":
-        return joined
-    return joined.dropDuplicates([tile_id, label_id])
+    return joined.drop(*drop, "_gx", "_gy", "_gr")
 
 
 def spatial_join_brute_force(

@@ -2,27 +2,34 @@
 reference's ``append_dataset`` (geococo/coco_processing.py:28-187,
 mapped stage-by-stage in SURVEY.md §3.2).
 
-Driver prologue (steps ①-⑨, scalars + tiny dimension tables), then the
-distributed DAG:
+:func:`append_dataset` drives five stages; each owns its own
+materialization:
 
-    tiles = images x explode(grid)            (T1-T3, built-ins)
-    pairs = spatial_join(tiles, labels)       (J1, broadcast-or-salted)
-    kout  = images cogroup pairs |> kernel    (R1-R9, one Arrow pass)
-    coco_images, coco_annotations = ids(kout) (W1/W2, two-pass at scale)
+    _prologue  ONE aggregate action (steps ①-⑨: validation, guards,
+               grid schema), categories, source registration; pins the
+               enriched labels for the stages below
+    _pairs     tiles = images x explode(grid)        (T1-T3, built-ins)
+               pairs = spatial_join(tiles, labels)   (J1; checkpoint
+               stage or localCheckpoint)
+    _kernel    kout = images cogroup pairs |> kernel (R1-R9, one Arrow
+               pass; checkpoint stage or persist)
+    _ids       coco_images, coco_annotations = ids(kout)  (W1/W2)
+    _publish   append to the CocoState, tile payload read-back
 
-Shuffle inventory at 100 TB: one exchange for the cell join (skipped in
-broadcast mode), the kernel input exchange — NONE in broadcast
-kernel_input_mode (thin pair arrays broadcast onto the images scan), or
-one groupBy (image_id, band) in cogroup mode — and ONE fused
-id-assignment exchange over *metadata-only* rows keyed by a
-deterministic source-id partition function (no range sampling;
-tile_bytes never flows through a wide exchange after the kernel when a
-checkpoint_dir or tile sink is set).
+Shuffle inventory at 100 TB: one exchange for the cell join (none when
+the label side broadcasts), the cogroup exchange on (image_id, band)
+that moves every encoded image byte once, and ONE fused id-assignment
+exchange over *metadata-only* rows keyed by a deterministic source-id
+partition function (no range sampling).
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import time
+from contextlib import contextmanager
+from dataclasses import dataclass
 from datetime import datetime
 
 import pandas as pd
@@ -39,6 +46,9 @@ from geococo_spark.geometry import validate
 from geococo_spark.kernels.tile_kernel import cogroup_kernel
 from geococo_spark.operators import categories as cat_ops
 from geococo_spark.operators import grid, ids, spatial_join
+
+# schema of the in-stage tile sink's parquet files (tile_kernel.sink_tile_payload)
+_SINK_SCHEMA = "image_key string, tile_name string, tile_bytes binary, caption string"
 
 
 class SchemaValidationError(ValueError):
@@ -135,12 +145,7 @@ def _pixel_window_exprs(minx, miny, maxx, maxy):
     _cb = (maxx - F.col(f"{t}.c")) / F.col(f"{t}.a")
     _ra = (miny - F.col(f"{t}.f")) / F.col(f"{t}.e")
     _rb = (maxy - F.col(f"{t}.f")) / F.col(f"{t}.e")
-    return (
-        F.least(_ca, _cb),
-        F.greatest(_ca, _cb),
-        F.least(_ra, _rb),
-        F.greatest(_ra, _rb),
-    )
+    return F.least(_ca, _cb), F.greatest(_ca, _cb), F.least(_ra, _rb), F.greatest(_ra, _rb)
 
 
 def banded_cogroup_inputs(
@@ -164,20 +169,14 @@ def banded_cogroup_inputs(
             pairs_thin.withColumn("band", F.lit(0).cast("int")),
         )
     bands_dim = pairs_thin.groupBy("image_id").agg(
-        F.greatest(
-            F.lit(1), F.ceil(F.count(F.lit(1)) / F.lit(band_split_pairs))
-        )
+        F.greatest(F.lit(1), F.ceil(F.count(F.lit(1)) / F.lit(band_split_pairs)))
         .cast("int")
         .alias("n_bands")
     )
+    band = F.pmod(F.xxhash64("col_off", "row_off"), F.col("n_bands").cast("long")).cast("int")
     pairs_banded = (
         pairs_thin.join(F.broadcast(bands_dim), "image_id")
-        .withColumn(
-            "band",
-            F.pmod(F.xxhash64("col_off", "row_off"), F.col("n_bands").cast("long")).cast(
-                "int"
-            ),
-        )
+        .withColumn("band", band)
         .drop("n_bands")
     )
     img_cg = (
@@ -192,189 +191,58 @@ def banded_cogroup_inputs(
     return img_cg, pairs_banded
 
 
-def _parse_byte_conf(s: str) -> int:
-    """Spark memory/size conf string -> bytes ("8g", "512m", "10485760b",
-    bare numbers are bytes). Returns <= 0 unchanged (disabled)."""
-    s = s.strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20), ("kb", 1 << 10),
-        ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s, mult = s[: -len(suffix)], m
-            break
-    return int(float(s) * mult)
+class _Clock:
+    """Optional phase profiling (``timings=``): wall seconds between the
+    pipeline's action points, each phase being the Spark job(s) that ran
+    since the previous mark."""
+
+    def __init__(self, timings: dict | None):
+        self.timings = timings
+        self.restart()
+
+    def restart(self) -> None:
+        self.t = time.perf_counter()
+
+    def mark(self, phase: str) -> None:
+        if self.timings is not None:
+            now = time.perf_counter()
+            self.timings[phase] = round(now - self.t, 3)
+            self.t = now
 
 
-def auto_broadcast_pairs_rows(spark: SparkSession) -> int:
-    """Pair-count threshold for the ``auto`` kernel-input mode, derived
-    from cluster shape instead of a hard-coded constant (VERDICT r04
-    #6). The broadcast pair arrays cost ~48 B/row (position-zipped
-    primitives: 4 window longs + label_idx + category int, plus Arrow
-    framing), and the materialized broadcast must fit BOTH the driver
-    (which builds it) and every executor (which holds a copy next to the
-    decode cache), so the budget is the smaller of
-
-    - 16x ``spark.sql.autoBroadcastJoinThreshold`` — the operator ships
-      an explicit broadcast() hint, so the conf's 10 MB autodetect
-      default is a floor, not a cap; 16x tracks how admins scale that
-      knob with executor memory, and a threshold of -1 (broadcast
-      disabled) pins auto mode to cogroup,
-    - 5% of executor heap (falls back to driver memory in local mode) —
-      the broadcast is resident for the whole kernel stage.
-
-    Defaults (10 MB threshold, 8 g heap) give ~3.4M pairs — the same
-    order as the round-4 fixed 4M constant, now tracking the knobs a
-    real cluster actually tunes. See docs/PLANS.md."""
-    thr = _parse_byte_conf(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    )
-    if thr <= 0:
-        return 0
-    heap = _parse_byte_conf(
-        spark.conf.get("spark.executor.memory", None)
-        or spark.conf.get("spark.driver.memory", None)
-        or "1g"
-    )
-    budget = min(16 * thr, heap // 20)
-    return max(budget // 48, 1)
+@dataclass
+class _Prologue:
+    labels: DataFrame  # validated + category-enriched
+    n_labels: int
+    label_extent: tuple[float, float, float, float]  # minx, miny, maxx, maxy
+    schema: grid.WindowSchemaSpec
+    cell_size: float
+    sources: DataFrame  # image_key -> source_id, broadcast
+    fingerprint: str  # checkpoint identity of the inputs + output-shaping options
 
 
-def append_dataset(
-    spark: SparkSession,
-    state: CocoState,
-    images: DataFrame,
-    labels: DataFrame,
-    images_dir: str = "images",
-    window_bounds: list[tuple[int, int]] = [(256, 256), (512, 512)],
-    quantile: float = 0.9,
-    id_attribute: str | None = "category_id",
-    name_attribute: str | None = None,
-    super_attribute: str | None = None,
-    out_fmt: str = "jpeg",
-    cell_size: float | None = None,
-    date_captured: datetime | None = None,
-    checkpoint_dir: str | None = None,
-    broadcast_rows: int = 1_000_000,
-    metrics: "EngineMetrics | None" = None,
-    knn_fallback: bool = False,
-    knn_rings: int = 2,
-    timings: dict | None = None,
-    tile_sink_dir: str | None = None,
-    band_split_pairs: int | None = None,
-    checkpoint_exact_digest: bool = False,
-    kernel_input_mode: str = "cogroup",
-    broadcast_pairs_rows: int | None = None,
-    kernel_schedule: str = "fused",
-) -> CocoState:
-    """Run the full annotate pipeline and return the appended state.
+@contextmanager
+def _prologue(
+    spark: SparkSession, state: CocoState, images: DataFrame, labels: DataFrame,
+    clock: _Clock, *,
+    images_dir: str, window_bounds: list[tuple[int, int]], quantile: float,
+    id_attribute: str | None, name_attribute: str | None, super_attribute: str | None,
+    out_fmt: str, cell_size: float | None, date_captured: datetime | None,
+    broadcast_rows: int, tile_sink_dir: str | None, checkpoint_exact_digest: bool,
+):
+    """Steps ①-⑨ in ONE action, then categories and source registration.
 
-    ``images`` rows follow schemas.IMAGES; ``labels`` rows carry WKB
-    ``geometry`` + user attribute columns + precomputed bounds columns
-    (label_minx..label_maxy) + ``label_idx`` + ``geom_type``.
-
-    ``tile_sink_dir`` (VERDICT r02 #1): when set, tile payload bytes are
-    written to parquet INSIDE the kernel stage (tile_kernel.
-    sink_tile_payload — idempotent atomic per-group files) and the
-    kernel emits metadata-only rows, so the fat bytes never re-cross
-    Arrow, the persist, or any downstream join; ``state.tiles`` reads
-    them back lazily from the sink. This matches the reference, which
-    writes each tile JPEG to disk inside its loop
-    (geococo/coco_processing.py:149-155). The directory must be shared
-    storage on a real cluster and stable across checkpoint resumes;
-    re-running with a DIFFERENT window/band config against the same sink
-    dir is undefined (stale per-band files would union into the
-    read-back) — use a fresh dir per config, like checkpoint_dir.
-
-    ``band_split_pairs`` (VERDICT r02 #8): kernel task granularity is
-    one source image; a single mega-raster with N matched pairs becomes
-    ONE task. When set, images whose pair count exceeds this threshold
-    are split into ceil(n_pairs / band_split_pairs) bands — pairs hash
-    into bands by tile offset, the image row replicates per band (bytes
-    shipped x n_bands for those images only) and the cogroup keys on
-    (image_id, band), so one gigapixel raster can no longer serialize
-    the kernel stage. Output is identical with or without splitting.
-
-    ``kernel_input_mode`` (VERDICT r03 #1): how image bytes reach the
-    kernel. ``"cogroup"`` (default) — both sides hash-exchange on
-    (image_id, band), which shuffles every encoded image byte once.
-    ``"broadcast"`` aggregates the THIN pairs into per-image
-    position-zipped primitive arrays (metadata + label WKB only) and
-    broadcast-joins them onto the images scan: the fat bytes never enter
-    an exchange — they flow scan -> broadcast join -> mapInPandas in one
-    pipelined stage (plan-level test pins the no-images-exchange shape).
-    ``"auto"`` picks broadcast when the materialized pair count is
-    <= ``broadcast_pairs_rows`` — by default derived from
-    ``spark.sql.autoBroadcastJoinThreshold`` and executor/driver memory
-    (:func:`auto_broadcast_pairs_rows`, ~48 B/row); pass an int to pin
-    it. ``"cogroup_packed"`` (round 7) cogroups like the default but
-    sends the pairs side as ONE row per (image_id, band) of
-    position-zipped primitive arrays — the stage floor is input
-    ROW-count-bound (tools/ab_kernel_floor_r7.py), and packing cuts
-    boundary rows ~2000x at the same exchange count. MEASURED SLOWER
-    locally (tools/ab_cogroup_packed_r7.py: kernel phase 1.46x at
-    p=32, 1.14x at p=8 — the collect_list(struct) packing costs more
-    than the row boundary it saves on a page-cache-local box), so it
-    is never auto-selected; it exists for fabrics where exchange rows
-    are priced differently. Output is byte-identical across all modes
-    (pinned by test).
-
-    MEASURED TRADEOFF (round 4, A/B/A at local[32]/1024 images): on a
-    single-JVM box the cogroup shuffle of the ~800 MB image bytes is
-    page-cache-cheap, while the broadcast path pays a *serial* pair-array
-    aggregation + driver broadcast build before the stage can start —
-    kernel-phase core utilization 0.63-0.65 (cogroup) vs 0.44-0.51
-    (broadcast) consistently across three alternations in one window, so
-    cogroup is the default here. On a network-attached cluster the same
-    images-side exchange writes+reads the full input through the
-    shuffle fabric once; broadcast mode exists precisely to delete that
-    byte-move when the pair metadata fits a broadcast.
-
-    ``kernel_schedule`` (round 7 stage-scheduling probe): how the
-    cogroup kernel stage is scheduled. ``"fused"`` (default) — one
-    action, shuffle and burn pipelined per task, maximum overlap.
-    ``"preshuffle"`` — both cogroup sides are hash-repartitioned on
-    (image_id, band) and persisted FIRST (two shuffle-only jobs), then
-    the burn stage reads the cached pre-partitioned blocks with no
-    exchange (the cached plan's outputPartitioning satisfies the
-    cogroup's distribution), so the DRAM-bound burn never co-runs with
-    shuffle traffic. ``"waves:<k>"`` — images hash into k disjoint
-    waves; the kernel runs as k sequential smaller jobs (each full
-    parallelism over 1/k of the groups), reducing concurrency
-    diversity. Output is byte-identical across schedules (pinned by
-    test); only the ``"cogroup"`` input mode supports non-fused
-    schedules. Measured in tools/ab_kernel_schedule_r7.py — see
-    BENCH/BASELINE.md for the verdict before using either.
+    Yields a :class:`_Prologue` whose ``labels`` stay pinned (when small
+    enough to broadcast) until the ``with`` block exits, raising or not.
 
     ``checkpoint_exact_digest`` (ADVICE r02): by default the checkpoint
     fingerprint trusts the upstream ``phash`` column to track pixel
     content — phash collides on e.g. uniform rasters, so changed bytes
-    with unchanged metadata would resume stale kernel output. Setting
-    this True adds an exact ``xxhash64(bytes)`` digest to the
-    fingerprint, at the cost of scanning every image byte in the
-    prologue (doubles input IO at 100 TB — hence opt-in; pipelines whose
-    upstream maintains phash correctly don't pay it).
+    with unchanged metadata would resume stale kernel output. True adds
+    an exact ``xxhash64(bytes)`` digest to the fingerprint, at the cost
+    of scanning every image byte here (doubles input IO at 100 TB —
+    hence opt-in).
     """
-    # optional phase profiling: wall time between the pipeline's action
-    # points (each phase = the Spark job(s) that ran since the last mark)
-    import time as _time
-
-    _t = [_time.perf_counter()]
-
-    def _mark(phase: str) -> None:
-        if timings is not None:
-            now = _time.perf_counter()
-            timings[phase] = round(now - _t[0], 3)
-            _t[0] = now
-
-    def _submark(phase: str) -> None:
-        # partial reading inside a phase (does NOT reset the clock, so
-        # the enclosing phase keeps its historical span)
-        if timings is not None:
-            timings[phase] = round(_time.perf_counter() - _t[0], 3)
-
     # ① F4 type coercion (no job)
     labels, present_id = _coerce_labels(labels, id_attribute, name_attribute, super_attribute)
 
@@ -402,13 +270,11 @@ def append_dataset(
 
     # ⑤-⑨ the images-metadata AGGREGATE feeds the CRS guard (F5), schema
     # estimate res (T4), extent-overlap guard (A3) and the checkpoint
-    # digest. Nothing per-image reaches the driver — at 10^12 rasters the
-    # old collect() was the scale-killer flagged in VERDICT r01 #3.
-    # PROLOGUE FUSION (VERDICT r03 #6): the labels aggregate broadcasts
-    # as a 1-row dimension into the images aggregate (its extents drive
-    # the any_overlap test), so the whole prologue is ONE action / ONE
-    # job instead of two sequential driver round-trips (~1.5 s serial at
-    # 1024 images; label columns ride through as constant F.min passthroughs).
+    # digest. Nothing per-image reaches the driver (VERDICT r01 #3).
+    # The labels aggregate broadcasts as a 1-row dimension into the
+    # images aggregate (its extents drive the any_overlap test), so the
+    # whole prologue is ONE action / ONE job (VERDICT r03 #6); label
+    # columns ride through as constant F.min passthroughs.
     lab_1row = F.broadcast(
         lab_agg_df.select([F.col(c).alias(f"l_{c}") for c in lab_agg_df.columns])
     )
@@ -460,14 +326,13 @@ def append_dataset(
     _arrow_saved = spark.conf.get(_arrow_key, None)
     spark.conf.set(_arrow_key, "10000")
     try:
-        fused_row = fused_df.first()
+        fused = fused_df.first().asDict()
     finally:
         if _arrow_saved is None:
             spark.conf.unset(_arrow_key)
         else:
             spark.conf.set(_arrow_key, _arrow_saved)
-    _mark("prologue_agg")
-    fused = fused_row.asDict()
+    clock.mark("prologue_agg")
     img_agg = {k: v for k, v in fused.items() if not k.startswith("l_")}
     agg = {k[2:]: v for k, v in fused.items() if k.startswith("l_")}
     if int(img_agg["n_images"]) == 0:
@@ -483,17 +348,13 @@ def append_dataset(
     if int(agg["n_crs"] or 0) > 1:
         raise ValueError("labels table carries more than one CRS, exiting..")
     n_labels = int(agg["n"])
-    vminx, vminy, vmaxx, vmaxy = (float(agg[k]) for k in ("minx", "miny", "maxx", "maxy"))
+    n_images = int(img_agg["n_images"])
 
     # ② category maintenance (J3/A5/A6/W4)
     state.categories = cat_ops.add_categories(
-        state.categories,
-        labels,
-        id_col=id_attribute,
-        name_col=name_attribute,
-        super_col=super_attribute,
+        state.categories, labels,
+        id_col=id_attribute, name_col=name_attribute, super_col=super_attribute,
     )
-
     # ③ J2 — canonical (id, name, supercategory) onto labels. The
     # reference's no-match ValueError cannot fire here: ② just inserted
     # every incoming uid into the dimension, so the inner join is total
@@ -501,36 +362,11 @@ def append_dataset(
     labels = cat_ops.update_labels(
         labels, state.categories, id_col=id_attribute, name_col=name_attribute
     )
-    _labels_pinned = None
-    _labmat = os.environ.get("GEOCOCO_LABELS_MATERIALIZE", "persist")
-    if n_labels <= broadcast_rows and _labmat == "persist":
-        # lazy pin: no eager job here — the first consumer (the pairs
-        # join's broadcast build) populates the cache as part of its own
-        # job, and the kernel's geom attach reads it back (A/B'd round 8:
-        # persist 4.4s vs eager localCheckpoint 4.6s vs neither 5.2s
-        # warm at the 128-image bench). Released before return — by then
-        # the id actions have materialized kout, so nothing re-reads it
-        # (an evicted-kout recompute would just rebuild it).
-        labels = _labels_pinned = labels.persist(StorageLevel.MEMORY_AND_DISK)
-    elif n_labels <= broadcast_rows and _labmat != "0":
-        # round 8: the enriched-labels plan (category window + dimension
-        # join) otherwise re-executes its multi-job chain inside EVERY
-        # consumer's broadcast build (pairs join, kernel geom attach) —
-        # at bench scale that was ~2 serial mini-job chains of pure
-        # scheduler latency. Materialize once; gated on the same
-        # broadcast threshold that already declares the label side
-        # "small", so a beyond-broadcast label table never pays an extra
-        # full write.
-        labels = labels.localCheckpoint()
 
-    # literal-valued projections for the per-image parent window below
-    _col0, _col1, _row0, _row1 = _pixel_window_exprs(
-        F.lit(vminx), F.lit(vminy), F.lit(vmaxx), F.lit(vmaxy)
-    )
-    if int(img_agg["n_distinct_ids"]) != int(img_agg["n_images"]):
+    if int(img_agg["n_distinct_ids"]) != n_images:
         raise ValueError(
             "images table carries duplicate image_id values "
-            f"({int(img_agg['n_images']) - int(img_agg['n_distinct_ids'])} dupes) — "
+            f"({n_images - int(img_agg['n_distinct_ids'])} dupes) — "
             "image_id is the table key"
         )
     if agg["crs"] is not None and (
@@ -546,19 +382,69 @@ def append_dataset(
 
     # J4/X3 — distributed source registration: (file_name -> source_id)
     # mapping DataFrame; only O(1) scalars hit the driver (VERDICT r01 #3)
-    src_df = F.broadcast(
+    sources = F.broadcast(
         state.register_sources_df(
             images.select(F.col("image_id").alias("file_name")),
             date_captured,
-            incoming_count=int(img_agg["n_images"]),
+            incoming_count=n_images,
         ).select(F.col("file_name").alias("image_key"), F.col("id").alias("source_id"))
     )
     state.verify_used_dir(images_dir)
-    _mark("sources")
+    clock.mark("sources")
 
-    # A3 — per-image parent window = raster window ∩ label-extent window
-    # (pixel-space from_bounds, utils.py:55-58, same sign-agnostic
-    # projections as the overlap guard above)
+    fingerprint = "|".join(
+        str(x)
+        for x in (
+            n_labels, n_images, img_agg["min_id"], img_agg["max_id"],
+            # content digests: same row counts with different label
+            # geometry / image pixels must MISS the checkpoint (ADVICE r01)
+            int(agg["label_digest"] or 0),
+            int(img_agg["img_digest"] or 0),
+            int(img_agg["bytes_digest"] or 0),
+            schema.width_window, schema.height_window,
+            schema.width_overlap, schema.height_overlap,
+            quantile, images_dir, out_fmt,
+            # attribute mapping changes category ids in kernel output
+            id_attribute, name_attribute, super_attribute,
+            # sink mode changes the kernel_out rows (bytes nulled) AND the
+            # sink dir identity: a resumed checkpoint pointing at a
+            # different sink must re-run the kernel (ADVICE r03)
+            tile_sink_dir,
+            # kernel-out schema version: bump on KERNEL_OUT changes so
+            # older checkpoints MISS instead of failing column resolution
+            "kv2",
+        )
+    )
+    # lazy pin, no job here: the pairs join's broadcast build fills it
+    # as part of its own job and the kernel's geom attach reads it back,
+    # so the category chain runs once. Gated on the broadcast threshold
+    # that already declares the label side "small".
+    pinned = n_labels <= broadcast_rows
+    if pinned:
+        labels = labels.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield _Prologue(
+            labels=labels,
+            n_labels=n_labels,
+            label_extent=tuple(float(agg[k]) for k in ("minx", "miny", "maxx", "maxy")),
+            schema=schema,
+            cell_size=(
+                cell_size if cell_size is not None else float(schema.width_window * res[0])
+            ),
+            sources=sources,
+            fingerprint=fingerprint,
+        )
+    finally:
+        if pinned:
+            labels.unpersist(False)
+
+
+def _tiles(images: DataFrame, pro: _Prologue) -> DataFrame:
+    """A3 + ⑩-⑪: per-image parent window (raster window ∩ label-extent
+    window, pixel-space from_bounds, utils.py:55-58, the same
+    sign-agnostic projections as the overlap guard) exploded into the
+    tile grid (T1-T3) with world-space tile bounds."""
+    _col0, _col1, _row0, _row1 = _pixel_window_exprs(*(F.lit(v) for v in pro.label_extent))
     with_parent = (
         images.withColumn("_p0", F.greatest(F.lit(0.0), _col0))
         .withColumn("_q0", F.greatest(F.lit(0.0), _row0))
@@ -571,10 +457,9 @@ def append_dataset(
         .drop("_p0", "_q0", "_p1", "_q1")
     )
     overlapping = with_parent.filter((F.col("parent_width") > 0) & (F.col("parent_height") > 0))
-
-    # ⑩-⑫ tile grid (T1-T3) + spatial join (J1); transform flattened to
-    # plain columns before the explodes (struct extraction after repeated
-    # generators hits a Catalyst resolution bug in Spark 4.1)
+    # transform flattened to plain columns before the explodes (struct
+    # extraction after repeated generators hits a Catalyst resolution
+    # bug in Spark 4.1)
     tiles = grid.explode_window_grid(
         overlapping.select(
             "image_id",
@@ -585,187 +470,138 @@ def append_dataset(
             "parent_col_off", "parent_row_off",
             "parent_width", "parent_height",
         ),
-        schema,
+        pro.schema,
     )
-    tiles = grid.with_window_bounds(tiles, flat=True).select(
+    return grid.with_window_bounds(tiles, flat=True).select(
         F.col("image_id").alias("tile_image_id"),
-        F.concat_ws(
-            "_",
-            F.col("image_id"),
-            F.col("col_off"),
-            F.col("row_off"),
-            F.col("width"),
-            F.col("height"),
-        ).alias("tile_id"),
+        F.concat_ws("_", "image_id", "col_off", "row_off", "width", "height").alias("tile_id"),
         "col_off", "row_off", "width", "height",
         "tile_minx", "tile_miny", "tile_maxx", "tile_maxy",
     )
-    if cell_size is None:
-        cell_size = float(schema.width_window * res[0])
-    # ⑬-㉑ fused kernel over cogrouped (image, its pairs). The THIN pair
-    # table (no WKB — output_geometry=False keeps geometry out of the
-    # join output, its dedupe shuffle and the materialized stage) is
-    # truncated/materialized ONCE: the old shape unioned two branches of
-    # the same join subtree, executing the join (and its exact-predicate
-    # UDF) twice per run. Label WKB re-attaches afterwards from the
-    # labels table, one "geom" row per (image, label) — a label matching
-    # k tiles never ships k WKB copies through shuffle/Arrow. With a
-    # checkpoint_dir the truncation doubles as a resumable stage with a
-    # per-partition lineage manifest (north_rule).
-    def _pairs_thin():
-        return spatial_join.spatial_join(
-            tiles,
-            labels.select(
-                "label_idx", "geometry", "geom_type", "id",
-                "label_minx", "label_miny", "label_maxx", "label_maxy",
-            ),
-            cell_size=cell_size,
-            label_id="label_idx",
-            broadcast_rows=broadcast_rows,
-            label_count=n_labels,
-            output_geometry=False,
-        ).select(
+
+
+def _pairs_probe(join, clock: _Clock) -> None:
+    """Diagnostics for the traced benchmark (``SPARK_GRAFT_PAIRS_PROBE=1``
+    together with ``timings=``): time and count the join's sub-plans on
+    the append's real tiles and labels — bbox candidates vs exact
+    predicate vs dedupe, one job each. Their time is kept out of the
+    enclosing phase."""
+    if clock.timings is None or os.environ.get("SPARK_GRAFT_PAIRS_PROBE") != "1":
+        return
+    for name, exact, dedupe in (
+        ("cand", False, False),
+        ("bbox_dedup", False, True),
+        ("exact", True, False),
+        ("dedup", True, True),
+    ):
+        t0 = time.perf_counter()
+        n = join(exact=exact, dedupe=dedupe).count()
+        clock.timings[f"probe_{name}"] = round(time.perf_counter() - t0, 3)
+        clock.timings[f"probe_{name}_rows"] = n
+    clock.restart()
+
+
+def _pairs(
+    images: DataFrame, pro: _Prologue, ckpt: StageCheckpoint | None, broadcast_rows: int,
+    metrics: EngineMetrics | None, clock: _Clock,
+) -> tuple[DataFrame, DataFrame]:
+    """Tile grid + spatial join (J1) -> (tiles, THIN pair table).
+
+    The pair table carries no WKB (``output_geometry=False`` keeps
+    geometry out of the join output and the materialized stage); label
+    WKB re-attaches in the kernel stage, one row per (image, label). It
+    is materialized ONCE — a resumable checkpoint stage with a
+    per-partition lineage manifest when ``ckpt`` is set, else a
+    localCheckpoint — because the kernel stage reads it twice (geom rows
+    + pair rows of the cogroup union)."""
+    tiles = _tiles(images, pro)
+    join = functools.partial(
+        spatial_join.spatial_join,
+        tiles,
+        pro.labels.select(
+            "label_idx", "geometry", "geom_type", "id",
+            "label_minx", "label_miny", "label_maxx", "label_maxy",
+        ),
+        cell_size=pro.cell_size,
+        label_id="label_idx",
+        broadcast_rows=broadcast_rows,
+        label_count=pro.n_labels,
+        output_geometry=False,
+    )
+    _pairs_probe(join, clock)
+
+    def thin():
+        return join().select(
             F.col("tile_image_id").alias("image_id"),
             "col_off", "row_off", "width", "height",
             "label_idx", "id",
         )
 
-    def _with_geom_rows(base):
-        # base carries a "band" column; each band's kernel group gets its
-        # own geom rows (a label referenced by pairs in k bands ships its
-        # WKB k times — only for band-split mega-rasters, by construction)
-        geom_rows = (
-            base.select("image_id", "band", "label_idx")
-            .dropDuplicates(["image_id", "band", "label_idx"])
-            .join(labels.select("label_idx", "geometry"), "label_idx")
-            .select(
-                "image_id", "band",
-                F.lit(None).cast("long").alias("col_off"),
-                F.lit(None).cast("long").alias("row_off"),
-                F.lit(None).cast("long").alias("width"),
-                F.lit(None).cast("long").alias("height"),
-                "label_idx",
-                "geometry",
-                F.lit(None).cast("int").alias("id"),
-            )
-        )
-        pair_rows = base.select(
-            "image_id", "band", "col_off", "row_off", "width", "height",
-            "label_idx", F.lit(None).cast("binary").alias("geometry"), "id",
-        )
-        return geom_rows.unionByName(pair_rows)
-
-    if timings is not None and os.environ.get("SPARK_GRAFT_PAIRS_PROBE") == "1":
-        # diagnostics only (inflates total): time the join's sub-plans
-        # with the REAL tiles/labels to attribute the pairs phase —
-        # candidate generation vs exact predicate vs dedupe shuffle
-        def _probe(name: str, exact: bool, dedupe: bool) -> None:
-            t0 = _time.perf_counter()
-            df = spatial_join.spatial_join(
-                tiles,
-                labels.select(
-                    "label_idx", "geometry", "geom_type", "id",
-                    "label_minx", "label_miny", "label_maxx", "label_maxy",
-                ),
-                cell_size=cell_size,
-                label_id="label_idx",
-                broadcast_rows=broadcast_rows,
-                label_count=n_labels,
-                output_geometry=False,
-                exact=exact,
-                dedupe=dedupe,
-            )
-            if os.environ.get("SPARK_GRAFT_PAIRS_PROBE_EXPLAIN") == "1":
-                import sys as _sys
-
-                print(f"==== probe {name} plan ====", file=_sys.stderr)
-                df.explain("formatted")
-            n = df.count()
-            timings[f"probe_{name}"] = round(_time.perf_counter() - t0, 3)
-            timings[f"probe_{name}_rows"] = n
-
-        _probe("cand", exact=False, dedupe=False)
-        _probe("bbox_dedup", exact=False, dedupe=True)
-        _probe("exact", exact=True, dedupe=False)
-        _probe("dedup", exact=True, dedupe=True)
-        _t[0] = _time.perf_counter()  # exclude probe time from the phase
-
-    ckpt = StageCheckpoint(spark, checkpoint_dir) if checkpoint_dir is not None else None
     if ckpt is not None:
-        fingerprint = "|".join(
-            str(x)
-            for x in (
-                n_labels,
-                int(img_agg["n_images"]),
-                img_agg["min_id"],
-                img_agg["max_id"],
-                # content digests: same row counts with different label
-                # geometry / image pixels must MISS the checkpoint
-                # (ADVICE r01 — stale-resume produced wrong COCO output)
-                int(agg["label_digest"] or 0),
-                int(img_agg["img_digest"] or 0),
-                int(img_agg["bytes_digest"] or 0),
-                schema.width_window, schema.height_window,
-                schema.width_overlap, schema.height_overlap,
-                quantile, images_dir, out_fmt,
-                # attribute mapping changes category ids in kernel output
-                id_attribute, name_attribute, super_attribute,
-                # sink mode changes the kernel_out rows (bytes nulled) AND
-                # the sink dir identity: a resumed checkpoint pointing at a
-                # different sink must re-run the kernel, not silently read
-                # an empty/foreign sink (ADVICE r03)
-                tile_sink_dir,
-                # kernel-out schema version: bump on KERNEL_OUT changes so
-                # pre-change checkpoints MISS instead of failing column
-                # resolution on resume (r7: trimmed Arrow payload schema)
-                "kv2",
-            )
-        )
-        pairs_thin = ckpt.run("pairs", fingerprint, _pairs_thin, metrics)
+        pairs = ckpt.run("pairs", pro.fingerprint, thin, metrics)
     else:
-        # the pair table is consumed twice downstream (geom rows + pair
-        # rows of the cogroup union). r3-r7 truncated with an EAGER
-        # localCheckpoint; round 8 A/B'd a lazy persist (the two cache
-        # scans sit in different stages of the kernel job, so the join
-        # still computes once) — knob kept for measurement
-        if os.environ.get("GEOCOCO_PAIRS_MATERIALIZE", "localCheckpoint") == "persist":
-            pairs_thin = _pairs_thin().persist(StorageLevel.MEMORY_AND_DISK)
-        else:
-            pairs_thin = _pairs_thin().localCheckpoint()
-    _submark("pairs_spatial")  # grid + join + materialization (sub-reading)
-    img_cg, pairs_banded = banded_cogroup_inputs(images, pairs_thin, band_split_pairs)
-    if kernel_input_mode not in ("auto", "broadcast", "cogroup", "cogroup_packed"):
-        raise ValueError(f"unknown kernel_input_mode: {kernel_input_mode!r}")
-    if kernel_schedule != "fused" and not (
-        kernel_schedule == "preshuffle"
-        or (kernel_schedule.startswith("waves:") and kernel_schedule[6:].isdigit()
-            and int(kernel_schedule[6:]) >= 2)
-    ):
-        raise ValueError(f"unknown kernel_schedule: {kernel_schedule!r}")
-    mode = kernel_input_mode
-    if mode == "auto":
-        # threshold derived from cluster shape unless the caller pinned
-        # one (VERDICT r04 #6); pairs_thin is materialized (checkpoint
-        # parquet / localCheckpoint) so this count is a cheap
-        # metadata-ish scan, not a recompute
-        thr = (
-            broadcast_pairs_rows
-            if broadcast_pairs_rows is not None
-            else auto_broadcast_pairs_rows(spark)
-        )
-        mode = "broadcast" if pairs_thin.count() <= thr else "cogroup"
-    if kernel_schedule != "fused" and mode != "cogroup":
-        raise ValueError(
-            f"kernel_schedule={kernel_schedule!r} requires the 'cogroup' input "
-            f"mode (resolved mode: {mode!r})"
-        )
-    _mark("pairs_join")
+        pairs = thin().localCheckpoint()
+    clock.mark("pairs_join")
+    return tiles, pairs
 
+
+def _with_geom_rows(pairs_banded: DataFrame, labels: DataFrame) -> DataFrame:
+    """The kernel's pairs side: thin pair rows plus one "geom" row per
+    (image, band, label) carrying the label WKB — a label matching k
+    tiles never ships k WKB copies through shuffle/Arrow (a label whose
+    pairs land in k bands ships it k times, only for band-split
+    mega-rasters, by construction)."""
+    geom_rows = (
+        pairs_banded.select("image_id", "band", "label_idx")
+        .dropDuplicates(["image_id", "band", "label_idx"])
+        .join(labels.select("label_idx", "geometry"), "label_idx")
+        .select(
+            "image_id", "band",
+            *[F.lit(None).cast("long").alias(c) for c in ("col_off", "row_off", "width", "height")],
+            "label_idx", "geometry", F.lit(None).cast("int").alias("id"),
+        )
+    )
+    pair_rows = pairs_banded.select(
+        "image_id", "band", "col_off", "row_off", "width", "height",
+        "label_idx", F.lit(None).cast("binary").alias("geometry"), "id",
+    )
+    return geom_rows.unionByName(pair_rows)
+
+
+def _check_sink_on_resume(spark: SparkSession, ckpt: StageCheckpoint, tile_sink_dir: str) -> None:
+    """A kernel_out resume hit in sink mode does not re-run the kernel,
+    so the tile payload must already sit in the sink. A cleaned (fully
+    OR partially) sink would read back too few payload rows and the
+    final tiles join would silently drop tiles (ADVICE r03/r04). The
+    fingerprint covers the sink dir's identity, not its contents, so
+    compare the sink's row count with the checkpointed tile rows — both
+    parquet-metadata-cheap counts on this rare path."""
+    if int((ckpt.manifest("kernel_out") or {}).get("rows", 0)) == 0:
+        return
+    sink_rows = spark.read.schema(_SINK_SCHEMA).parquet(os.path.join(tile_sink_dir, "data")).count()
+    ckpt_tile_rows = ckpt.read("kernel_out").filter(F.col("is_tile")).count()
+    if sink_rows != ckpt_tile_rows:
+        raise ValueError(
+            "checkpoint resume: kernel_out is COMPLETE for this fingerprint but "
+            f"tile_sink_dir ({tile_sink_dir}) holds {sink_rows} payload rows vs "
+            f"{ckpt_tile_rows} checkpointed tile rows — the sink was cleaned (fully or "
+            "partially) or never written; delete the kernel_out checkpoint or restore the sink"
+        )
+
+
+def _kernel(
+    spark: SparkSession, images: DataFrame, pro: _Prologue, pairs: DataFrame,
+    ckpt: StageCheckpoint | None, band_split_pairs: int | None, out_fmt: str,
+    tile_sink_dir: str | None, metrics: EngineMetrics | None, clock: _Clock,
+) -> DataFrame:
+    """⑬-㉑ the fused tile kernel over cogrouped (image, its pairs),
+    keyed on (image_id, band) — see :func:`banded_cogroup_inputs`.
+
+    Its output is checkpointed when ``ckpt`` is set, else persisted
+    (lazily: the id stage's first action fills it), so the downstream
+    id and table actions never re-run the kernel."""
+    img_cg, pairs_banded = banded_cogroup_inputs(images, pairs, band_split_pairs)
     acc = metrics.acc if metrics is not None else None
-    # intermediates pinned by a non-fused kernel schedule, released once
-    # kout itself is durably materialized (ADVICE r07: they were held for
-    # the session lifetime and accumulated across append calls)
-    _sched_persists: list[DataFrame] = []
     # per-worker decode-cache budget (ADVICE r04): workers default from
     # the GEOCOCO_DECODE_CACHE_MB env var (128 MB fallback); this conf
     # overrides per job, riding the kernel closure to every worker
@@ -773,209 +609,41 @@ def append_dataset(
     cache_max_bytes = int(_cache_mb) * 1024 * 1024 if _cache_mb is not None else None
     if tile_sink_dir is not None:
         # pre-create the data dir so an all-empty sink is still readable
-        import os as _os
-
-        _os.makedirs(_os.path.join(tile_sink_dir, "data"), exist_ok=True)
-    def _packed_pair_sides():
-        # PRIMITIVE parallel arrays (position-zipped), not arrays of
-        # structs: Arrow hands each one to Python as a single numpy
-        # vector, where an array<struct> materializes one Python dict
-        # per pair — measured as the dominant broadcast-path cost at 2M
-        # pairs before this layout. Shared by the broadcast path and
-        # the packed-cogroup path (round 7).
-        _ps = F.collect_list(
-            F.struct("col_off", "row_off", "width", "height", "label_idx", "id")
-        ).alias("_ps")
-        pair_structs = (
-            pairs_banded.groupBy("image_id", "band")
-            .agg(_ps)
-            .select(
-                "image_id", "band",
-                F.col("_ps.col_off").alias("p_col_off"),
-                F.col("_ps.row_off").alias("p_row_off"),
-                F.col("_ps.width").alias("p_width"),
-                F.col("_ps.height").alias("p_height"),
-                F.col("_ps.label_idx").alias("p_label_idx"),
-                F.col("_ps.id").alias("p_id"),
-            )
+        os.makedirs(os.path.join(tile_sink_dir, "data"), exist_ok=True)
+    kout = (
+        img_cg.groupBy("image_id", "band")
+        .cogroup(_with_geom_rows(pairs_banded, pro.labels).groupBy("image_id", "band"))
+        .applyInPandas(
+            cogroup_kernel(out_fmt, acc, tile_sink_dir, cache_max_bytes), schemas.KERNEL_OUT
         )
-        geom_structs = (
-            pairs_banded.select("image_id", "band", "label_idx")
-            .dropDuplicates(["image_id", "band", "label_idx"])
-            .join(labels.select("label_idx", "geometry"), "label_idx")
-            .groupBy("image_id", "band")
-            .agg(F.collect_list(F.struct("label_idx", "geometry")).alias("_gs"))
-            .select(
-                "image_id", "band",
-                F.col("_gs.label_idx").alias("g_label_idx"),
-                F.col("_gs.geometry").alias("g_geometry"),
-            )
-        )
-        return pair_structs, geom_structs
-
-    if mode == "broadcast":
-        from geococo_spark.kernels.tile_kernel import map_kernel
-
-        pair_structs, geom_structs = _packed_pair_sides()
-        kout = img_cg.join(
-            F.broadcast(pair_structs.join(geom_structs, ["image_id", "band"])),
-            ["image_id", "band"],
-        ).mapInPandas(
-            map_kernel(out_fmt, acc, tile_sink_dir, cache_max_bytes), schemas.KERNEL_OUT
-        )
-    elif mode == "cogroup_packed":
-        from geococo_spark.kernels.tile_kernel import cogroup_packed_kernel
-
-        # same exchange count as "cogroup" (the packing groupBy hashes
-        # on the cogroup key), but the per-pair rows never cross the
-        # exchange/Arrow boundary individually — one packed row per
-        # group (tools/ab_kernel_floor_r7.py: the stage floor is input
-        # ROW-count-bound, not byte-bound)
-        pair_structs, geom_structs = _packed_pair_sides()
-        pairs_packed = pair_structs.join(geom_structs, ["image_id", "band"])
-        kout = (
-            img_cg.groupBy("image_id", "band")
-            .cogroup(pairs_packed.groupBy("image_id", "band"))
-            .applyInPandas(
-                cogroup_packed_kernel(out_fmt, acc, tile_sink_dir, cache_max_bytes),
-                schemas.KERNEL_OUT,
-            )
-        )
-    else:
-        pairs_small = _with_geom_rows(pairs_banded)
-        _kernel_fn = cogroup_kernel(out_fmt, acc, tile_sink_dir, cache_max_bytes)
-
-        def _cogroup(img_side, pairs_side):
-            return (
-                img_side.groupBy("image_id", "band")
-                .cogroup(pairs_side.groupBy("image_id", "band"))
-                .applyInPandas(_kernel_fn, schemas.KERNEL_OUT)
-            )
-
-        if kernel_schedule != "fused" and ckpt is not None and ckpt.is_complete(
-            "kernel_out", fingerprint
-        ):
-            # ADVICE r07: preshuffle/waves run eager jobs (two shuffle
-            # materializations / per-wave kernel counts) BEFORE ckpt.run
-            # can notice the resume hit — a resumed pipeline would re-run
-            # the whole kernel (and, in sink mode, append duplicate
-            # payload rows). On a hit, fall back to the lazy fused plan:
-            # ckpt.run reads the checkpoint and the plan never executes.
-            kernel_schedule = "fused"
-        if kernel_schedule == "preshuffle":
-            # shuffle first (two shuffle-only jobs), burn second from the
-            # cached pre-partitioned blocks — no exchange inside the burn
-            # stage, so the DRAM-bound kernel never co-runs with shuffle.
-            # The no-split band column is lit(0); constant folding would
-            # turn the cache's partitioning into hashpartitioning(
-            # image_id, 0), which cannot satisfy the cogroup's
-            # ATTRIBUTE-based distribution and re-inserts an
-            # ENSURE_REQUIREMENTS exchange — rebuild band non-foldably
-            # (pmod(hash, 1) == 0 always, but no folding rule knows)
-            npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            _nz = F.pmod(F.xxhash64("image_id"), F.lit(1)).cast("int")
-            img_side = (
-                img_cg.withColumn("band", F.col("band") + _nz)
-                .repartition(npart, "image_id", "band")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            pairs_side = (
-                pairs_small.withColumn("band", F.col("band") + _nz)
-                .repartition(npart, "image_id", "band")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            _ps0 = _time.perf_counter()
-            img_side.count()
-            pairs_side.count()
-            if timings is not None:
-                timings["kernel_preshuffle"] = round(_time.perf_counter() - _ps0, 3)
-            _sched_persists += [img_side, pairs_side]
-            kout = _cogroup(img_side, pairs_side)
-        elif kernel_schedule.startswith("waves:"):
-            # k sequential smaller kernel jobs over disjoint image waves
-            n_waves = int(kernel_schedule[6:])
-            wave_parts = []
-            for w in range(n_waves):
-                wcond = F.pmod(F.xxhash64("image_id"), F.lit(n_waves)) == w
-                kw = _cogroup(
-                    img_cg.filter(wcond), pairs_small.filter(wcond)
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                kw.count()  # sequential action: wave w completes before w+1
-                wave_parts.append(kw)
-            kout = wave_parts[0]
-            for p in wave_parts[1:]:
-                kout = kout.unionByName(p)
-            _sched_persists += wave_parts
-        else:
-            kout = _cogroup(img_cg, pairs_small)
-    if ckpt is not None:
-        if tile_sink_dir is not None and ckpt.is_complete("kernel_out", fingerprint):
-            # resume hit in sink mode: the kernel will NOT re-run, so the
-            # tile payload must already sit in the sink. A cleaned (fully
-            # OR partially) sink dir would otherwise read back too few
-            # payload rows and the final tiles join would silently drop
-            # the affected tiles (ADVICE r03/r04). Same-dir cleaning is
-            # the one case the fingerprint (which includes tile_sink_dir)
-            # cannot catch, so compare the sink's ROW COUNT against the
-            # checkpointed kernel_out's tile-row count — both are parquet
-            # metadata-cheap counts that run only on this rare resume path.
-            import os as _os
-
-            m = ckpt.manifest("kernel_out")
-            if int((m or {}).get("rows", 0)) > 0:
-                sink_rows = (
-                    spark.read.schema(
-                        "image_key string, tile_name string, "
-                        "tile_bytes binary, caption string"
-                    )
-                    .parquet(_os.path.join(tile_sink_dir, "data"))
-                    .count()
-                )
-                ckpt_tile_rows = (
-                    ckpt.read("kernel_out").filter(F.col("is_tile")).count()
-                )
-                if sink_rows != ckpt_tile_rows:
-                    raise ValueError(
-                        "checkpoint resume: kernel_out is COMPLETE for this "
-                        f"fingerprint but tile_sink_dir ({tile_sink_dir}) holds "
-                        f"{sink_rows} payload rows vs {ckpt_tile_rows} checkpointed "
-                        "tile rows — the sink was cleaned (fully or partially) or "
-                        "never written; delete the kernel_out checkpoint or "
-                        "restore the sink"
-                    )
-        kout = ckpt.run("kernel_out", fingerprint, lambda: kout, metrics)
-    else:
-        # several downstream actions (id counts, images, annotations) must
-        # not re-run the expensive kernel — pin its output
+    )
+    if ckpt is None:
         kout = kout.persist(StorageLevel.MEMORY_AND_DISK)
-    if _sched_persists:
-        # ADVICE r07: release the schedule's pinned intermediates once
-        # kout no longer depends on them — ckpt.run just wrote kout
-        # durably; on the in-memory path, materialize kout's own cache
-        # first (one count of already-computed wave/preshuffle blocks)
-        if ckpt is None:
-            kout.count()
-        for _df in _sched_persists:
-            _df.unpersist()
-    if timings is not None:
+    else:
+        if tile_sink_dir is not None and ckpt.is_complete("kernel_out", pro.fingerprint):
+            _check_sink_on_resume(spark, ckpt, tile_sink_dir)
+        kout = ckpt.run("kernel_out", pro.fingerprint, lambda: kout, metrics)
+    if clock.timings is not None:
         kout.count()  # profiling only: force the kernel into its own phase
-        _mark("kernel")
+        clock.mark("kernel")
+    return kout
 
+
+def _ids(
+    state: CocoState, kout: DataFrame, sources: DataFrame, images_dir: str,
+    date_captured: datetime | None, clock: _Clock,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """⑰/W1 + ㉒/W2 — dense image and annotation ids from ONE exchange
+    over METADATA-ONLY rows (ids.assign_pipeline_ids, VERDICT r03 #2).
+    Returns (new COCO images, new COCO annotations, kernel tile rows
+    with their payload)."""
     # X2 — the reference tile filename, rebuilt JVM-side from the window
-    # columns (VERDICT r06 #1: the kernel no longer ships 1M-row string
-    # columns over Arrow for values a concat of four ints reproduces)
+    # columns (VERDICT r06 #1: no per-row strings over Arrow)
     kout = kout.withColumn(
         "tile_name", F.concat_ws("_", "col_off", "row_off", "width", "height")
-    )
-    kout = kout.join(src_df, "image_key")
-
-    # ⑰/W1 + ㉒/W2 — both id streams fused into ONE range exchange over
-    # METADATA-ONLY rows (ids.assign_pipeline_ids, VERDICT r03 #2: the
-    # separate annotation pass + its broadcast image-id join were a flat
-    # ~3.5 s). Tile payload bytes never enter a sort/exchange — they are
-    # hash-joined back at the end (the single biggest shuffle-volume
-    # lever at scale).
-    tile_rows = kout.filter(F.col("is_tile"))
+    ).join(sources, "image_key")
+    # tile payload bytes never enter the id sort/exchange — they are
+    # hash-joined back at publish time
     with_ids = ids.assign_pipeline_ids(
         kout.drop("tile_bytes", "caption"),
         image_offset=state.next_image_id() - 1,
@@ -983,29 +651,21 @@ def append_dataset(
         # source ids are dense in [1, total sources] after registration
         n_sources=state._known_count("sources", state.sources),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # ^ the id'd metadata rows feed BOTH output tables; callers typically
-    # action each (images count, annotations count/write), and without
-    # the pin every action re-sorts the window over the kernel output
-    # (round 8: one full extra window pass per downstream action). Rows
-    # are metadata-only — payload bytes were dropped above.
-    coco_images_new = with_ids.filter(F.col("is_tile")).select(
+    # ^ the id'd metadata rows feed BOTH output tables; without the pin
+    # every downstream action re-sorts the window over the kernel output
+    new_images = with_ids.filter(F.col("is_tile")).select(
         F.col("coco_image_id").alias("id"),
         F.col("tile_width").alias("width"),
         F.col("tile_height").alias("height"),
         F.concat(
-            F.lit(images_dir + "/"),
-            F.col("source_id"),
-            F.lit("_"),
-            F.col("tile_name"),
-            F.lit(".jpg"),
+            F.lit(images_dir + "/"), "source_id", F.lit("_"), "tile_name", F.lit(".jpg")
         ).alias("file_name"),
         F.col("source_id").cast("long").alias("source_id"),
         F.lit(date_captured).cast("timestamp").alias("date_captured"),
         "image_key", "tile_name",
     )
-    _mark("image_ids")
-
-    coco_annotations_new = with_ids.filter(~F.col("is_tile")).select(
+    clock.mark("image_ids")
+    new_annotations = with_ids.filter(~F.col("is_tile")).select(
         F.col("ann_id").alias("id"),
         F.col("coco_image_id").alias("image_id"),
         "category_id",
@@ -1020,59 +680,118 @@ def append_dataset(
         F.array("bbox_x", "bbox_y", "bbox_w", "bbox_h").alias("bbox"),
         "iscrowd",
     )
-    _mark("annotation_ids")
+    clock.mark("annotation_ids")
+    return new_images, new_annotations, kout.filter(F.col("is_tile"))
 
-    # J5 — optional kNN fallback: labels that matched NO tile get their
-    # nearest tile assignment (north_star; no reference analog). Output
-    # lands in state.knn_assignments, not in the COCO tables — the
-    # reference emits nothing for unmatched labels, and exact parity wins.
-    if knn_fallback:
-        from geococo_spark.operators import knn as knn_ops
 
-        # pairs_thin is already materialized (checkpoint) — don't
-        # recompute the join just to list matched label ids
-        matched_ids = pairs_thin.select("label_idx").distinct()
-        unmatched = labels.select(
-            F.col("label_idx").alias("label_id"), "geometry",
-            "label_minx", "label_miny", "label_maxx", "label_maxy",
-        ).join(
-            matched_ids.withColumnRenamed("label_idx", "label_id"), "label_id", "left_anti"
-        )
-        assigned = knn_ops.knn_assign(
-            unmatched, tiles, cell_size=cell_size, k=1, rings=knn_rings, escalate=True
-        ).select("label_id", "tile_id", "knn_distance")
-        if metrics is not None:
-            n_assigned = assigned.select("label_id").distinct().count()
-            metrics.add("knn_fallbacks", n_assigned)
-            # residual labels still unassigned after ring escalation
-            metrics.add("knn_unassigned", unmatched.count() - n_assigned)
-        state.knn_assignments = assigned
+def _knn_fallback(
+    pro: _Prologue, tiles: DataFrame, pairs: DataFrame, knn_rings: int,
+    metrics: EngineMetrics | None,
+) -> DataFrame:
+    """J5 — labels that matched NO tile get their nearest tile
+    (north_star; no reference analog). The result lands in
+    ``state.knn_assignments``, not in the COCO tables — the reference
+    emits nothing for unmatched labels, and exact parity wins."""
+    from geococo_spark.operators import knn as knn_ops
 
-    # O3 — append without mutating prior rows
+    # pairs are materialized — listing matched labels does not re-join
+    matched_ids = pairs.select(F.col("label_idx").alias("label_id")).distinct()
+    unmatched = pro.labels.select(
+        F.col("label_idx").alias("label_id"), "geometry",
+        "label_minx", "label_miny", "label_maxx", "label_maxy",
+    ).join(matched_ids, "label_id", "left_anti")
+    assigned = knn_ops.knn_assign(
+        unmatched, tiles, cell_size=pro.cell_size, k=1, rings=knn_rings, escalate=True
+    ).select("label_id", "tile_id", "knn_distance")
+    if metrics is not None:
+        n_assigned = assigned.select("label_id").distinct().count()
+        metrics.add("knn_fallbacks", n_assigned)
+        # residual labels still unassigned after ring escalation
+        metrics.add("knn_unassigned", unmatched.count() - n_assigned)
+    return assigned
+
+
+def _publish(
+    spark: SparkSession, state: CocoState, new_images: DataFrame,
+    new_annotations: DataFrame, tile_rows: DataFrame, tile_sink_dir: str | None,
+) -> None:
+    """O3 — append to the state without mutating prior rows, and attach
+    the tile payload: read back lazily from the in-stage sink (the
+    explicit schema keeps an all-empty sink readable) or taken from the
+    kernel's tile rows."""
     state.images = state.images.unionByName(
-        coco_images_new.select(
-            "id", "width", "height", "file_name", "source_id", "date_captured"
-        )
+        new_images.select("id", "width", "height", "file_name", "source_id", "date_captured")
     )
-    state.annotations = state.annotations.unionByName(coco_annotations_new)
+    state.annotations = state.annotations.unionByName(new_annotations)
     # appended tables have unknown sizes until counted again
     state.cached_counts.pop("images", None)
     state.cached_counts.pop("annotations", None)
     if tile_sink_dir is not None:
-        # payload was written in-stage by the kernel (the id-assignment
-        # actions above already forced it); read it back lazily — the
-        # explicit schema keeps an all-empty sink (no matched tiles)
-        # readable
-        import os as _os
-
-        payload = spark.read.schema(
-            "image_key string, tile_name string, tile_bytes binary, caption string"
-        ).parquet(_os.path.join(tile_sink_dir, "data"))
+        payload = spark.read.schema(_SINK_SCHEMA).parquet(os.path.join(tile_sink_dir, "data"))
     else:
         payload = tile_rows.select("image_key", "tile_name", "tile_bytes", "caption")
-    state.tiles = coco_images_new.select(
-        "id", "file_name", "image_key", "tile_name"
-    ).join(payload, ["image_key", "tile_name"])
-    if _labels_pinned is not None:
-        _labels_pinned.unpersist(False)
+    state.tiles = new_images.select("id", "file_name", "image_key", "tile_name").join(
+        payload, ["image_key", "tile_name"]
+    )
+
+
+def append_dataset(
+    spark: SparkSession,
+    state: CocoState,
+    images: DataFrame,
+    labels: DataFrame,
+    images_dir: str = "images",
+    window_bounds: list[tuple[int, int]] = [(256, 256), (512, 512)],
+    quantile: float = 0.9,
+    id_attribute: str | None = "category_id",
+    name_attribute: str | None = None,
+    super_attribute: str | None = None,
+    out_fmt: str = "jpeg",
+    cell_size: float | None = None,
+    date_captured: datetime | None = None,
+    checkpoint_dir: str | None = None,
+    broadcast_rows: int = 1_000_000,
+    metrics: "EngineMetrics | None" = None,
+    knn_fallback: bool = False,
+    knn_rings: int = 2,
+    timings: dict | None = None,
+    tile_sink_dir: str | None = None,
+    band_split_pairs: int | None = None,
+    checkpoint_exact_digest: bool = False,
+) -> CocoState:
+    """Run the full annotate pipeline and return the appended state.
+
+    ``images`` rows follow schemas.IMAGES; ``labels`` rows carry WKB
+    ``geometry``, attribute columns, bounds (label_minx..label_maxy),
+    ``label_idx`` and ``geom_type``. ``checkpoint_dir`` makes the pairs
+    and kernel stages resumable. ``tile_sink_dir`` (VERDICT r02 #1)
+    writes tile payloads to parquet inside the kernel stage, like the
+    reference's in-loop writes (coco_processing.py:149-155); it must be
+    shared storage, stable across resumes, one dir per window/band
+    config. ``band_split_pairs`` (VERDICT r02 #8) splits pair-heavy
+    images over several kernel groups (:func:`banded_cogroup_inputs`),
+    output unchanged. ``timings`` receives each phase's wall seconds
+    (one extra job puts the kernel in its own phase).
+    """
+    clock = _Clock(timings)
+    ckpt = StageCheckpoint(spark, checkpoint_dir) if checkpoint_dir is not None else None
+    with _prologue(
+        spark, state, images, labels, clock,
+        images_dir=images_dir, window_bounds=window_bounds, quantile=quantile,
+        id_attribute=id_attribute, name_attribute=name_attribute,
+        super_attribute=super_attribute, out_fmt=out_fmt, cell_size=cell_size,
+        date_captured=date_captured, broadcast_rows=broadcast_rows,
+        tile_sink_dir=tile_sink_dir, checkpoint_exact_digest=checkpoint_exact_digest,
+    ) as pro:
+        tiles, pairs = _pairs(images, pro, ckpt, broadcast_rows, metrics, clock)
+        kout = _kernel(
+            spark, images, pro, pairs, ckpt, band_split_pairs, out_fmt, tile_sink_dir,
+            metrics, clock,
+        )
+        new_images, new_annotations, tile_rows = _ids(
+            state, kout, pro.sources, images_dir, date_captured, clock
+        )
+        if knn_fallback:
+            state.knn_assignments = _knn_fallback(pro, tiles, pairs, knn_rings, metrics)
+        _publish(spark, state, new_images, new_annotations, tile_rows, tile_sink_dir)
     return state

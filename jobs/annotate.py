@@ -44,15 +44,6 @@ def main(argv: list[str] | None = None) -> None:
         "multiple kernel tasks (mega-raster granularity)",
     )
     ap.add_argument(
-        "--kernel-input-mode",
-        choices=["cogroup", "broadcast", "auto"],
-        default="cogroup",
-        help="how image bytes reach the kernel: cogroup (shuffle both "
-        "sides; default, fastest on single-node/local shuffle) or "
-        "broadcast (thin pair arrays broadcast onto the images scan — "
-        "image bytes never enter an exchange; the network-cluster shape)",
-    )
-    ap.add_argument(
         "--write-bucketed-images",
         default=None,
         metavar="DIR",
@@ -109,7 +100,6 @@ def main(argv: list[str] | None = None) -> None:
         metrics=metrics,
         tile_sink_dir=args.tile_sink,
         band_split_pairs=args.band_split_pairs,
-        kernel_input_mode=args.kernel_input_mode,
     )
     from geococo_spark.sinks import write_table
 

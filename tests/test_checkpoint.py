@@ -81,8 +81,13 @@ class TestPipelineResume:
         """ADVICE r03: a kernel_out resume hit in sink mode with a
         cleaned tile_sink_dir silently produced zero tiles (the payload
         join dropped every row). It must raise instead; pointing at a
-        DIFFERENT sink dir busts the fingerprint and recomputes."""
+        DIFFERENT sink dir busts the fingerprint and recomputes. A
+        raising append must also leave nothing in Spark's cache manager:
+        the enriched-labels pin is released on the error path too."""
         import shutil
+
+        def cache_empty():
+            return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
         images = datagen.images_df(spark, 2)
         labels = datagen.labels_df(spark)
@@ -111,12 +116,15 @@ class TestPipelineResume:
         files = sorted(glob.glob(os.path.join(sink1, "data", "*.parquet")))
         assert len(files) >= 2  # one per (image, band): partial clean is real
         os.remove(files[0])
+        spark.catalog.clearCache()  # drop what the successful append pinned
         with pytest.raises(ValueError, match="tile_sink_dir"):
             run(sink1)
+        assert cache_empty()
         # fully clean the sink, resume with the same dir -> raise too
         shutil.rmtree(sink1)
         with pytest.raises(ValueError, match="tile_sink_dir"):
             run(sink1)
+        assert cache_empty()
         # a different sink dir changes the fingerprint -> kernel re-runs
         out3 = run(str(tmp_path / "sink2"))
         assert out3.tiles.count() == n_tiles

@@ -269,6 +269,40 @@ class TestAppendContract:
         cats = sorted((r.id, r.name) for r in state.categories.collect())
         assert cats == [(1, "One"), (2, "Two"), (5, "Five"), (8, "Eight")]
 
+    PHASES = ["prologue_agg", "sources", "pairs_join", "kernel", "image_ids", "annotation_ids"]
+
+    def _append(self, spark, **kw):
+        return pipeline.append_dataset(
+            spark, CocoState.create(spark), datagen.images_df(spark, 1),
+            datagen.labels_df(spark), id_attribute="category_id",
+            name_attribute="class_names", **kw,
+        )
+
+    def test_timings_phase_keys(self, spark, monkeypatch):
+        # perfbench lays the phases end to end in this order, so the
+        # names and their order are part of the contract; profiling
+        # must not change the output
+        monkeypatch.delenv("SPARK_GRAFT_PAIRS_PROBE", raising=False)
+        timings = {}
+        traced = self._append(spark, timings=timings)
+        assert list(timings) == self.PHASES
+        assert all(isinstance(v, float) and v >= 0 for v in timings.values())
+        assert _state_snapshot(traced) == _state_snapshot(self._append(spark))
+
+    def test_pairs_probe_timings(self, spark, monkeypatch):
+        # the probe counts the join's sub-plans: bbox candidates, then
+        # the exact predicate and the dedupe can only drop rows
+        monkeypatch.setenv("SPARK_GRAFT_PAIRS_PROBE", "1")
+        timings = {}
+        state = self._append(spark, timings=timings)
+        assert [k for k in timings if not k.startswith("probe_")] == self.PHASES
+        rows = {n: timings[f"probe_{n}_rows"] for n in ("cand", "bbox_dedup", "exact", "dedup")}
+        assert all(timings[f"probe_{n}"] >= 0 for n in rows)
+        assert rows["cand"] >= rows["bbox_dedup"] >= rows["dedup"]
+        assert rows["cand"] >= rows["exact"] >= rows["dedup"]
+        # one window holds all five labels: one pair, one annotation each
+        assert rows["dedup"] == state.annotations.count() == 5
+
 
 def _state_snapshot(state):
     """Order-insensitive, byte-level content of the COCO output tables."""
@@ -324,125 +358,6 @@ class TestKernelScaleShape:
         )
         assert _state_snapshot(both) == base
 
-    def test_kernel_input_mode_output_identical(self, spark, tmp_path):
-        """VERDICT r03 #1: the broadcast kernel-input path changes HOW
-        image bytes reach the kernel (no images-side exchange), never
-        WHAT the engine outputs — and it composes with the tile sink and
-        band splitting."""
-        base = _state_snapshot(self._run(spark, kernel_input_mode="cogroup"))
-        bc = self._run(spark, kernel_input_mode="broadcast")
-        assert _state_snapshot(bc) == base
-        both = self._run(
-            spark, kernel_input_mode="broadcast", band_split_pairs=2,
-            tile_sink_dir=str(tmp_path / "bc_sink"),
-        )
-        assert _state_snapshot(both) == base
-        # auto mode (tiny pair count -> broadcast) stays identical too
-        auto = self._run(spark, kernel_input_mode="auto")
-        assert _state_snapshot(auto) == base
-        # packed cogroup (round 7): per-pair rows cross the exchange as
-        # position-zipped arrays, output still byte-identical — and it
-        # composes with band splitting + the tile sink
-        packed = self._run(spark, kernel_input_mode="cogroup_packed")
-        assert _state_snapshot(packed) == base
-        packed_both = self._run(
-            spark, kernel_input_mode="cogroup_packed", band_split_pairs=2,
-            tile_sink_dir=str(tmp_path / "cgp_sink"),
-        )
-        assert _state_snapshot(packed_both) == base
-
-    def test_kernel_schedule_output_identical(self, spark, tmp_path):
-        """Round-7 stage-scheduling probe: the schedule changes WHEN the
-        kernel's shuffle and burn run relative to each other (fused |
-        shuffle-then-burn | k sequential waves), never WHAT the engine
-        outputs — and it composes with band splitting + the tile sink."""
-        base = _state_snapshot(self._run(spark, kernel_schedule="fused"))
-        pre = self._run(spark, kernel_schedule="preshuffle")
-        assert _state_snapshot(pre) == base
-        waves = self._run(
-            spark, kernel_schedule="waves:3", band_split_pairs=2,
-            tile_sink_dir=str(tmp_path / "waves_sink"),
-        )
-        assert _state_snapshot(waves) == base
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="kernel_schedule"):
-            self._run(spark, kernel_schedule="waves:1")
-        with _pytest.raises(ValueError, match="requires the 'cogroup'"):
-            self._run(spark, kernel_schedule="preshuffle",
-                      kernel_input_mode="broadcast")
-
-    def test_preshuffle_burn_stage_has_no_exchange(self, spark):
-        """Plan-level pin of the docs/PLANS.md scheduling claim: under
-        kernel_schedule="preshuffle" the cogroup reads BOTH sides from
-        cached pre-partitioned blocks — FlatMapCoGroupsInPandas sits
-        directly on two InMemoryTableScans, with no Exchange between
-        the scan and the burn (the cached plan's outputPartitioning
-        satisfies the cogroup's ClusteredDistribution)."""
-        state = self._run(spark, kernel_schedule="preshuffle")
-        jplan = state.annotations._jdf.queryExecution().executedPlan()
-
-        # generic JVM-tree walk: AQE wrappers (AdaptiveSparkPlanExec /
-        # *QueryStageExec) hide their physical child behind accessors,
-        # and InMemoryTableScanExec hides the cached plan — the
-        # toString indentation is NOT walkable (AQE "== Final Plan =="
-        # sub-dumps reset it), so traverse nodes, not text
-        def _kids(n, into_cache):
-            cls = n.getClass().getSimpleName()
-            if cls == "AdaptiveSparkPlanExec":
-                return [n.executedPlan()]
-            if "QueryStage" in cls:
-                return [n.plan()]
-            if cls == "InMemoryTableScanExec":
-                return [n.relation().cachedPlan()] if into_cache else []
-            ch = n.children()
-            return [ch.apply(i) for i in range(ch.size())]
-
-        def _find(n, name):
-            if name in n.getClass().getSimpleName():
-                return n
-            for c in _kids(n, into_cache=True):
-                r = _find(c, name)
-                if r is not None:
-                    return r
-            return None
-
-        def _flatten(n):
-            cls = n.getClass().getSimpleName()
-            out = [cls]
-            if cls != "InMemoryTableScanExec":  # stop at the cache boundary
-                for c in _kids(n, into_cache=False):
-                    out += _flatten(c)
-            return out
-
-        cg = _find(jplan, "FlatMapCoGroupsInPandas")
-        assert cg is not None
-        ch = cg.children()
-        assert ch.size() == 2
-        for i in range(2):
-            side = _flatten(ch.apply(i))
-            # the burn stage's input: scan of the pre-shuffled cache,
-            # with NO exchange above it (exchanges inside the cached
-            # plan ran in the earlier shuffle-only jobs)
-            assert "InMemoryTableScanExec" in side, side
-            assert not any("ShuffleExchange" in c for c in side), side
-        """Plan-level: in broadcast mode the images scan must feed the
-        kernel through a BroadcastHashJoin with NO hash exchange keyed on
-        image_id — the encoded bytes never enter a shuffle."""
-        import re
-
-        state = self._run(spark, kernel_input_mode="broadcast")
-        plan = state.annotations._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "FlatMapCoGroupsInPandas" not in plan  # cogroup path not taken
-        # the IMAGES-side image_id (the one MapInPandas reads alongside
-        # bytes) must never appear as an exchange partitioning key; the
-        # pairs-side groupBys legitimately exchange their own image_id
-        # copies (metadata-only rows)
-        m = re.search(r"MapInPandas _fn\(image_id#(\d+)", plan)
-        assert m, plan[:2000]
-        assert f"hashpartitioning(image_id#{m.group(1)}" not in plan
-
     def test_bucketed_images_input(self, spark, tmp_path):
         """The 100 TB-native input shape: an images store written
         ``bucketBy(image_id)`` plus
@@ -451,10 +366,9 @@ class TestKernelScaleShape:
         an exchange (plan-level assert) and the output stays
         byte-identical. Locally this is NOT faster (A/B/A/B at 512
         images: 15.1/17.1 s bucketed vs 14.8/15.6 s parquet — local
-        shuffles are page-cache-cheap and buckets cap scan parallelism),
-        the same verdict as the broadcast kernel-input mode; on a real
-        fabric the elided exchange is the images table's entire network
-        cost per append."""
+        shuffles are page-cache-cheap and buckets cap scan parallelism);
+        on a real fabric the elided exchange is the images table's
+        entire network cost per append."""
         import re
 
         base = _state_snapshot(self._run(spark))
@@ -555,36 +469,6 @@ class TestKernelScaleShape:
         _, hit = cache.get(imgs[2])
         assert not hit and cache._total == 0 and not cache._entries
 
-    def test_auto_broadcast_pairs_rows_derivation(self, spark):
-        """VERDICT r04 #6: the auto kernel-input threshold tracks
-        autoBroadcastJoinThreshold and executor memory instead of a
-        fixed constant."""
-        from geococo_spark import pipeline as P
-
-        assert P._parse_byte_conf("10485760b") == 10 * 1024 * 1024
-        assert P._parse_byte_conf("8g") == 8 << 30
-        assert P._parse_byte_conf("512m") == 512 << 20
-        assert P._parse_byte_conf("1.5gb") == int(1.5 * (1 << 30))
-        assert P._parse_byte_conf("-1") == -1
-
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        saved = spark.conf.get(key, None)
-        try:
-            spark.conf.set(key, "10485760b")
-            base = P.auto_broadcast_pairs_rows(spark)
-            # 16 x 10MB / 48B -- unless capped by the 5% heap budget
-            assert base > 1_000_000
-            spark.conf.set(key, "20971520b")  # 2x threshold
-            doubled = P.auto_broadcast_pairs_rows(spark)
-            assert doubled >= base  # scales with the knob (may hit heap cap)
-            spark.conf.set(key, "-1")  # broadcast disabled -> cogroup only
-            assert P.auto_broadcast_pairs_rows(spark) == 0
-        finally:
-            if saved is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, saved)
-
     def test_decode_cache_env_budget(self, monkeypatch):
         from geococo_spark.kernels.tile_kernel import _DecodeCache
 
@@ -626,9 +510,8 @@ class TestKernelScaleShape:
                 id_attribute="category_id", name_attribute="class_names", **kw,
             )
 
-        base = _state_snapshot(run(kernel_input_mode="cogroup"))
-        split = run(band_split_pairs=40, kernel_input_mode="broadcast",
-                    tile_sink_dir=str(tmp_path / "skew_sink"))
+        base = _state_snapshot(run())
+        split = run(band_split_pairs=40, tile_sink_dir=str(tmp_path / "skew_sink"))
         assert _state_snapshot(split) == base
 
         # task-level fan-out probe on the same banded structure the

@@ -874,7 +874,7 @@ class TestDuplicateClusters:
     def test_steps_per_round_fixpoint_equivalence(self, spark):
         # fused multi-step rounds are fixpoint-neutral: 1-, 2- and
         # 3-step rounds must all produce the union-find labeling
-        # (ab_cc_fused_r7.py measured fusion slower, so 1 is the
+        # (round 7 measured fusion slower, so 1 is the
         # default — the knob stays correct either way)
         import random
 

@@ -210,7 +210,6 @@ def _bbox_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _tiles_grid(spark),
         _labels_boxes(spark, sf_dir),
         cell_size=100.0,
-        label_id="label_id",
         exact=False,
         geometry="label_id",  # unused in bbox-only mode
         # the grid is a static 100-row relation while labels scale with
@@ -404,7 +403,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _tiles_grid(spark),
             _labels_boxes(spark, sf_dir),
             cell_size=100.0,
-            label_id="label_id",
             exact=False,
             geometry="label_id",
             broadcast_rows=0,
@@ -800,7 +798,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         labels = _hash_star_labels(spark, sf_dir, salt="sjx", extent_cells=10)
         return spatial_join.spatial_join(
-            _tiles_grid(spark), labels, cell_size=100.0, label_id="label_id",
+            _tiles_grid(spark), labels, cell_size=100.0,
             broadcast_side="tiles",
         ).select("tile_id", "label_id")
 
@@ -845,7 +843,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
         return spatial_join.spatial_join(
-            _tiles_grid(spark), labels, cell_size=100.0, label_id="label_id",
+            _tiles_grid(spark), labels, cell_size=100.0,
             broadcast_side="tiles",
         ).select("tile_id", "label_id")
 
@@ -1102,7 +1100,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _tiles_grid(spark),
             boxes,
             cell_size=100.0,
-            label_id="label_id",
             exact=False,
             geometry="label_id",  # unused in bbox-only mode
             broadcast_side="tiles",
@@ -1176,7 +1173,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _tiles_grid(spark),
             boxes,
             cell_size=100.0,
-            label_id="label_id",
             exact=False,
             geometry="label_id",  # unused in bbox-only mode
             broadcast_side="tiles",
@@ -1258,7 +1254,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _tiles_grid(spark),
             stars,
             cell_size=100.0,
-            label_id="label_id",
             exact=False,
             geometry="label_id",  # unused in bbox-only mode
             broadcast_side="tiles",
@@ -1338,7 +1333,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _tiles_grid(spark),
             stars,
             cell_size=100.0,
-            label_id="label_id",
             exact=False,
             geometry="label_id",  # unused in bbox-only mode
             broadcast_side="tiles",

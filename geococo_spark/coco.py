@@ -10,12 +10,38 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from datetime import datetime
+from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from geococo_spark import schemas
+
+
+def state_table(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A table the driver builds from rows, as a JVM ``LocalRelation``.
+
+    Every driver-built state table goes through here. The rows cross to
+    the JVM as one Arrow table; ``createDataFrame(<python list>)`` would
+    instead make a ``PythonRDD`` that every query over the dataset
+    rescans with ``defaultParallelism`` Python-worker tasks, and that
+    the optimizer cannot prune when empty (``PropagateEmptyRelation``
+    removes an empty ``LocalRelation`` from unions and joins)."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, f, af in zip(columns, schema.fields, arrow_schema):
+        if isinstance(f.dataType, TimestampType):
+            # a naive datetime is local time, as in Spark's row conversion
+            values = [v.astimezone(timezone.utc) if v is not None else None for v in values]
+        arrays.append(pa.array(values, type=af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
+_FILE_NAMES = StructType([StructField("file_name", StringType(), False)])
 
 
 def bump_version(version: str, bump_method: str) -> str:
@@ -115,10 +141,10 @@ class CocoState:
     ) -> "CocoState":
         """create_dataset equivalent (geococo/coco_manager.py:22-47)."""
         return cls(
-            images=spark.createDataFrame([], schemas.COCO_IMAGES),
-            annotations=spark.createDataFrame([], schemas.COCO_ANNOTATIONS),
-            categories=spark.createDataFrame([], schemas.CATEGORIES),
-            sources=spark.createDataFrame([], schemas.COCO_SOURCES),
+            images=state_table(spark, [], schemas.COCO_IMAGES),
+            annotations=state_table(spark, [], schemas.COCO_ANNOTATIONS),
+            categories=state_table(spark, [], schemas.CATEGORIES),
+            sources=state_table(spark, [], schemas.COCO_SOURCES),
             info={
                 "version": version,
                 "year": date_created.year if date_created else None,
@@ -318,12 +344,24 @@ class CocoState:
         ``annotation_shards`` manifest written by
         ``to_json_file(shard_annotations_dir=...)`` — the shards load as
         a distributed ``spark.read.json`` scan (never through the
-        driver)."""
+        driver). A manifest's ``count`` sets the next id, so it is
+        checked against a count of the shard scan: a mismatch raises
+        ``ValueError`` rather than mint ids that collide."""
         with open(path) as fh:
             doc = json.load(fh)
 
         def ts(v):
             return datetime.fromisoformat(v) if v else None
+
+        def shard_count(key: str, df: DataFrame) -> int:
+            n = df.count()
+            manifest = doc[key]
+            if "count" in manifest and int(manifest["count"]) != n:
+                raise ValueError(
+                    f"{path}: {key} count {manifest['count']} does not match the "
+                    f"{n} rows under {manifest['dir']}"
+                )
+            return n
 
         img_shards = doc.get("image_shards")
         if img_shards is not None:
@@ -345,18 +383,17 @@ class CocoState:
                     ),
                 )
             )
-            n_shard_imgs = (
-                int(img_shards["count"]) if "count" in img_shards else images.count()
-            )
+            n_images = shard_count("image_shards", images)
         else:
-            images = spark.createDataFrame(
+            images = state_table(
+                spark,
                 [
                     (r["id"], r["width"], r["height"], r["file_name"], r["source_id"], ts(r["date_captured"]))
                     for r in doc.get("images", [])
                 ],
                 schemas.COCO_IMAGES,
             )
-            n_shard_imgs = None
+            n_images = len(doc.get("images", []))
         shards = doc.get("annotation_shards")
         if shards is not None:
             ann_json_schema = (
@@ -380,11 +417,10 @@ class CocoState:
                     "iscrowd",
                 )
             )
-            n_shard_anns = (
-                int(shards["count"]) if "count" in shards else annotations.count()
-            )
+            n_annotations = shard_count("annotation_shards", annotations)
         else:
-            annotations = spark.createDataFrame(
+            annotations = state_table(
+                spark,
                 [
                     (
                         r["id"],
@@ -399,28 +435,22 @@ class CocoState:
                 ],
                 schemas.COCO_ANNOTATIONS,
             )
-            n_shard_anns = None
-        categories = spark.createDataFrame(
+            n_annotations = len(doc.get("annotations", []))
+        categories = state_table(
+            spark,
             [(r["id"], r["name"], r["supercategory"]) for r in doc.get("categories", [])],
             schemas.CATEGORIES,
         )
-        sources = spark.createDataFrame(
+        sources = state_table(
+            spark,
             [(r["id"], r["file_name"], ts(r["date_captured"])) for r in doc.get("sources", [])],
             schemas.COCO_SOURCES,
         )
         return cls(
             images, annotations, categories, sources, doc.get("info", {}),
             cached_counts={
-                "images": (
-                    n_shard_imgs
-                    if n_shard_imgs is not None
-                    else len(doc.get("images", []))
-                ),
-                "annotations": (
-                    n_shard_anns
-                    if n_shard_anns is not None
-                    else len(doc.get("annotations", []))
-                ),
+                "images": n_images,
+                "annotations": n_annotations,
                 "sources": len(doc.get("sources", [])),
             },
         )
@@ -511,9 +541,7 @@ class CocoState:
             return int(row["id"])
         new_id = self._known_count("sources", self.sources) + 1
         spark = self.sources.sparkSession
-        new_row = spark.createDataFrame(
-            [(new_id, file_name, date_captured)], schemas.COCO_SOURCES
-        )
+        new_row = state_table(spark, [(new_id, file_name, date_captured)], schemas.COCO_SOURCES)
         self.sources = self.sources.unionByName(new_row)
         self.cached_counts["sources"] = new_id
         self.info["version"] = bump_version(self.info["version"], "minor")
@@ -532,12 +560,10 @@ class CocoState:
         #4). The distributed pipeline path is register_sources_df.
         """
         if not file_names:
-            # createDataFrame([]) cannot infer a schema (ADVICE r03) and
-            # there is nothing to register or bump anyway
             return {}
         spark = self.sources.sparkSession
-        incoming = spark.createDataFrame(
-            [(fn,) for fn in dict.fromkeys(file_names)], ["file_name"]
+        incoming = state_table(
+            spark, [(fn,) for fn in dict.fromkeys(file_names)], _FILE_NAMES
         )
         matched = {
             r["file_name"]: int(r["id"])
@@ -561,7 +587,7 @@ class CocoState:
                 next_id += 1
         if new_rows:
             self.sources = self.sources.unionByName(
-                spark.createDataFrame(new_rows, schemas.COCO_SOURCES)
+                state_table(spark, new_rows, schemas.COCO_SOURCES)
             )
             self.cached_counts["sources"] = next_id - 1
         return out

@@ -219,7 +219,6 @@ def spatial_join(
     labels: DataFrame,
     cell_size: float,
     tile_id: str = "tile_id",
-    label_id: str = "label_id",
     geometry: str = "geometry",
     broadcast_rows: int = 1_000_000,
     n_salt: int = 8,
@@ -234,7 +233,7 @@ def spatial_join(
 
     :param tiles: must carry ``tile_id, tile_minx, tile_miny, tile_maxx,
         tile_maxy`` (from grid.with_window_bounds)
-    :param labels: must carry ``label_id, label_minx.., geometry`` (WKB)
+    :param labels: must carry ``label_minx.., geometry`` (WKB)
     :param cell_size: spatial hash pitch; choose ~ tile size so a tile
         covers O(1) cells
     :param broadcast_rows: label-cell rows under which the label side is

@@ -523,7 +523,6 @@ def _pairs(
             "label_minx", "label_miny", "label_maxx", "label_maxy",
         ),
         cell_size=pro.cell_size,
-        label_id="label_idx",
         broadcast_rows=broadcast_rows,
         label_count=pro.n_labels,
         output_geometry=False,

@@ -124,12 +124,16 @@ COCO_ANNOTATIONS = StructType(
         StructField("id", LongType(), False),
         StructField("image_id", LongType(), False),
         StructField("category_id", IntegerType(), False),
+        # the fields inside segmentation are nullable because PySpark
+        # 4.1's Arrow path (coco.state_table) cannot build non-null
+        # fields inside a struct ("cannot cast nullable field to
+        # non-nullable field")
         StructField(
             "segmentation",
             StructType(
                 [
-                    StructField("size", ArrayType(IntegerType()), False),
-                    StructField("counts", BinaryType(), False),
+                    StructField("size", ArrayType(IntegerType()), True),
+                    StructField("counts", BinaryType(), True),
                 ]
             ),
             False,

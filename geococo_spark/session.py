@@ -6,7 +6,20 @@ Tuning rationale (100 TB target, tested on local[N]):
 - Arrow enabled and batch-size bounded so decoded-image batches fit in
   executor memory (SURVEY.md §4.2 codegen row),
 - shuffle partitions default to cores on local mode; a real cluster
-  would size this to ~2-3x total cores / target 128-256 MB partitions.
+  would size this to ~2-3x total cores / target 128-256 MB partitions,
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``F.*``/``Column`` call captures the Python stack and sends it
+  to the JVM, to name the calling line in an ``AnalysisException``:
+  on a shared 4-core VM a call took 11.3 py4j round trips and
+  0.9-1.2 ms instead of 2.6 and 0.26 ms, and a label_sparse perfbench
+  append made 7.4k-7.7k py4j calls instead of 3.5k-3.6k. To get call
+  sites back while chasing an ``AnalysisException``, flip the setting to
+  ``"true"`` below, locally. It is a static conf that PySpark reads once
+  per process, and the builder's value wins over ``--conf``.
+  Sessions not made here (``jobs/annotate*.py`` build their own) keep
+  PySpark's default unless launched with
+  ``--conf spark.python.sql.dataFrameDebugging.enabled=false``.
 """
 
 from __future__ import annotations
@@ -45,6 +58,7 @@ def get_spark(
         # memory at ~16 tiles x 200KB per group
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

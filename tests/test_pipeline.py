@@ -538,7 +538,7 @@ class TestKernelScaleShape:
         )
         pairs = spatial_join.spatial_join(
             tiles, labels.withColumn("id", F.col("category_id")),
-            cell_size=100.0, label_id="label_idx", output_geometry=False,
+            cell_size=100.0, output_geometry=False,
         ).select(
             F.col("tile_image_id").alias("image_id"),
             "col_off", "row_off", "width", "height", "label_idx", "id",

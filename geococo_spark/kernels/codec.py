@@ -82,34 +82,6 @@ def decode_image(data: bytes) -> np.ndarray:
     )
 
 
-_MAGIC_PCM = b"GPCM"
-
-
-def encode_audio(samples: np.ndarray, sample_rate: int) -> bytes:
-    """(channels, n_samples) int16 ndarray -> engine PCM bytes.
-
-    Deterministic stand-in for real audio containers (no soundfile/
-    ffmpeg in this container — same stub pattern as the image codecs);
-    the Spark-side plumbing that consumes it is real and tested.
-    """
-    samples = np.ascontiguousarray(samples, dtype=np.int16)
-    if samples.ndim != 2:
-        raise ValueError("expected (channels, n_samples)")
-    head = _MAGIC_PCM + struct.pack("<IIH", sample_rate, samples.shape[1], samples.shape[0])
-    return head + samples.tobytes()
-
-
-def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
-    """engine PCM bytes -> ((channels, n_samples) int16, sample_rate)."""
-    if bytes(data[:4]) != _MAGIC_PCM:
-        raise NotImplementedError(
-            "STUB: real audio codecs (soundfile/ffmpeg) are not available "
-            "in this container; only the engine's PCM format is decodable"
-        )
-    sr, n, ch = struct.unpack_from("<IIH", data, 4)
-    return np.frombuffer(data, dtype=np.int16, offset=14).reshape(ch, n), sr
-
-
 def normalize_minmax_uint8(arr: np.ndarray) -> np.ndarray:
     """cv2.normalize(NORM_MINMAX, 0..255, CV_8U) equivalent (R4,
     geococo/coco_processing.py:124-133). uint8 input passes through

@@ -68,14 +68,6 @@ class _DecodeCache:
             return _DecodeCache.DEFAULT_MAX_BYTES
         return max(mb, 0) * 1024 * 1024
 
-    def set_budget(self, max_bytes: int) -> None:
-        """Shrink/grow the budget at a job boundary (plumbed through the
-        kernel factories); evicts LRU-first until the cache fits."""
-        self.max_bytes = max_bytes
-        while self._total > self.max_bytes and self._entries:
-            oldest = next(iter(self._entries))
-            self._total -= self._entries.pop(oldest).nbytes
-
     def clear(self) -> None:
         self._entries.clear()
         self._total = 0
@@ -488,22 +480,18 @@ def cogroup_kernel(
     out_fmt: str = "jpeg",
     acc: dict | None = None,
     tile_sink_dir: str | None = None,
-    cache_max_bytes: int | None = None,
 ):
     """Factory for the applyInPandas function (cogrouped by image_id, or
     by (image_id, band) when the pipeline band-splits mega-rasters).
 
     ``acc`` (accumulator dict) serializes into the worker closure so the
     kernel can report engine metrics (checkpoint.EngineMetrics).
-    ``cache_max_bytes`` overrides the per-worker decode-cache byte budget
-    for this job (ADVICE r04); None keeps the worker's current budget
-    (env default)."""
+    The per-worker decode cache takes its byte budget from the
+    ``GEOCOCO_DECODE_CACHE_MB`` env var (see :class:`_DecodeCache`)."""
 
     def _fn(image_pdf: pd.DataFrame, pairs_pdf: pd.DataFrame) -> pd.DataFrame:
         import time as _time
 
-        if cache_max_bytes is not None:
-            _decode_cache.set_budget(cache_max_bytes)
         t0 = _time.perf_counter()
         out = run_tile_kernel(
             image_pdf, pairs_pdf, out_fmt=out_fmt, acc=acc, tile_sink_dir=tile_sink_dir

@@ -601,11 +601,6 @@ def _kernel(
     id and table actions never re-run the kernel."""
     img_cg, pairs_banded = banded_cogroup_inputs(images, pairs, band_split_pairs)
     acc = metrics.acc if metrics is not None else None
-    # per-worker decode-cache budget (ADVICE r04): workers default from
-    # the GEOCOCO_DECODE_CACHE_MB env var (128 MB fallback); this conf
-    # overrides per job, riding the kernel closure to every worker
-    _cache_mb = spark.conf.get("spark.geococo.decodeCacheMb", None)
-    cache_max_bytes = int(_cache_mb) * 1024 * 1024 if _cache_mb is not None else None
     if tile_sink_dir is not None:
         # pre-create the data dir so an all-empty sink is still readable
         os.makedirs(os.path.join(tile_sink_dir, "data"), exist_ok=True)
@@ -613,7 +608,7 @@ def _kernel(
         img_cg.groupBy("image_id", "band")
         .cogroup(_with_geom_rows(pairs_banded, pro.labels).groupBy("image_id", "band"))
         .applyInPandas(
-            cogroup_kernel(out_fmt, acc, tile_sink_dir, cache_max_bytes), schemas.KERNEL_OUT
+            cogroup_kernel(out_fmt, acc, tile_sink_dir), schemas.KERNEL_OUT
         )
     )
     if ckpt is None:

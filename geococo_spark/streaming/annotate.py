@@ -40,11 +40,37 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geococo_spark import pipeline
+from geococo_spark import pipeline, schemas
 from geococo_spark.coco import CocoState
-from geococo_spark.streaming import ingest
 
 LATEST = "_latest.json"
+
+
+def run_available_now(
+    spark: SparkSession,
+    input_dir: str,
+    stream_checkpoint: str,
+    batch_fn,
+    timeout_sec: int = 600,
+) -> None:
+    """Drain all currently-available image parquet files under
+    ``input_dir`` through ``batch_fn(df, epoch)`` (Trigger.AvailableNow).
+    The streaming checkpoint remembers processed files, so a restart
+    ingests only new ones: exactly once per file. ``batch_fn`` receives
+    each micro-batch as a plain DataFrame."""
+    q = (
+        spark.readStream.schema(schemas.IMAGES)
+        .option("maxFilesPerTrigger", 16)  # bounds per-batch decode memory
+        .parquet(input_dir)
+        .writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", stream_checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout_sec)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError("availableNow drain did not finish in time")
 
 
 def _read_latest(state_dir: str) -> dict | None:
@@ -151,7 +177,5 @@ class StreamingAnnotator:
         """Drain every not-yet-processed file under ``input_dir``
         (Trigger.AvailableNow) through the append pipeline; returns the
         resulting state (also durably committed under ``state_dir``)."""
-        ingest.run_available_now(
-            self.spark, input_dir, stream_checkpoint, self.process_batch
-        )
+        run_available_now(self.spark, input_dir, stream_checkpoint, self.process_batch)
         return self.state

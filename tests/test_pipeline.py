@@ -462,12 +462,6 @@ class TestKernelScaleShape:
         h = cache.hits
         _, hit = cache.get(imgs[1])              # was evicted -> miss
         assert not hit and cache.hits == h and cache.misses == 4
-        # ADVICE r04: shrinking the budget at a job boundary evicts
-        cache.set_budget(arrs[0].nbytes)
-        assert cache._total <= arrs[0].nbytes and len(cache._entries) == 1
-        cache.set_budget(0)   # 0 disables caching entirely
-        _, hit = cache.get(imgs[2])
-        assert not hit and cache._total == 0 and not cache._entries
 
     def test_decode_cache_env_budget(self, monkeypatch):
         from geococo_spark.kernels.tile_kernel import _DecodeCache

@@ -35,11 +35,11 @@ from geococo_spark.session import get_spark  # noqa: E402
 from geococo_spark.sources import datagen  # noqa: E402
 
 
-def instrumented_cogroup_kernel(out_fmt, acc, tile_sink_dir=None, cache_max_bytes=None):
+def instrumented_cogroup_kernel(out_fmt, acc, tile_sink_dir=None):
     """Same contract as tile_kernel.cogroup_kernel, plus per-worker
     inter-call gap accounting into acc['gap_ms'] / acc['gap_calls'] and
     within-task first-call exclusion (shuffle fetch noise)."""
-    inner = tile_kernel.cogroup_kernel(out_fmt, acc, tile_sink_dir, cache_max_bytes)
+    inner = tile_kernel.cogroup_kernel(out_fmt, acc, tile_sink_dir)
     state = {"last_exit": None, "last_task": None}
 
     def _fn(image_pdf, pairs_pdf):

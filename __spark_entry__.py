@@ -620,8 +620,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # distances) oracle-pinned on the same dyadic-exact star
         # polygons as q_spatial_join_star. Brute-force labeled baseline
         # (cross join over the 100-tile grid) like q_knn_bbox; the
-        # production ring-escalation candidate path stays pytest-pinned
-        # (q_knn_fallback, rows-only).
+        # cell-filtered candidate path is pinned by q_knn_fallback and
+        # q_knn_escalate.
         import numpy as np
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
@@ -678,31 +678,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_knn_fallback(spark, sf_dir):
-        # J5's FIXED-ring pass (knn_assign(escalate=False), the building
-        # block the escalation loop repeats) on hash-scattered stars over
-        # a 40x40-cell extent: only ~9% of labels have a tile within
-        # rings=2 of their centroid cell, so the unassigned-label drop
-        # path fires for the rest (VERDICT r05 #4 — md5-derived fixture
-        # replaces numpy RandomState; now oracle-exact, not rows-only).
+        # J5's fixed-ring search (knn_assign with max_rings=rings=2, the
+        # one-level case of the pipeline's fallback) on hash-scattered
+        # stars over a 40x40-cell extent: only ~9% of labels have a tile
+        # within rings=2 of their centroid cell, so the unassigned-label
+        # drop path fires for the rest. The md5-derived fixture makes it
+        # oracle-exact.
         from geococo_spark.operators import knn
 
         labels = _hash_star_labels(spark, sf_dir, salt="knf", extent_cells=40)
-        return knn.knn_assign(labels, _tiles_grid(spark), cell_size=100.0, k=1, rings=2).select(
+        return knn.knn_assign(
+            labels, _tiles_grid(spark), cell_size=100.0, k=1, rings=2, max_rings=2
+        ).select(
             "label_id", "tile_id", F.round("knn_distance", 6).alias("knn_distance")
         )
 
     def q_knn_escalate(spark, sf_dir):
-        # Round 5: the PRODUCTION ring-escalation walk (J5 escalate=True,
-        # operators/knn.py:76 — the pipeline's kNN fallback shape;
-        # SURVEY.md J5, north_star capability with no reference analog)
-        # oracle-pinned end-to-end. Star labels are scattered over ~128x128 cells so
-        # every doubling level 2..64 fires and ~17% of labels exceed
-        # max_rings=64 (dropped, like the loop). The DuckDB oracle picks,
-        # per label, the smallest level whose Chebyshev cell neighborhood
-        # of the centroid cell reaches a tile cover cell, then ranks that
-        # level's candidates by the exact unrounded polygon-to-box
-        # distance with (distance, tile_id) ties — exactly the per-pass
-        # semantics, since each pass runs only on the remainder.
+        # The pipeline's kNN fallback shape (knn_assign with rings=2,
+        # max_rings=64; SURVEY.md J5, a north_star capability with no
+        # reference analog) oracle-pinned end-to-end. Star labels are
+        # scattered over ~128x128 cells so every doubling level 2..64
+        # fires and ~17% of labels exceed max_rings=64 (no row). The
+        # DuckDB oracle picks, per label, the smallest level whose
+        # Chebyshev cell neighborhood of the centroid cell reaches a tile
+        # cover cell, then ranks that level's candidates by the exact
+        # unrounded polygon-to-box distance with (distance, tile_id) ties.
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import BinaryType
@@ -733,8 +733,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
         out = knn.knn_assign(
-            labels, _tiles_grid(spark), cell_size=100.0, k=1, rings=2,
-            escalate=True, max_rings=64,
+            labels, _tiles_grid(spark), cell_size=100.0, k=1, rings=2, max_rings=64
         )
         return out.select(
             "label_id", "tile_id", F.round("knn_distance", 6).alias("knn_distance")
@@ -1494,17 +1493,14 @@ SELECT label_id, tile_id, dist FROM ranked WHERE rn = 1
 
 
 def _knn_escalate_oracle_sql() -> str:
-    """The ring-escalation walk (knn.knn_assign(escalate=True),
-    operators/knn.py:76) in closed form: a label is assigned at the
-    SMALLEST doubling ring level (2, 4, ..., max_rings=64) whose
+    """knn.knn_assign(rings=2, max_rings=64, k=1): a label is assigned
+    at the SMALLEST doubling ring level (2, 4, ..., max_rings=64) whose
     Chebyshev cell neighborhood of its centroid cell (cell_size=100,
     cells.centroid_cell) reaches a tile cover cell (the tile bbox's 2x2
-    cell block, cells.with_cell_cover); within that level, candidates
-    rank by the exact UNROUNDED polygon-to-box distance with
-    (distance, tile_id) ties — exactly the loop's per-pass semantics,
-    since each pass runs only on the labels every smaller level left
-    unassigned. min(cheb) > 64 (past max_rings) produces no row, like
-    the loop's bounded exit."""
+    cell block, cells.cell_block); within that level, candidates rank
+    by the exact UNROUNDED polygon-to-box distance with
+    (distance, tile_id) ties. min(cheb) > 64 (past max_rings) produces
+    no row."""
     return f"""
 WITH {_star_scored_sql(_EPX, _EPY)},
 lvl AS (
@@ -1527,13 +1523,13 @@ FROM ranked WHERE rn = 1
 
 
 def _knn_fallback_oracle_sql() -> str:
-    """knn.knn_assign(escalate=False, rings=2, k=1) in closed form over
-    the hash-scattered star fixture (VERDICT r05 #4): candidates are the
+    """knn.knn_assign(rings=2, max_rings=2, k=1) in closed form over
+    the hash-scattered star fixture: candidates are the
     tiles whose 2x2 cell-cover block lies within Chebyshev distance 2 of
     the label's centroid cell; within the candidate set, rank by the
     exact UNROUNDED polygon-to-box distance with (distance, tile_id)
     ties. Labels with no candidate produce no row — the fixed-ring
-    pass's drop semantics."""
+    search's drop semantics."""
     e = _hashstar_exprs("knf", 40, _hash60_duck)
     return f"""
 WITH {_star_scored_sql(e["px"], e["py"], s_expr=e["s"], t_expr=e["t"])},

@@ -36,7 +36,7 @@ class EngineMetrics:
         "decode_cache_hits",
         "decode_cache_misses",
         "knn_fallbacks",
-        "knn_unassigned",  # labels still unassigned after kNN ring escalation
+        "knn_unassigned",  # labels the kNN fallback found no tile for
         "kernel_ms",  # wall ms spent inside the tile kernel (all workers)
     ]
 
@@ -63,32 +63,6 @@ class EngineMetrics:
 
     def snapshot(self) -> dict:
         return {n: a.value for n, a in self.acc.items()}
-
-
-def materialize(
-    df: DataFrame, checkpoint_dir: str | None = None, name: str = "step"
-) -> DataFrame:
-    """Cut a DataFrame's lineage, durably or not (VERDICT r06 #3).
-
-    ``localCheckpoint`` keeps the blocks in executor memory/disk with NO
-    recompute path: on a real cluster one preempted executor mid-job
-    loses blocks that nothing can rebuild (lineage was truncated), which
-    fails iterative algorithms that call this once per round. With
-    ``checkpoint_dir`` set the cut is a parquet round-trip instead —
-    re-readable by ANY executor, so a lost node costs one task retry,
-    not the job. Local mode keeps the (faster, zero-I/O) localCheckpoint
-    default.
-
-    Callers in loops pass a distinct ``name`` per round; old rounds are
-    not auto-deleted (they are tiny id/label tables; a production run
-    points ``checkpoint_dir`` at job-scoped scratch that the scheduler
-    reaps).
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint()
-    path = os.path.join(checkpoint_dir, name)
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
 
 
 class StageCheckpoint:

@@ -51,14 +51,11 @@ def cmd_new(args) -> None:
 def cmd_copy(args) -> None:
     """Copy and (optionally) update the metadata of an existing
     CocoDataset (reference cli.py:44-90)."""
-    from geococo_spark.coco import CocoState
+    from geococo_spark.coco import copy_dataset
     from geococo_spark.session import get_spark
 
-    spark = get_spark(app_name="geococo-cli")
-    state = CocoState.from_json_file(spark, args.source_json)
-    if args.update_meta:
+    def update_meta(info: dict) -> None:
         print("Updating metadata..")
-        info = state.info
         info["version"] = _prompt(
             args.version, f"Dataset version ({info.get('version')}): ", info.get("version")
         )
@@ -76,7 +73,12 @@ def cmd_copy(args) -> None:
         info["date_created"] = now.isoformat()
         info["year"] = now.year
         print(f"Dataset date: {now}")
-    state.to_json_file(args.dest_json)
+
+    spark = get_spark(app_name="geococo-cli")
+    copy_dataset(
+        spark, args.source_json, args.dest_json,
+        update_info=update_meta if args.update_meta else None,
+    )
     print(f"Copied CocoDataset to {args.dest_json}")
 
 

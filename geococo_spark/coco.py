@@ -9,6 +9,7 @@ are a tiny driver-side dict, exactly as SURVEY.md §1.1 maps
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -81,19 +82,13 @@ def copy_dataset(
     spark: SparkSession,
     src_path: str,
     dst_path: str,
-    description: str | None = None,
-    contributor: str | None = None,
-    version: str | None = None,
+    update_info: Callable[[dict], None] | None = None,
 ) -> "CocoState":
-    """S8 — load, optionally update info, save to a new file (reference
-    CLI ``copy``, geococo/cli.py:44-90)."""
+    """S8 — load, optionally update info in place, save to a new file
+    (reference CLI ``copy``, geococo/cli.py:44-90)."""
     state = CocoState.from_json_file(spark, src_path)
-    if description is not None:
-        state.info["description"] = description
-    if contributor is not None:
-        state.info["contributor"] = contributor
-    if version is not None:
-        state.info["version"] = version
+    if update_info is not None:
+        update_info(state.info)
     state.to_json_file(dst_path)
     return state
 
@@ -167,7 +162,7 @@ class CocoState:
     # ---------- JSON sink/source (S6/S4) ----------
 
     # single-file collect ceiling: ~5M annotation rows is ~2-4 GB of
-    # driver JSON — beyond it the contract API must shard (VERDICT r05 #5)
+    # driver JSON — beyond it the contract API must shard
     MAX_SINGLE_FILE_ANNOTATIONS = 5_000_000
 
     # shard timestamps round-trip through this exact pattern (Spark
@@ -189,8 +184,8 @@ class CocoState:
         here, while the scalable path keeps them as parquet/Iceberg
         tables (checkpoint.py).
 
-        Guard rails (VERDICT r05 #5 / r07 #4 — a 10^12-row state must
-        not OOM the driver through the contract API): with more than
+        Guard rails (a 10^12-row state must not OOM the driver through
+        the contract API): with more than
         ``max_collect_rows`` annotations (default
         :data:`MAX_SINGLE_FILE_ANNOTATIONS`) a plain call raises; pass
         ``shard_annotations_dir`` to write the annotation section as
@@ -531,9 +526,9 @@ class CocoState:
         Returns the source id.
 
         The match is a distributed filtered lookup returning at most one
-        row — never a driver dict of the whole sources dimension (VERDICT
-        r02 #4: at 10^6+ rasters that dict was an O(#sources) driver
-        object). The pipeline itself uses register_sources_df.
+        row — never a driver dict of the whole sources dimension (at
+        10^6+ rasters that dict was an O(#sources) driver object). The
+        pipeline itself uses register_sources_df.
         """
         row = self.sources.filter(F.col("file_name") == file_name).select("id").first()
         if row is not None:
@@ -556,8 +551,8 @@ class CocoState:
 
         Only the INCOMING names' matches are collected (a semi-join
         bounded by ``len(file_names)`` — a list the caller already holds
-        on the driver), never the whole sources dimension (VERDICT r02
-        #4). The distributed pipeline path is register_sources_df.
+        on the driver), never the whole sources dimension. The
+        distributed pipeline path is register_sources_df.
         """
         if not file_names:
             return {}

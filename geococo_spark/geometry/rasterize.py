@@ -162,7 +162,7 @@ def _expand_ranges(starts: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, 
     small per-run addend before it is repeated. Measured 0.77x of the
     two-repeat+gather form isolated, burn phase 0.977x, bit-exact
     against it (BENCH/BASELINE.md round 7; the single-cumsum
-    delta-scatter rewrite suggested by VERDICT r06 #5 measured SLOWER
+    delta-scatter rewrite measured SLOWER
     — 1.16-1.49x isolated, burn 1.05-1.08x — and was rejected).
     """
     if len(counts) == 0:
@@ -481,9 +481,9 @@ def _flat_result(burned, ncols_l, return_pixels, nrows_l=None, col_major=False):
     # moff[lab] + col * nrows + row is unique per set pixel and its
     # numeric order IS the (lab, col, row) lexicographic order. The
     # sorted keys decode straight back to (lab, col, row) — no argsort,
-    # no gathers. DRAM roofline (tools/dram_roofline.py): the pixel
-    # extraction was 47 of the raster phase's 86 ms and the kernel is
-    # ~60% bandwidth-bound at 32 procs — traffic, not compute, pays.
+    # no gathers. A DRAM roofline on a 32-core host measured the pixel
+    # extraction at 47 of the raster phase's 86 ms, with the kernel ~60%
+    # bandwidth-bound at 32 procs — traffic, not compute, pays.
     # row/col return as int32 (patch dims are always < 2^31: the shared
     # bool buffer itself bounds nrows*ncols per label) so the kernel's
     # per-candidate passes run in the 4-byte domain.

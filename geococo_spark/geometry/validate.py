@@ -4,7 +4,7 @@ The reference validates labels with pandera's ``is_valid`` Check over
 shapely geometries (reference geococo/utils.py:248). The engine's
 equivalent ran one Python loop iteration per geometry (decode + ring
 predicates) inside a pandas UDF — the last row-at-a-time Python on the
-append prologue's hot path (VERDICT r04 #2). This module replaces the
+append prologue's hot path. This module replaces the
 loop body with numpy batch passes over ALL rings of the Arrow batch at
 once:
 

@@ -8,7 +8,7 @@ exists in this container, so:
   (deterministic, byte-exact round-trip),
 - ``jpeg`` rows use a clearly-marked DETERMINISTIC FAKE lossy codec
   (uniform quantization to step 4) whose reconstruction error is bounded
-  (PSNR ~= 42-48 dB > the 40 dB gate in BASELINE.json:15). If a real
+  (PSNR ~= 42-48 dB, above the 40 dB quality gate). If a real
   codec (cv2 or PIL) is importable it is used instead.
 
 All Spark-side plumbing (schemas, batch shapes, UDF signatures) is real

@@ -32,11 +32,11 @@ from geococo_spark.kernels import codec
 
 
 class _DecodeCache:
-    """Per-worker LRU decode cache keyed by content digest (VERDICT r03
-    #1): a band-split mega-raster replicates its encoded bytes over
-    n_bands kernel groups, and Spark's reused Python workers process
-    several of those groups — decoding once per worker instead of once
-    per group removes the duplicated decode CPU. Byte-budgeted (not
+    """Per-worker LRU decode cache keyed by content digest: a band-split
+    mega-raster replicates its encoded bytes over n_bands kernel groups,
+    and Spark's reused Python workers process several of those groups —
+    decoding once per worker instead of once per group removes the
+    duplicated decode CPU. Byte-budgeted (not
     entry-counted) so a handful of gigapixel rasters cannot blow worker
     memory; cached arrays are frozen read-only because every kernel step
     below either slices (views) or copies."""
@@ -105,8 +105,8 @@ def sink_tile_payload(
     """Write one kernel group's tile payloads (image_key, tile_name,
     tile_bytes, caption) as a parquet file INSIDE the kernel stage, so
     the (fat) tile bytes never re-cross the Arrow boundary back into the
-    JVM (VERDICT r02 #1 — ~800 MB of tile bytes per 1024-image run were
-    the dominant non-UDF cost at 32 slots).
+    JVM (~800 MB of tile bytes per 1024-image run were the dominant
+    non-UDF cost at 32 slots).
 
     Idempotent under task retry/speculation: the file name is
     deterministic per (image_key, band), the kernel output is
@@ -336,8 +336,8 @@ def run_tile_kernel(
     ok = (r1 > r0) & (c1 > c0)  # F3 (no pixel overlap at all)
     P = np.nonzero(ok)[0]
     # 4-byte candidate domain (round 6): the candidate expansion/filter
-    # is the kernel's dominant DRAM traffic and the kernel is 60-80%
-    # bandwidth-bound at 32 procs (tools/dram_roofline.py) — patch/tile
+    # is the kernel's dominant DRAM traffic and the kernel was measured
+    # 60-80% bandwidth-bound at 32 procs on a 32-core host — patch/tile
     # coords and candidate indices all fit int32, halving every pass.
     # Values are bounded: pixel positions < group set-pixel count,
     # tile-space coords < tile dims, flat_idx < tile area. A pathological

@@ -22,8 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-CATEGORY_COLS = ["id", "name", "supercategory"]
-
 
 def new_categories(
     existing: DataFrame,

@@ -26,8 +26,13 @@ from pyspark.sql.types import LongType
 CELL_STRIDE = 1 << 21
 
 
-def cell_id(cx: Column, cy: Column) -> Column:
-    return (cx.cast("long") * F.lit(CELL_STRIDE) + cy.cast("long")).alias("cell")
+def cell_block(
+    minx: Column, miny: Column, maxx: Column, maxy: Column, cell_size: float
+) -> tuple[Column, Column, Column, Column]:
+    """Cell-index range of a bbox: ``floor(min / cell)..floor(max / cell)``
+    on x and on y, as (x0, y0, x1, y1) long columns."""
+    cs = F.lit(float(cell_size))
+    return tuple(F.floor(c / cs).cast("long") for c in (minx, miny, maxx, maxy))
 
 
 def cover_cells(
@@ -37,16 +42,11 @@ def cover_cells(
 
     flatten(transform(cx_range, cx -> transform(cy_range, cy -> id)))
     """
-    cs = F.lit(float(cell_size))
-    cx0 = F.floor(minx / cs).cast("long")
-    cx1 = F.floor(maxx / cs).cast("long")
-    cy0 = F.floor(miny / cs).cast("long")
-    cy1 = F.floor(maxy / cs).cast("long")
-    cxs = F.sequence(cx0, cx1)
+    cx0, cy0, cx1, cy1 = cell_block(minx, miny, maxx, maxy, cell_size)
     cys = F.sequence(cy0, cy1)
     return F.flatten(
         F.transform(
-            cxs,
+            F.sequence(cx0, cx1),
             lambda cx: F.transform(cys, lambda cy: cx * F.lit(CELL_STRIDE) + cy),
         )
     )
@@ -69,28 +69,15 @@ def with_cell_cover(
 
 
 def centroid_cell(
-    df: DataFrame, cell_size: float, minx: str, miny: str, maxx: str, maxy: str, out: str = "cell"
-) -> DataFrame:
-    """Single cell of the bbox centroid (north_star: centroid encoding for
-    point-like labels — cheaper than cover when geometries are small)."""
+    minx: Column, miny: Column, maxx: Column, maxy: Column, cell_size: float
+) -> tuple[Column, Column]:
+    """(cx, cy) of the cell holding the bbox centroid (north_star:
+    centroid encoding for point-like labels — cheaper than cover when
+    geometries are small)."""
     cs = F.lit(float(cell_size))
-    cx = F.floor(((F.col(minx) + F.col(maxx)) / 2.0) / cs).cast("long")
-    cy = F.floor(((F.col(miny) + F.col(maxy)) / 2.0) / cs).cast("long")
-    return df.withColumn(out, cx * F.lit(CELL_STRIDE) + cy)
-
-
-def neighbor_cells(cell: Column, rings: int = 1) -> Column:
-    """Array of cells within ``rings`` Chebyshev distance of ``cell``
-    (including itself) — the kNN fallback's candidate neighborhood."""
-    cx = F.floor(cell / F.lit(CELL_STRIDE)).cast("long")
-    cy = cell - cx * F.lit(CELL_STRIDE)
-    dxs = F.sequence(F.lit(-rings), F.lit(rings))
-    return F.flatten(
-        F.transform(
-            dxs,
-            lambda dx: F.transform(dxs, lambda dy: (cx + dx) * F.lit(CELL_STRIDE) + (cy + dy)),
-        )
-    )
+    cx = F.floor(((minx + maxx) / 2.0) / cs).cast("long")
+    cy = F.floor(((miny + maxy) / 2.0) / cs).cast("long")
+    return cx, cy
 
 
 @pandas_udf(LongType())

@@ -86,9 +86,9 @@ def assign_pipeline_ids(
     n_sources: int,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """W1+W2 fused: BOTH id streams from ONE exchange (VERDICT r03 #2 —
-    the separate annotation pass plus its image-id join were a flat
-    ~3.5 s at every parallelism level).
+    """W1+W2 fused: BOTH id streams from ONE exchange (the separate
+    annotation pass plus its image-id join were a flat ~3.5 s at every
+    parallelism level).
 
     ``kernel_meta`` holds the kernel's metadata rows (``is_tile``
     "tile"/"ann", payload columns already dropped) with ``source_id``

@@ -1,16 +1,23 @@
 """J5 — kNN fallback for labels unmatched by the exact spatial join
 (SURVEY.md §2.3; north_star "STRtree-backed kNN fallback").
 
-No STRtree is available (no shapely in this container), so the same
-cell-bucketed design is used with a numpy distance kernel: each
-unmatched label searches tiles in its cell neighborhood (expanding
-rings), ranked by exact polygon-to-box distance with deterministic
-(distance, tile_id) tie-breaking.
+No STRtree is available (no shapely in this container), so the search
+is cell-bucketed with a numpy distance kernel, in one filter-and-refine
+plan (the split of *Raster Intervals*, SIGMOD 2023):
 
-Distributed shape: neighborhood expansion is an ``explode`` over
-built-in cell arithmetic, candidate scoring is an Arrow-batched pandas
-UDF, and the arg-min per label is a window ``row_number`` partitioned by
-label — all shuffles are keyed and bounded by the candidate count.
+- filter: each tile's cover block (its cell-index range) is broadcast
+  against the labels, and the Chebyshev cell distance ``cheb`` from a
+  label's centroid cell to the block decides the candidates. A label's
+  search level is the smallest of ``rings, 2*rings, 4*rings, ...`` (up to
+  ``max_rings``) that reaches its nearest block; the tiles within that
+  level are its candidates.
+- refine: candidates are scored by exact polygon-to-box distance (an
+  Arrow-batched pandas UDF) and ranked per label by
+  ``(distance, tile_id)`` with a window ``row_number``.
+
+The plan has two shuffles, both keyed by label: the (label, tile) rows
+to find each label's nearest block, and the thin scored candidates to
+rank them. It runs a fixed number of jobs whatever the search depth.
 """
 
 from __future__ import annotations
@@ -22,7 +29,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
-from geococo_spark.checkpoint import materialize
 from geococo_spark.geometry import predicates, wkb
 from geococo_spark.operators import cells
 
@@ -33,8 +39,7 @@ def _poly_box_distance(
 ) -> pd.Series:
     # CSR-batched: each distinct WKB buffer is decoded ONCE per Arrow
     # batch (labels repeat per candidate tile), then every (label, box)
-    # pair is scored in one flat numpy pass (VERDICT r05 #2 — this was
-    # the engine's last per-row Python loop in a hot operator).
+    # pair is scored in one flat numpy pass, with no per-row Python.
     if len(geom) == 0:
         return pd.Series([], dtype="float64")
     codes, uniques = pd.factorize(geom.map(bytes), sort=False)
@@ -58,79 +63,54 @@ def knn_assign(
     cell_size: float,
     k: int = 1,
     rings: int = 2,
+    max_rings: int = 64,
     label_id: str = "label_id",
     tile_id: str = "tile_id",
-    escalate: bool = False,
-    max_rings: int = 64,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Assign each unmatched label its k nearest tiles (by geometry-to-box
-    distance) among tiles in its ``rings``-deep cell neighborhood.
+    distance) among the tiles near its centroid cell.
 
-    With ``escalate=False``, labels with no tile in the neighborhood stay
-    unassigned. With ``escalate=True`` (VERDICT r01 #8) the still-
-    unassigned labels re-run with DOUBLED rings until every label is
-    assigned or ``max_rings`` is exceeded — O(log(max_rings)) bounded
-    passes, each over only the shrinking remainder, so the escalation
-    cost is driven by the (few) far-out labels, not the bulk.
-    Deterministic: ties break on tile_id.
-    Returns label columns + tile_id + ``knn_distance`` + ``knn_rank``.
-
-    ``checkpoint_dir``: when set, the per-pass materialization is a
-    durable parquet round-trip instead of ``localCheckpoint`` — on a
-    real cluster a preempted executor then costs a task retry, not the
-    whole escalation chain (VERDICT r06 #3).
+    A tile is within ring r of a label when its cover block lies within
+    Chebyshev cell distance r of the label's centroid cell. The search
+    ring is the smallest of ``rings, 2*rings, 4*rings, ...`` (at most
+    ``max_rings``; ``rings`` itself is always tried) that holds a tile;
+    a label with no tile within the last ring gets no row.
+    ``max_rings=rings`` is a single fixed-ring search. Deterministic:
+    ties break on tile_id.
+    Returns label columns + tile_id + tile bounds + ``knn_distance`` +
+    ``knn_rank``.
     """
-    if escalate:
-        outs = None
-        remaining = unmatched_labels
-        r = rings
-        while True:
-            # materialize each pass: the loop (and every downstream
-            # consumer) must not re-execute the chain of earlier
-            # geometry-distance joins on each action
-            out = materialize(
-                knn_assign(
-                    remaining, tiles, cell_size, k=k, rings=r,
-                    label_id=label_id, tile_id=tile_id, escalate=False,
-                ),
-                checkpoint_dir,
-                f"knn_rings_{r}",
-            )
-            outs = out if outs is None else outs.unionByName(out)
-            r *= 2
-            if r > max_rings:
-                break
-            remaining = remaining.join(
-                out.select(label_id).distinct(), label_id, "left_anti"
-            )
-            if remaining.isEmpty():
-                break
-        return outs
-    lbl = cells.centroid_cell(
-        unmatched_labels, cell_size, "label_minx", "label_miny", "label_maxx", "label_maxy",
-        out="_ccell",
-    ).withColumn("cell", F.explode(cells.neighbor_cells(F.col("_ccell"), rings))).drop("_ccell")
+    levels = [rings]
+    while levels[-1] * 2 <= max_rings:
+        levels.append(levels[-1] * 2)
 
-    tile_cells = cells.with_cell_cover(
-        tiles.select(tile_id, "tile_minx", "tile_miny", "tile_maxx", "tile_maxy"),
-        cell_size, "tile_minx", "tile_miny", "tile_maxx", "tile_maxy",
+    bounds = ["tile_minx", "tile_miny", "tile_maxx", "tile_maxy"]
+    bx0, by0, bx1, by1 = cells.cell_block(*map(F.col, bounds), cell_size)
+    blocks = tiles.select(
+        tile_id, *bounds,
+        bx0.alias("_bx0"), by0.alias("_by0"), bx1.alias("_bx1"), by1.alias("_by1"),
     )
+    cx, cy = cells.centroid_cell(
+        *map(F.col, ["label_minx", "label_miny", "label_maxx", "label_maxy"]), cell_size
+    )
+    cheb = F.greatest(
+        F.lit(0).cast("long"),
+        F.col("_bx0") - F.col("_cx"), F.col("_cx") - F.col("_bx1"),
+        F.col("_by0") - F.col("_cy"), F.col("_cy") - F.col("_by1"),
+    )
+    level = F.when(F.col("_near") <= levels[0], levels[0])
+    for lv in levels[1:]:
+        level = level.when(F.col("_near") <= lv, lv)
+    by_label = Window.partitionBy(label_id)
 
     cand = (
-        lbl.join(tile_cells, "cell", "inner")
-        .drop("cell")
-        .dropDuplicates([label_id, tile_id])
-        .withColumn(
-            "knn_distance",
-            _poly_box_distance(
-                F.col("geometry"),
-                F.col("tile_minx"),
-                F.col("tile_miny"),
-                F.col("tile_maxx"),
-                F.col("tile_maxy"),
-            ),
-        )
+        unmatched_labels.withColumn("_cx", cx).withColumn("_cy", cy)
+        .crossJoin(F.broadcast(blocks))
+        .withColumn("_cheb", cheb)
+        .withColumn("_near", F.min("_cheb").over(by_label))
+        .filter(F.col("_cheb") <= level)
+        .drop("_cx", "_cy", "_bx0", "_by0", "_bx1", "_by1", "_cheb", "_near")
+        .withColumn("knn_distance", _poly_box_distance("geometry", *bounds))
     )
-    w = Window.partitionBy(label_id).orderBy(F.col("knn_distance").asc(), F.col(tile_id).asc())
+    w = by_label.orderBy(F.col("knn_distance").asc(), F.col(tile_id).asc())
     return cand.withColumn("knn_rank", F.row_number().over(w)).filter(F.col("knn_rank") <= k)

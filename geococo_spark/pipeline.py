@@ -57,7 +57,7 @@ class SchemaValidationError(ValueError):
 
 @pandas_udf(BooleanType())
 def _geometry_is_valid(geom: pd.Series) -> pd.Series:
-    # numpy batch passes over the whole Arrow batch (VERDICT r04 #2) —
+    # numpy batch passes over the whole Arrow batch, no per-row Python —
     # semantics pinned against the old per-geometry loop by a property
     # test (tests/test_geometry.py)
     return pd.Series(validate.wkb_valid_batch(geom.to_numpy()))
@@ -151,7 +151,7 @@ def _pixel_window_exprs(minx, miny, maxx, maxy):
 def banded_cogroup_inputs(
     images: DataFrame, pairs_thin: DataFrame, band_split_pairs: int | None
 ) -> tuple[DataFrame, DataFrame]:
-    """Kernel-granularity control (VERDICT r02 #8): assign a ``band``
+    """Kernel-granularity control: assign a ``band``
     column to both cogroup sides so one mega-raster's pairs spread over
     ceil(n_pairs / band_split_pairs) kernel groups instead of one.
 
@@ -270,10 +270,10 @@ def _prologue(
 
     # ⑤-⑨ the images-metadata AGGREGATE feeds the CRS guard (F5), schema
     # estimate res (T4), extent-overlap guard (A3) and the checkpoint
-    # digest. Nothing per-image reaches the driver (VERDICT r01 #3).
+    # digest. Nothing per-image reaches the driver.
     # The labels aggregate broadcasts as a 1-row dimension into the
     # images aggregate (its extents drive the any_overlap test), so the
-    # whole prologue is ONE action / ONE job (VERDICT r03 #6); label
+    # whole prologue is ONE action / ONE job; label
     # columns ride through as constant F.min passthroughs.
     lab_1row = F.broadcast(
         lab_agg_df.select([F.col(c).alias(f"l_{c}") for c in lab_agg_df.columns])
@@ -381,7 +381,7 @@ def _prologue(
         raise ValueError("Extent of input raster and vector don't overlap")
 
     # J4/X3 — distributed source registration: (file_name -> source_id)
-    # mapping DataFrame; only O(1) scalars hit the driver (VERDICT r01 #3)
+    # mapping DataFrame; only O(1) scalars hit the driver
     sources = F.broadcast(
         state.register_sources_df(
             images.select(F.col("image_id").alias("file_name")),
@@ -628,11 +628,11 @@ def _ids(
     date_captured: datetime | None, clock: _Clock,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """⑰/W1 + ㉒/W2 — dense image and annotation ids from ONE exchange
-    over METADATA-ONLY rows (ids.assign_pipeline_ids, VERDICT r03 #2).
+    over METADATA-ONLY rows (ids.assign_pipeline_ids).
     Returns (new COCO images, new COCO annotations, kernel tile rows
     with their payload)."""
     # X2 — the reference tile filename, rebuilt JVM-side from the window
-    # columns (VERDICT r06 #1: no per-row strings over Arrow)
+    # columns (no per-row strings over Arrow)
     kout = kout.withColumn(
         "tile_name", F.concat_ws("_", "col_off", "row_off", "width", "height")
     ).join(sources, "image_key")
@@ -664,8 +664,8 @@ def _ids(
         F.col("coco_image_id").alias("image_id"),
         "category_id",
         # rle size = [h, w] of the tile window and bbox = [x, y, w, h]
-        # are assembled here from the kernel's scalar columns (VERDICT
-        # r06 #1 — list columns cross Arrow as per-element Python)
+        # are assembled here from the kernel's scalar columns (list
+        # columns cross Arrow as per-element Python)
         F.struct(
             F.array(F.col("height"), F.col("width")).cast("array<int>").alias("size"),
             F.col("rle_counts").alias("counts"),
@@ -679,8 +679,7 @@ def _ids(
 
 
 def _knn_fallback(
-    pro: _Prologue, tiles: DataFrame, pairs: DataFrame, knn_rings: int,
-    metrics: EngineMetrics | None,
+    pro: _Prologue, tiles: DataFrame, pairs: DataFrame, metrics: EngineMetrics | None,
 ) -> DataFrame:
     """J5 — labels that matched NO tile get their nearest tile
     (north_star; no reference analog). The result lands in
@@ -694,13 +693,13 @@ def _knn_fallback(
         F.col("label_idx").alias("label_id"), "geometry",
         "label_minx", "label_miny", "label_maxx", "label_maxy",
     ).join(matched_ids, "label_id", "left_anti")
-    assigned = knn_ops.knn_assign(
-        unmatched, tiles, cell_size=pro.cell_size, k=1, rings=knn_rings, escalate=True
-    ).select("label_id", "tile_id", "knn_distance")
+    assigned = knn_ops.knn_assign(unmatched, tiles, cell_size=pro.cell_size, k=1, rings=2).select(
+        "label_id", "tile_id", "knn_distance"
+    )
     if metrics is not None:
         n_assigned = assigned.select("label_id").distinct().count()
         metrics.add("knn_fallbacks", n_assigned)
-        # residual labels still unassigned after ring escalation
+        # residual labels with no tile within max_rings
         metrics.add("knn_unassigned", unmatched.count() - n_assigned)
     return assigned
 
@@ -747,7 +746,6 @@ def append_dataset(
     broadcast_rows: int = 1_000_000,
     metrics: "EngineMetrics | None" = None,
     knn_fallback: bool = False,
-    knn_rings: int = 2,
     timings: dict | None = None,
     tile_sink_dir: str | None = None,
     band_split_pairs: int | None = None,
@@ -758,14 +756,14 @@ def append_dataset(
     ``images`` rows follow schemas.IMAGES; ``labels`` rows carry WKB
     ``geometry``, attribute columns, bounds (label_minx..label_maxy),
     ``label_idx`` and ``geom_type``. ``checkpoint_dir`` makes the pairs
-    and kernel stages resumable. ``tile_sink_dir`` (VERDICT r02 #1)
-    writes tile payloads to parquet inside the kernel stage, like the
-    reference's in-loop writes (coco_processing.py:149-155); it must be
-    shared storage, stable across resumes, one dir per window/band
-    config. ``band_split_pairs`` (VERDICT r02 #8) splits pair-heavy
-    images over several kernel groups (:func:`banded_cogroup_inputs`),
-    output unchanged. ``timings`` receives each phase's wall seconds
-    (one extra job puts the kernel in its own phase).
+    and kernel stages resumable. ``tile_sink_dir`` writes tile payloads
+    to parquet inside the kernel stage, like the reference's in-loop
+    writes (coco_processing.py:149-155); it must be shared storage,
+    stable across resumes, one dir per window/band config.
+    ``band_split_pairs`` splits pair-heavy images over several kernel
+    groups (:func:`banded_cogroup_inputs`), output unchanged.
+    ``timings`` receives each phase's wall seconds (one extra job puts
+    the kernel in its own phase).
     """
     clock = _Clock(timings)
     ckpt = StageCheckpoint(spark, checkpoint_dir) if checkpoint_dir is not None else None
@@ -786,6 +784,6 @@ def append_dataset(
             state, kout, pro.sources, images_dir, date_captured, clock
         )
         if knn_fallback:
-            state.knn_assignments = _knn_fallback(pro, tiles, pairs, knn_rings, metrics)
+            state.knn_assignments = _knn_fallback(pro, tiles, pairs, metrics)
         _publish(spark, state, new_images, new_annotations, tile_rows, tile_sink_dir)
     return state

@@ -31,7 +31,7 @@ TRANSFORM = StructType(
     ]
 )
 
-# input_hint shape (BASELINE.json:15) + geo-metadata companions (FIXTURES.md §1)
+# Iceberg-shaped input table + geo-metadata companions (FIXTURES.md §1)
 IMAGES = StructType(
     [
         StructField("image_id", StringType(), False),
@@ -74,7 +74,7 @@ CATEGORIES = StructType(
 )
 
 # fused kernel output (tile rows + annotation rows, SURVEY.md §3.2 ⑩-㉓).
-# Arrow-payload-trimmed (VERDICT r06 #1): at 1M annotations the kernel
+# Arrow-payload-trimmed: at 1M annotations the kernel
 # stage spent ~75% of its slot time outside the kernel body, dominated
 # by serializing the result back to the JVM. Derivable columns stay
 # JVM-side — tile_name = concat_ws("_", col_off, row_off, width,

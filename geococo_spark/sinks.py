@@ -1,6 +1,6 @@
 """Table sinks — Iceberg when a runtime is present, parquet otherwise.
 
-``BASELINE.json`` input_hint names Iceberg-shaped tables. This container
+The engine's input and output are Iceberg-shaped tables. This container
 has no iceberg-spark runtime jar, no pyiceberg, and no network to fetch
 one (probed round 2: Maven unreachable), so the engine reads/writes
 parquet through the same DataFrame API. This module is the seam: every
@@ -82,8 +82,8 @@ def write_images_bucketed(
     buckets: int | None = None,
     table: str = "geococo_images_bucketed",
 ) -> str:
-    """Write the images table as the PRODUCTION bucketed store
-    (VERDICT r05 #6): ``bucketBy(image_id)`` + in-bucket sort, so every
+    """Write the images table as the PRODUCTION bucketed store:
+    ``bucketBy(image_id)`` + in-bucket sort, so every
     downstream append's kernel cogroup reads the buckets IN PLACE — the
     image bytes (the dominant payload at 100 TB) never enter an
     exchange (plan-proven by tests/test_pipeline.py::

@@ -131,7 +131,7 @@ def stage_images_parquet(
     A local-relation DataFrame re-ships its rows from the driver through
     py4j on EVERY action — benchmarks (and anything image-scale) must go
     through a real columnar table, which is also the engine's actual
-    input shape (Iceberg-like, BASELINE.json input_hint). Generation is
+    input shape (Iceberg-like tables). Generation is
     executor-side (:func:`images_df_dist`) with one range-slice per
     output file, so no shuffle and no driver bottleneck."""
     import os

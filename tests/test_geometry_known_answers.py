@@ -10,7 +10,8 @@ against another fast path of the engine:
 - ``all_touched`` rasterization against a per-pixel loop that burns a
   pixel when its center lies inside the polygon (even-odd) or any edge
   meets the closed pixel square;
-- ring simplicity, box x polygon intersection and polygon-box distance
+- polygon area with holes, ring simplicity, box x polygon intersection
+  and polygon-box distance
   (single and batched) on polygons with notches, holes and slanted edges;
 - the WKB byte layout (OGC simple features, little-endian) of the encoder.
 """
@@ -197,10 +198,32 @@ def test_ring_is_simple(r, expected):
     assert predicates.ring_is_simple(r) is expected
 
 
-# --- box x polygon: intersection and distance -----------------------------------
+# --- shapes of the area and box cases -------------------------------------------
 L_SHAPE = [ring((0, 0), (6, 0), (6, 2), (2, 2), (2, 6), (0, 6))]
 HOLED = [box_ring(0, 0, 10, 10), box_ring(3, 3, 7, 7)]
 TRIANGLE = [ring((0, 0), (4, 0), (0, 4))]
+
+
+# --- polygon area ----------------------------------------------------------------
+# (rings, hand-computed area): exterior minus every hole, whatever the
+# winding of each ring
+AREA_CASES = [
+    ("l_shape", L_SHAPE, 20.0),
+    ("square_with_one_hole", HOLED, 84.0),
+    (
+        "square_with_two_holes_clockwise",
+        [box_ring(0, 0, 10, 10), box_ring(1, 1, 3, 3)[::-1], box_ring(5, 5, 8, 8)[::-1]],
+        87.0,
+    ),
+]
+
+
+@pytest.mark.parametrize("rings,expected", [c[1:] for c in AREA_CASES], ids=[c[0] for c in AREA_CASES])
+def test_polygon_area(rings, expected):
+    assert predicates.polygon_area(rings) == expected
+
+
+# --- box x polygon: intersection and distance -----------------------------------
 # (polygon, box, hand-computed distance; 0 means the two intersect)
 BOX_CASES = [
     ("l_box_in_notch", L_SHAPE, (3, 3, 5, 5), 1.0),

@@ -23,7 +23,7 @@ class TestKnnFallbackInPipeline:
             spark, state, images, labels, images_dir="d",
             window_bounds=[(100, 100), (256, 256)],
             id_attribute="category_id", name_attribute="class_names",
-            knn_fallback=True, knn_rings=2, metrics=m,
+            knn_fallback=True, metrics=m,
         )
         assigned = {r.label_id: (r.tile_id, r.knn_distance) for r in state.knn_assignments.collect()}
         # the far label (label_idx 4 at x=420) is outside the raster-bound
@@ -37,9 +37,8 @@ class TestKnnFallbackInPipeline:
 
     def test_far_label_assigned_via_ring_escalation(self, spark):
         """A label FAR outside every tile's rings=2 cell neighborhood
-        still gets an assignment: escalation doubles the search rings
-        until it lands (VERDICT r01 #8), and the residual-unassigned
-        metric stays 0."""
+        still gets an assignment: the search ring doubles until it
+        reaches a tile, and the residual-unassigned metric stays 0."""
         # cell_size ~ window width (100); label at x=2000 is ~16 cells
         # away from the last tile column — needs rings >= 16
         centers = [(10, -10), (30, -30), (50, -50), (70, -70), (2000, -40)]
@@ -52,7 +51,7 @@ class TestKnnFallbackInPipeline:
             spark, state, images, labels, images_dir="d",
             window_bounds=[(100, 100), (256, 256)],
             id_attribute="category_id", name_attribute="class_names",
-            knn_fallback=True, knn_rings=2, metrics=m,
+            knn_fallback=True, metrics=m,
         )
         assigned = {
             r.label_id: (r.tile_id, r.knn_distance) for r in state.knn_assignments.collect()
@@ -61,6 +60,29 @@ class TestKnnFallbackInPipeline:
         assert assigned[4][1] > 1500  # distance ~ 2000 - 256 - buffer
         assert m.snapshot()["knn_fallbacks"] == 1
         assert m.snapshot()["knn_unassigned"] == 0
+
+    def test_fallback_pins_nothing(self, spark):
+        """The fallback persists nothing of its own: on the far-label
+        input, an append with it leaves as many new persisted RDDs as an
+        append without it."""
+        sc = spark.sparkContext
+        centers = [(10, -10), (30, -30), (50, -50), (70, -70), (2000, -40)]
+
+        def new_pins(knn_fallback):
+            before = set(sc._jsc.getPersistentRDDs().keys())
+            state = pipeline.append_dataset(
+                spark, CocoState.create(spark),
+                datagen.images_df(spark, 1),
+                datagen.labels_df(spark, centers=centers, buffers=[1, 2, 3, 4, 2]),
+                images_dir="d", window_bounds=[(100, 100), (256, 256)],
+                id_attribute="category_id", name_attribute="class_names",
+                knn_fallback=knn_fallback, metrics=EngineMetrics(spark),
+            )
+            if knn_fallback:
+                assert state.knn_assignments.count() == 1
+            return set(sc._jsc.getPersistentRDDs().keys()) - before
+
+        assert len(new_pins(True)) == len(new_pins(False))
 
     def test_no_unmatched_no_assignments(self, spark):
         labels = datagen.labels_df(spark)

@@ -67,13 +67,6 @@ class TestCells:
         )
         assert len(df.first()["cover"]) == 4
 
-    def test_neighbor_cells(self, spark):
-        df = spark.createDataFrame([Row(cell=5 * cells.CELL_STRIDE + 7)]).withColumn(
-            "nb", cells.neighbor_cells(F.col("cell"), 1)
-        )
-        nb = df.first()["nb"]
-        assert len(nb) == 9 and 5 * cells.CELL_STRIDE + 7 in nb
-
     def test_zorder_locality(self, spark):
         df = spark.createDataFrame([Row(cx=0, cy=0), Row(cx=1, cy=0), Row(cx=512, cy=512)])
         vals = [r.z for r in df.withColumn("z", cells.zorder_key("cx", "cy")).collect()]
@@ -166,7 +159,7 @@ class TestKnn:
         # label sits between tiles; nearest by distance, tie -> lower id
         labels = make_labels(spark, [(35.0, -10.0)], [1.0])
         tiles = make_tiles(spark, 3, 10.0)  # tiles cover x:[0,30]
-        got = knn.knn_assign(labels, tiles, cell_size=10.0, k=1, rings=2).collect()
+        got = knn.knn_assign(labels, tiles, cell_size=10.0, k=1, rings=2, max_rings=2).collect()
         assert len(got) == 1
         r = got[0]
         # nearest tile column is x:[20,30], distance 4.0 (bbox gap 35-1=34 -> 30)
@@ -176,16 +169,16 @@ class TestKnn:
     def test_knn_deterministic_ties(self, spark):
         labels = make_labels(spark, [(10.0, -10.0)], [1.0])
         tiles = make_tiles(spark, 2, 10.0)  # label centered on 4-corner point
-        got = knn.knn_assign(labels, tiles, cell_size=10.0, k=1, rings=1).collect()
+        got = knn.knn_assign(labels, tiles, cell_size=10.0, k=1, rings=1, max_rings=1).collect()
         assert len(got) == 1 and got[0].knn_distance == 0.0
-        again = knn.knn_assign(labels, tiles, cell_size=10.0, k=1, rings=1).collect()
+        again = knn.knn_assign(labels, tiles, cell_size=10.0, k=1, rings=1, max_rings=1).collect()
         assert got[0].tile_id == again[0].tile_id
 
     def test_knn_escalation(self, spark):
-        # escalate=True (the pipeline's fallback shape): a near label
-        # resolves in the first rings=2 pass, a label 7 cells off-grid
-        # only at the doubled level 8, and a label 97 cells out exceeds
-        # max_rings=64 and is dropped
+        # the pipeline's fallback shape: a near label resolves at the
+        # first level rings=2, a label 7 cells off-grid only at the
+        # doubled level 8, and a label 97 cells out exceeds max_rings=64
+        # and gets no row
         labels = make_labels(
             spark, [(35.0, -10.0), (100.0, -10.0), (1000.0, -10.0)], [1.0, 1.0, 1.0]
         )
@@ -193,7 +186,7 @@ class TestKnn:
         got = {
             r.label_id: r
             for r in knn.knn_assign(
-                labels, tiles, cell_size=10.0, k=1, rings=2, escalate=True, max_rings=64
+                labels, tiles, cell_size=10.0, k=1, rings=2, max_rings=64
             ).collect()
         }
         assert got[0].tile_maxx == 30.0
@@ -202,38 +195,31 @@ class TestKnn:
         assert got[1].knn_distance == pytest.approx(69.0, abs=0.2)
         assert 2 not in got
 
-    def test_knn_escalation_durable_checkpoint(self, spark, tmp_path):
-        # VERDICT r06 #3: the escalation loop's per-pass lineage cut can
-        # be a durable parquet round-trip; identical assignments to the
-        # localCheckpoint default, and the pass parquet lands on disk
-        labels = make_labels(
-            spark, [(35.0, -10.0), (100.0, -10.0)], [1.0, 1.0]
-        )
+    def test_knn_jobs_independent_of_depth(self, spark):
+        # one plan: a label found at the first level and a label found
+        # only at the last level (64) run the same number of Spark jobs
         tiles = make_tiles(spark, 3, 10.0)
-        ckdir = str(tmp_path / "knn_ck")
-        got = {
-            (r.label_id, r.tile_id, r.knn_rank): round(r.knn_distance, 9)
-            for r in knn.knn_assign(
-                labels, tiles, cell_size=10.0, k=1, rings=2, escalate=True,
-                max_rings=64, checkpoint_dir=ckdir,
-            ).collect()
-        }
-        want = {
-            (r.label_id, r.tile_id, r.knn_rank): round(r.knn_distance, 9)
-            for r in knn.knn_assign(
-                labels, tiles, cell_size=10.0, k=1, rings=2, escalate=True,
-                max_rings=64,
-            ).collect()
-        }
-        assert got == want
-        import os
+        sc = spark.sparkContext
 
-        assert os.path.exists(os.path.join(ckdir, "knn_rings_2"))
+        def jobs(center):
+            group = f"knn-depth-{center[0]}"
+            sc.setJobGroup(group, group)
+            try:
+                got = knn.knn_assign(
+                    make_labels(spark, [center], [1.0]), tiles, cell_size=10.0,
+                    k=1, rings=2, max_rings=64,
+                ).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(got) == 1
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        assert jobs((35.0, -10.0)) == jobs((600.0, -10.0))
 
     def test_knn_k2(self, spark):
         labels = make_labels(spark, [(5.0, -5.0)], [1.0])
         tiles = make_tiles(spark, 3, 10.0)
-        got = knn.knn_assign(labels, tiles, cell_size=10.0, k=2, rings=2).collect()
+        got = knn.knn_assign(labels, tiles, cell_size=10.0, k=2, rings=2, max_rings=2).collect()
         assert len(got) == 2
         assert sorted(r.knn_rank for r in got) == [1, 2]
 

@@ -212,9 +212,6 @@ def _bbox_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_size=100.0,
         exact=False,
         geometry="label_id",  # unused in bbox-only mode
-        # the grid is a static 100-row relation while labels scale with
-        # sf — broadcast the side we KNOW is small (round 8)
-        broadcast_side="tiles",
     )
 
 
@@ -564,8 +561,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         labels = _hash_star_labels(spark, sf_dir, salt="sjx", extent_cells=10)
         return spatial_join.spatial_join(
-            _tiles_grid(spark), labels, cell_size=100.0,
-            broadcast_side="tiles",
+            _tiles_grid(spark), labels, cell_size=100.0
         ).select("tile_id", "label_id")
 
     def q_spatial_join_star(spark, sf_dir):
@@ -609,8 +605,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
         return spatial_join.spatial_join(
-            _tiles_grid(spark), labels, cell_size=100.0,
-            broadcast_side="tiles",
+            _tiles_grid(spark), labels, cell_size=100.0
         ).select("tile_id", "label_id")
 
     def q_knn_star(spark, sf_dir):
@@ -766,14 +761,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_coco_boxes(spark, sf_dir):
         # VERDICT r03 #5: per-annotation (area, bbox) through the REAL
-        # kernel rasterizer (rasterize_all_touched + bounding_rect, the
-        # exact functions the tile kernel's mask path builds on), pinned
-        # by a closed-form DuckDB oracle. Axis-aligned boxes at
-        # half-pixel offsets (.25/.75 fractional parts): no box edge can
-        # sit on a pixel grid line, so GDAL's all_touched burns exactly
-        # the rectangle of cells [floor(x0)..floor(x1)]x[floor(y0)..
-        # floor(y1)] clipped to the tile — area and bbox are integer
-        # closed-form. (Gridline-exact edges and their corner-exclusion
+        # kernel rasterizer (rasterize_all_touched, a one-label call into
+        # rasterize_all_touched_flat — the burn the tile kernel runs —
+        # + bounding_rect), pinned by a closed-form DuckDB oracle.
+        # Axis-aligned boxes at half-pixel offsets (.25/.75 fractional
+        # parts): no box edge can sit on a pixel grid line, so GDAL's
+        # all_touched burns exactly the rectangle of cells
+        # [floor(x0)..floor(x1)]x[floor(y0)..floor(y1)] clipped to the
+        # tile — area and bbox are integer closed-form.
+        # (Gridline-exact edges and their corner-exclusion
         # rules stay pinned by the rasterize property tests.) This
         # shrinks the pixel-only trust surface to genuinely polygonal
         # masks: join, ids, and box rasterization are all oracle-exact.
@@ -799,7 +795,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             cell_size=100.0,
             exact=False,
             geometry="label_id",  # unused in bbox-only mode
-            broadcast_side="tiles",
         )
 
         @pandas_udf(StringType())
@@ -840,9 +835,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_coco_rle(spark, sf_dir):
         # VERDICT r04 #4: COCO RLE *bytes* through the REAL kernel
-        # encode path (rasterize_all_touched -> column-major set-pixel
-        # indices -> rle.encode_from_indices, the exact composition the
-        # tile kernel runs — tile_kernel.py:258-266), pinned by a
+        # encode path (rasterize_all_touched, i.e. the kernel's
+        # rasterize_all_touched_flat burn -> column-major set-pixel
+        # indices -> rle.encode_from_indices, the per-mask form of the
+        # tile kernel's batched RLE pass), pinned by a
         # closed-form DuckDB oracle that reimplements the public COCO
         # varint spec (6-bit chars offset by 48, counts[i>2] delta-coded
         # vs counts[i-2]) over the clipped-rectangle run structure:
@@ -872,7 +868,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             cell_size=100.0,
             exact=False,
             geometry="label_id",  # unused in bbox-only mode
-            broadcast_side="tiles",
         )
 
         @pandas_udf(StringType())
@@ -914,10 +909,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_coco_stars(spark, sf_dir):
         # Round 5: the pixel trust surface extended from axis-aligned
         # boxes (q_coco_boxes/q_coco_rle closed forms) to genuinely
-        # CONCAVE polygons: the REAL all_touched rasterizer (scanline
-        # fill + boundary supercover, the exact composition behind every
-        # kernel mask — rasterize.py) runs on 8-vertex star polygons and
-        # its area, bbox AND COCO RLE bytes are pinned by a DuckDB
+        # CONCAVE polygons: the REAL all_touched rasterizer
+        # (rasterize_all_touched_flat's scanline fill + boundary
+        # supercover, the burn behind every kernel mask) runs on
+        # 8-vertex star polygons and its area, bbox AND COCO RLE bytes
+        # are pinned by a DuckDB
         # oracle that re-implements the same fill/supercover formulas
         # from scratch in SQL (crossing pairing via window functions,
         # Liang-Barsky row clipping, run detection via lag, the public
@@ -953,7 +949,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             cell_size=100.0,
             exact=False,
             geometry="label_id",  # unused in bbox-only mode
-            broadcast_side="tiles",
         )
 
         @pandas_udf(StringType())
@@ -1032,7 +1027,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             cell_size=100.0,
             exact=False,
             geometry="label_id",  # unused in bbox-only mode
-            broadcast_side="tiles",
         )
 
         @pandas_udf(StringType())
@@ -1532,12 +1526,11 @@ def _knn_fallback_oracle_sql() -> str:
     search's drop semantics."""
     e = _hashstar_exprs("knf", 40, _hash60_duck)
     return f"""
-WITH {_star_scored_sql(e["px"], e["py"], s_expr=e["s"], t_expr=e["t"])},
-cand AS (SELECT label_id, tile_id, dist_raw FROM scored WHERE cheb <= 2),
+WITH {_star_scored_sql(e["px"], e["py"], s_expr=e["s"], t_expr=e["t"], max_cheb=2)},
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY label_id
                                ORDER BY dist_raw ASC, tile_id ASC) AS rn
-  FROM cand)
+  FROM scored)
 SELECT label_id, tile_id, round(dist_raw, 6) AS knn_distance
 FROM ranked WHERE rn = 1
 """
@@ -1548,6 +1541,7 @@ def _star_scored_sql(
     py_expr: str,
     s_expr: str = _S,
     t_expr: str | None = None,
+    max_cheb: int | None = None,
 ) -> str:
     """Shared WITH-body (tiles ... scored): for every (star label, tile)
     pair, the exact polygon-to-box distance ``dist_raw`` (0.0 when
@@ -1560,7 +1554,9 @@ def _star_scored_sql(
     midpoint exactly as cells.centroid_cell does —
     floor((((px-s)+(px+s))/2)/100) — not from px directly, so the cell
     arithmetic matches the engine bit-for-bit even when (px-s)+(px+s)
-    rounds away from 2*px."""
+    rounds away from 2*px. With ``max_cheb`` only the pairs with
+    ``cheb <= max_cheb`` are scored: the distance is per pair, so the
+    filter commutes with the scoring and only skips work."""
     tcol = f",\n         CAST({t_expr} AS DOUBLE) AS t" if t_expr else ""
     tpass = ", st.t" if t_expr else ""
     dxl = "[1.0, t, 0.0, -t, -1.0, -t, 0.0, t]" if t_expr else _STAR_DX
@@ -1575,6 +1571,7 @@ def _star_scored_sql(
         if t_expr
         else "CAST(floor(st.py / 100.0) AS BIGINT)"
     )
+    cheb_filter = "" if max_cheb is None else f"\n  WHERE cheb <= {int(max_cheb)}"
     return f"""tiles AS ({_TILES_SQL}),
 stars AS (
   SELECT c_custkey AS label_id,
@@ -1594,7 +1591,7 @@ pairs AS (
                   {ccx} - (t.ti + 1),
                   -(t.tj + 1) - {ccy},
                   {ccy} + t.tj) AS cheb
-  FROM tiles t CROSS JOIN stars st),
+  FROM tiles t CROSS JOIN stars st{cheb_filter}),
 edges AS (
   SELECT p.*, e.k, c.c,
          px + s * ({dxl})[e.k + 1] AS x0,

@@ -17,7 +17,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StringType, StructField, StructType, TimestampType
+from pyspark.sql.types import StructType, TimestampType
 
 from geococo_spark import schemas
 
@@ -40,9 +40,6 @@ def state_table(spark: SparkSession, rows: list[tuple], schema: StructType) -> D
             values = [v.astimezone(timezone.utc) if v is not None else None for v in values]
         arrays.append(pa.array(values, type=af.type))
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
-
-
-_FILE_NAMES = StructType([StructField("file_name", StringType(), False)])
 
 
 def bump_version(version: str, bump_method: str) -> str:
@@ -519,73 +516,6 @@ class CocoState:
         )
 
     # ---------- sources / version bumps (J4/X3) ----------
-
-    def register_source(self, file_name: str, date_captured: datetime | None) -> int:
-        """add_source equivalent (geococo/coco_models.py:39-54): reuse id
-        on filename match (-> patch bump) else append (-> minor bump).
-        Returns the source id.
-
-        The match is a distributed filtered lookup returning at most one
-        row — never a driver dict of the whole sources dimension (at
-        10^6+ rasters that dict was an O(#sources) driver object). The
-        pipeline itself uses register_sources_df.
-        """
-        row = self.sources.filter(F.col("file_name") == file_name).select("id").first()
-        if row is not None:
-            self.info["version"] = bump_version(self.info["version"], "patch")
-            return int(row["id"])
-        new_id = self._known_count("sources", self.sources) + 1
-        spark = self.sources.sparkSession
-        new_row = state_table(spark, [(new_id, file_name, date_captured)], schemas.COCO_SOURCES)
-        self.sources = self.sources.unionByName(new_row)
-        self.cached_counts["sources"] = new_id
-        self.info["version"] = bump_version(self.info["version"], "minor")
-        return new_id
-
-    def register_sources(
-        self, file_names: list[str], date_captured: datetime | None
-    ) -> dict[str, int]:
-        """Batched add_source preserving per-source bump order (patch for
-        seen, minor for new — geococo/coco_models.py:39-54). Returns
-        file_name -> source id.
-
-        Only the INCOMING names' matches are collected (a semi-join
-        bounded by ``len(file_names)`` — a list the caller already holds
-        on the driver), never the whole sources dimension. The
-        distributed pipeline path is register_sources_df.
-        """
-        if not file_names:
-            return {}
-        spark = self.sources.sparkSession
-        incoming = state_table(
-            spark, [(fn,) for fn in dict.fromkeys(file_names)], _FILE_NAMES
-        )
-        matched = {
-            r["file_name"]: int(r["id"])
-            for r in self.sources.join(F.broadcast(incoming), "file_name", "left_semi")
-            .select("file_name", "id")
-            .collect()
-        }
-        n_existing = self._known_count("sources", self.sources)
-        out: dict[str, int] = {}
-        new_rows = []
-        next_id = n_existing + 1
-        for fn in file_names:
-            if fn in matched:
-                self.info["version"] = bump_version(self.info["version"], "patch")
-                out[fn] = matched[fn]
-            else:
-                self.info["version"] = bump_version(self.info["version"], "minor")
-                out[fn] = next_id
-                new_rows.append((next_id, fn, date_captured))
-                matched[fn] = next_id
-                next_id += 1
-        if new_rows:
-            self.sources = self.sources.unionByName(
-                state_table(spark, new_rows, schemas.COCO_SOURCES)
-            )
-            self.cached_counts["sources"] = next_id - 1
-        return out
 
     def register_sources_df(
         self,

@@ -11,6 +11,12 @@ The affine transform follows the GDAL/rasterio convention
 ``x = a*col + b*row + c`` / ``y = d*col + e*row + f`` with ``b = d = 0``
 (axis-aligned north-up rasters — the only kind the reference fixtures
 use: ``from_origin(0, 0, 1, 1)``, reference tests/conftest.py:52).
+
+There is one fast burn, :func:`rasterize_all_touched_flat` (a CSR batch
+of labels, the tile kernel's call); :func:`rasterize_all_touched` is its
+one-label wrapper. The scalar pair :func:`_pip_even_odd` (fill) and
+:func:`_mark_edge_supercover` (outline) are the reference the property
+tests check the burn against.
 """
 
 from __future__ import annotations
@@ -102,56 +108,6 @@ def _mark_edge_supercover(mask: np.ndarray, x0: float, y0: float, x1: float, y1:
                 mask[r, cc] = True
 
 
-def _scanline_fill(mask: np.ndarray, rings_px: list[np.ndarray], minr: int, maxr: int) -> None:
-    """Even-odd interior fill via scanline crossings — identical cells to
-    the pixel-center PIP test (kept as the property-test oracle) but
-    O(edges x rows) instead of O(edges x rows x cols): the all-pairs
-    broadcast in ``_pip_even_odd`` moved ~300KB per label through memory,
-    which saturated shared cache/DRAM under 32-way execution.
-
-    A center (c+0.5, r+0.5) is inside iff the count of edge crossings
-    strictly right of it is odd; with the row's crossings sorted that is
-    exactly the spans [xs[2k], xs[2k+1]) (closed rings cross any
-    horizontal line an even number of times under the strict-> rule).
-    """
-    nrows, ncols = mask.shape
-    rows = np.arange(minr, maxr + 1)
-    if rows.size == 0 or not rings_px:
-        return
-    py = rows + 0.5
-    e0 = np.concatenate([r[:-1] for r in rings_px])
-    e1 = np.concatenate([r[1:] for r in rings_px])
-    y0 = e0[:, 1][:, None]
-    y1 = e1[:, 1][:, None]
-    x0 = e0[:, 0][:, None]
-    x1 = e1[:, 0][:, None]
-    cond = (y0 > py) != (y1 > py)
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
-    eidx, ridx = np.nonzero(cond)
-    if eidx.size == 0:
-        return
-    xs = xint[eidx, ridx]
-    order = np.lexsort((xs, ridx))
-    ridx = ridx[order]
-    xs = xs[order]
-    gidx = np.arange(len(ridx))
-    row_change = np.empty(len(ridx), dtype=bool)
-    row_change[0] = True
-    row_change[1:] = ridx[1:] != ridx[:-1]
-    row_start = np.maximum.accumulate(np.where(row_change, gidx, 0))
-    is_start = ((gidx - row_start) % 2) == 0
-    xstart = xs[is_start]
-    xend = xs[~is_start]
-    rr = ridx[is_start] + minr
-    c0 = np.maximum(np.ceil(xstart - 0.5).astype(np.int64), 0)
-    c1 = np.minimum(np.ceil(xend - 0.5).astype(np.int64) - 1, ncols - 1)
-    counts = np.maximum(c1 - c0 + 1, 0)
-    sidx, cols = _expand_ranges(c0, counts)
-    if sidx.size:
-        mask.flat[rr[sidx] * ncols + cols] = True
-
-
 def _expand_ranges(starts: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(starts, counts) -> (parent_index, start+offset) flat expansion.
 
@@ -175,80 +131,13 @@ def _expand_ranges(starts: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, 
     return parent, vals
 
 
-def _supercover_mark_all(mask: np.ndarray, rings_px: list[np.ndarray]) -> None:
-    """Vectorized boundary supercover: marks every cell any ring edge
-    passes through, identical semantics to the scalar
-    :func:`_mark_edge_supercover` (kept as the equivalence oracle) but
-    one numpy pass over ALL edges — the per-edge Python loop was ~35% of
-    the tile kernel's core-seconds and, being interpreter-bound, inflated
-    worst under 32-way core contention.
-    """
-    nrows, ncols = mask.shape
-    e0 = np.concatenate([r[:-1] for r in rings_px])
-    e1 = np.concatenate([r[1:] for r in rings_px])
-    x0, y0 = e0[:, 0], e0[:, 1]
-    x1, y1 = e1[:, 0], e1[:, 1]
-    ylo = np.minimum(y0, y1)
-    yhi = np.maximum(y0, y1)
-    horiz_grid = (ylo == yhi) & (ylo == np.floor(ylo))
-    with np.errstate(invalid="ignore"):
-        r_lo = np.floor(ylo).astype(np.int64)
-        r_hi = np.floor(yhi).astype(np.int64)
-    r_hi = np.where((yhi == r_hi) & (r_hi > r_lo), r_hi - 1, r_hi)
-    # row range per edge: horizontal-on-gridline edges touch the two
-    # adjacent rows (unclamped here; clipped after expansion like the
-    # scalar loop's in-range check); others use the clamped band range
-    starts = np.where(horiz_grid, r_lo - 1, np.maximum(r_lo, 0))
-    ends = np.where(horiz_grid, r_lo, np.minimum(r_hi, nrows - 1))
-    counts = np.maximum(ends - starts + 1, 0)
-    eidx, rows = _expand_ranges(starts, counts)
-    inr = (rows >= 0) & (rows < nrows)
-    eidx, rows = eidx[inr], rows[inr]
-    if eidx.size == 0:
-        return
-
-    ex0, ey0 = x0[eidx], y0[eidx]
-    ex1 = x1[eidx]
-    dx = (x1 - x0)[eidx]
-    dy = (y1 - y0)[eidx]
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        t0 = (rows - ey0) / dy
-        t1 = (rows + 1 - ey0) / dy
-    tlo = np.maximum(np.minimum(t0, t1), 0.0)
-    thi = np.minimum(np.maximum(t0, t1), 1.0)
-    flat_dy = dy == 0
-    keep = flat_dy | (thi >= tlo)
-    # flat edges take x1 directly, NOT x0 + dx: recomputing the endpoint
-    # through dx re-rounds (e.g. x0=-1, x1=1.4e-45 gives dx=1.0 exactly
-    # and x0+dx=0.0, collapsing the span onto the grid line) — the
-    # scalar reference uses the endpoints verbatim, so must we
-    xa = np.where(flat_dy, ex0, ex0 + tlo * dx)
-    xb = np.where(flat_dy, ex1, ex0 + thi * dx)
-    rows, xa, xb = rows[keep], xa[keep], xb[keep]
-    if rows.size == 0:
-        return
-
-    clo = np.minimum(xa, xb)
-    chi = np.maximum(xa, xb)
-    with np.errstate(invalid="ignore"):
-        c_lo = np.floor(clo).astype(np.int64)
-        c_hi = np.floor(chi).astype(np.int64)
-    c_hi = np.where((chi == c_hi) & (c_hi > c_lo), c_hi - 1, c_hi)
-    vert_grid = (clo == chi) & (clo == np.floor(clo))
-    cstarts = np.where(vert_grid, c_lo - 1, np.maximum(c_lo, 0))
-    cends = np.where(vert_grid, c_lo, np.minimum(c_hi, ncols - 1))
-    ccounts = np.maximum(cends - cstarts + 1, 0)
-    ridx, cols = _expand_ranges(cstarts, ccounts)
-    inc = (cols >= 0) & (cols < ncols)
-    ridx, cols = ridx[inc], cols[inc]
-    if ridx.size:
-        mask.flat[rows[ridx] * ncols + cols] = True
-
-
 def rasterize_all_touched(
     rings: list[np.ndarray], transform: Affine, out_shape: tuple[int, int]
 ) -> np.ndarray:
-    """Burn polygon rings onto a pixel grid, all_touched semantics.
+    """Burn one label's polygon rings onto a pixel grid, all_touched semantics.
+
+    A one-label call into :func:`rasterize_all_touched_flat`, the burn
+    the tile kernel runs; this wrapper only hides the CSR layout.
 
     :param rings: world-coordinate rings (flat list; even-odd fill)
     :param transform: affine (a, b, c, d, e, f) of the *target grid*
@@ -259,90 +148,18 @@ def rasterize_all_touched(
     :return: 2-D bool mask, same contract as reference mask_label
         (geococo/utils.py:21-37)
     """
-    nrows, ncols = out_shape
-    mask = np.zeros((nrows, ncols), dtype=bool)
-    if not rings:
-        return mask
     rings_px = world_to_pixel(rings, transform)
-    allpts = np.vstack(rings_px)
-    minc = max(int(np.floor(allpts[:, 0].min())), 0)
-    maxc = min(int(np.ceil(allpts[:, 0].max())), ncols - 1)
-    minr = max(int(np.floor(allpts[:, 1].min())), 0)
-    maxr = min(int(np.ceil(allpts[:, 1].max())), nrows - 1)
-    if minc > maxc or minr > maxr:
-        return mask
-
-    # pass 1: interior fill — pixel centers inside the polygon
-    # (vectorized scanline; _pip_even_odd kept as the equivalence oracle)
-    _scanline_fill(mask, rings_px, minr, maxr)
-
-    # pass 2: boundary supercover — every cell an edge passes through
-    # (vectorized over all edges; _mark_edge_supercover is the scalar
-    # reference implementation, kept as the property-test oracle)
-    _supercover_mark_all(mask, rings_px)
+    pts = np.concatenate(rings_px) if rings_px else np.empty((0, 2))
+    ring_starts = np.concatenate([[0], np.cumsum([len(r) for r in rings_px])])
+    (mask,) = rasterize_all_touched_flat(
+        np.ascontiguousarray(pts[:, 0]),
+        np.ascontiguousarray(pts[:, 1]),
+        ring_starts.astype(np.int64),
+        np.array([0, len(rings_px)], dtype=np.int64),
+        np.array([out_shape[0]]),
+        np.array([out_shape[1]]),
+    )
     return mask
-
-
-def rasterize_all_touched_many(
-    rings_px_per_label: list[list[np.ndarray]],
-    out_shapes: list[tuple[int, int]],
-) -> list[np.ndarray]:
-    """Batched :func:`rasterize_all_touched` over many small labels —
-    pixel-identical (property-pinned), one numpy pass for all labels.
-
-    Motivation (round-5 within-kernel phase profile): rasterization is
-    79% of tile-kernel core-seconds, and the per-label call is FIXED
-    numpy overhead, not arithmetic — 223 us for 32 edges on a 14x14
-    patch (~40 tiny-array numpy calls), where the same work batched
-    across an image's ~10^2-10^3 labels pays that overhead once. Takes
-    *pixel-space* rings (the caller converts with each label's own
-    patch transform, keeping every float op bit-identical to the
-    single-label path) and each label's (rows, cols) patch shape.
-
-    Fill crossings are generated per edge over a widened candidate row
-    window and then filtered by the EXACT dense-path predicate
-    ``(y0 > py) != (y1 > py)`` — the crossing set, xint values, sort
-    order and span arithmetic are therefore bit-identical to
-    :func:`_scanline_fill`; the supercover is :func:`_supercover_mark_all`
-    with per-edge grid bounds. All masks live in one flat buffer;
-    returned arrays are per-label views.
-    """
-    n = len(rings_px_per_label)
-    nrows_l = np.empty(n, dtype=np.int64)
-    ncols_l = np.empty(n, dtype=np.int64)
-    minr_l = np.zeros(n, dtype=np.int64)
-    maxr_l = np.zeros(n, dtype=np.int64)
-    ex0, ey0, ex1, ey1, elab = [], [], [], [], []
-    for i, (rings_px, (nr, nc)) in enumerate(zip(rings_px_per_label, out_shapes)):
-        nrows_l[i], ncols_l[i] = nr, nc
-        if not rings_px:
-            continue
-        allpts = np.vstack(rings_px)
-        minc = max(int(np.floor(allpts[:, 0].min())), 0)
-        maxc = min(int(np.ceil(allpts[:, 0].max())), nc - 1)
-        minr = max(int(np.floor(allpts[:, 1].min())), 0)
-        maxr = min(int(np.ceil(allpts[:, 1].max())), nr - 1)
-        if minc > maxc or minr > maxr:
-            continue  # same early-out as the single-label path
-        minr_l[i], maxr_l[i] = minr, maxr
-        e0 = np.concatenate([r[:-1] for r in rings_px])
-        e1 = np.concatenate([r[1:] for r in rings_px])
-        ex0.append(e0[:, 0])
-        ey0.append(e0[:, 1])
-        ex1.append(e1[:, 0])
-        ey1.append(e1[:, 1])
-        elab.append(np.full(len(e0), i, dtype=np.int64))
-    if elab:
-        x0 = np.concatenate(ex0)
-        y0 = np.concatenate(ey0)
-        x1 = np.concatenate(ex1)
-        y1 = np.concatenate(ey1)
-        lab = np.concatenate(elab)
-    else:
-        x0 = y0 = x1 = y1 = np.empty(0, dtype=np.float64)
-        lab = np.empty(0, dtype=np.int64)
-    masks, _, _ = _burn_label_edges(x0, y0, x1, y1, lab, nrows_l, ncols_l, minr_l, maxr_l)
-    return masks
 
 
 def rasterize_all_touched_flat(
@@ -354,50 +171,36 @@ def rasterize_all_touched_flat(
     ncols_l: np.ndarray,
     return_pixels: bool = False,
 ):
-    """Fully-vectorized :func:`rasterize_all_touched_many` over the CSR
-    layout of :func:`geococo_spark.geometry.wkb.decode_batch` — no
-    per-label Python at all (the ``_many`` per-label assembly loop —
-    vstack + bounds + edge concat — was the residual ~40 us/label after
-    round 5 batched the burn itself).
+    """Burn a batch of labels, each onto its own patch, in one numpy pass.
 
-    With ``return_pixels=True`` returns
-    ``(masks, pix_lab, pix_row, pix_col)`` where the ``pix_*`` arrays
-    list every SET pixel of every label mask, sorted by
-    ``(label, col, row)`` — i.e. column-major within each label, the
-    order COCO RLE wants — extracted with one ``nonzero`` over the
-    shared mask buffer (the kernel's per-(tile,label) ``nonzero`` calls
-    were half its core-seconds).
+    The input is the CSR layout of
+    :func:`geococo_spark.geometry.wkb.decode_batch`: ``px``/``py`` are
+    every vertex's continuous pixel coordinates in label-major,
+    ring-major, point-major order; ``ring_starts`` (R+1) /
+    ``label_ring_starts`` (L+1) are the offsets; ``nrows_l`` /
+    ``ncols_l`` each label's patch shape. There is no per-label Python:
+    per-call numpy overhead, not arithmetic, dominated a per-label burn.
 
-    ``px``/``py`` are every vertex's continuous pixel coordinates in
-    label-major, ring-major, point-major order; ``ring_starts`` (R+1) /
-    ``label_ring_starts`` (L+1) are the CSR offsets; ``nrows_l`` /
-    ``ncols_l`` each label's patch shape. Pixel-identical to ``_many``
-    (property-pinned): per-label bounds via segmented reduceat are the
-    same float min/max; the bbox early-out is applied in *clamped float*
-    space (so far-out-of-patch labels never hit an int64 cast, same
-    guarantee as ``_many``'s Python-int path); edge order is ascending
-    point order = ``_many``'s concatenation order, so the stable fill
-    lexsort sees identical sequences. A label with an empty ring list
-    yields an all-zero mask (``_many``'s ``if not rings_px`` skip).
+    Per label the result is the scalar composition the property tests
+    compare it with: the bbox early-out (applied in *clamped float*
+    space, so far-out-of-patch labels never hit an int64 cast), the
+    pixel-centre even-odd fill of :func:`_pip_even_odd` over the bbox
+    rows, and :func:`_mark_edge_supercover` over every edge. A label
+    with an empty ring list yields an all-zero mask.
+
+    Returns the list of (nrows, ncols) bool masks. With
+    ``return_pixels=True`` returns ``(masks, pix_lab, pix_row, pix_col)``
+    where the ``pix_*`` arrays list every SET pixel of every label mask,
+    sorted by ``(label, col, row)`` — i.e. column-major within each
+    label, the order COCO RLE wants — extracted with one ``nonzero``
+    over the shared mask buffer (the kernel's per-(tile,label)
+    ``nonzero`` calls were half its core-seconds).
     """
     nrows_l = np.ascontiguousarray(nrows_l, dtype=np.int64)
     ncols_l = np.ascontiguousarray(ncols_l, dtype=np.int64)
     n = len(nrows_l)
     minr_l = np.zeros(n, dtype=np.int64)
     maxr_l = np.zeros(n, dtype=np.int64)
-    empty_edges = (
-        np.empty(0, dtype=np.float64),
-        np.empty(0, dtype=np.float64),
-        np.empty(0, dtype=np.float64),
-        np.empty(0, dtype=np.float64),
-        np.empty(0, dtype=np.int64),
-    )
-    total_pts = int(ring_starts[-1]) if len(ring_starts) else 0
-    if n == 0 or total_pts == 0:
-        burned = _burn_label_edges(
-            *empty_edges, nrows_l, ncols_l, minr_l, maxr_l, col_major=return_pixels
-        )
-        return _flat_result(burned, ncols_l, return_pixels, nrows_l, return_pixels)
     lab_pt_start = ring_starts[label_ring_starts]  # (L+1,) point offsets per label
     pt_counts = np.diff(lab_pt_start)
     nz = pt_counts > 0
@@ -413,9 +216,9 @@ def rasterize_all_touched_flat(
         cmax[nz] = np.maximum.reduceat(px, starts_nz)
         rmin[nz] = np.minimum.reduceat(py, starts_nz)
         rmax[nz] = np.maximum.reduceat(py, starts_nz)
-    # clamped-float bbox early-out (exactly _many's minc>maxc test; the
-    # clamp bounds every surviving value into [0, shape-1] so the int64
-    # cast below is always safe, even for 1e300-scale coords)
+    # clamped-float bbox early-out: the clamp bounds every surviving
+    # value into [0, shape-1] so the int64 cast below is always safe,
+    # even for 1e300-scale coords
     minc_f = np.maximum(np.floor(cmin), 0.0)
     maxc_f = np.minimum(np.ceil(cmax), ncols_l - 1.0)
     minr_f = np.maximum(np.floor(rmin), 0.0)
@@ -423,78 +226,41 @@ def rasterize_all_touched_flat(
     valid = nz & (minc_f <= maxc_f) & (minr_f <= maxr_f)
     minr_l[valid] = minr_f[valid].astype(np.int64)
     maxr_l[valid] = maxr_f[valid].astype(np.int64)
-    # edges: every point except each ring's last starts one edge to the
-    # next point — ascending index order IS _many's concatenation order
+    # edges: every point except each ring's last starts one edge to
+    # the next point, in ascending point order
     ring_npts = np.diff(ring_starts)
-    keep = np.ones(total_pts, dtype=bool)
+    keep = np.ones(int(ring_starts[-1]), dtype=bool)
     keep[ring_starts[1:][ring_npts > 0] - 1] = False
     kidx = np.nonzero(keep)[0]
     pt_lab = np.repeat(np.arange(n, dtype=np.int64), pt_counts)
     elab = pt_lab[kidx]
     emask = valid[elab]
     kidx = kidx[emask]
-    if kidx.size == 0:
-        burned = _burn_label_edges(
-            *empty_edges, nrows_l, ncols_l, minr_l, maxr_l, col_major=return_pixels
-        )
-        return _flat_result(burned, ncols_l, return_pixels, nrows_l, return_pixels)
-    burned = _burn_label_edges(
-        px[kidx], py[kidx], px[kidx + 1], py[kidx + 1], elab[emask],
-        nrows_l, ncols_l, minr_l, maxr_l, col_major=return_pixels,
-    )
-    return _flat_result(burned, ncols_l, return_pixels, nrows_l, return_pixels)
-
-
-def _flat_result(burned, ncols_l, return_pixels, nrows_l=None, col_major=False):
-    masks, buf, moff = burned
+    edges = (px[kidx], py[kidx], px[kidx + 1], py[kidx + 1], elab[emask])
+    masks, buf, moff = _burn_label_edges(*edges, nrows_l, ncols_l, minr_l, maxr_l)
     if not return_pixels:
         return masks
+    return (masks, *_set_pixels(buf, moff, nrows_l))
+
+
+def _set_pixels(buf: np.ndarray, moff: np.ndarray, nrows_l: np.ndarray):
+    """(label, row, col) of every set pixel of the burn's shared buffer,
+    in (label, col, row) order; row/col as int32 (a patch's shape is
+    bounded by the bool buffer, so both fit) so the kernel's
+    per-candidate passes run in the 4-byte domain."""
     pos = np.nonzero(buf)[0]
-    if pos.size == 0:
-        z = np.empty(0, dtype=np.int64)
-        return masks, z, np.empty(0, dtype=np.int32), np.empty(0, dtype=np.int32)
-    if col_major:
-        # r6 late: the burn wrote each patch COLUMN-major (see
-        # _burn_label_edges col_major), so nonzero's ascending flat
-        # positions ARE the (label, col, row) order the RLE pass wants —
-        # the composite-key sort and its two decodes vanish. The label
-        # of each pixel falls out of block boundaries: moff is sorted
-        # and pos is sorted, so searching the L+1 boundaries in pos
-        # (1200 binary searches) + one repeat replaces the per-pixel
-        # searchsorted (470k binary searches). Measured: extraction
-        # 25 -> ~5 ms on the roofline kernel shape at p=1.
-        counts = np.diff(np.searchsorted(pos, moff))
-        lab = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-        rel = pos - moff[lab]
-        nrl = nrows_l[lab]
-        col = rel // np.maximum(nrl, 1)
-        row = rel - col * nrl
-        return masks, lab, row.astype(np.int32), col.astype(np.int32)
-    lab = np.searchsorted(moff, pos, side="right") - 1
+    # each patch is column-major in buf, so nonzero's ascending flat
+    # positions ARE the (label, col, row) order the RLE pass wants. The
+    # label of each pixel falls out of block boundaries: moff and pos are
+    # both sorted, so searching the L+1 boundaries in pos plus one
+    # repeat replaces a per-pixel searchsorted
+    counts = np.diff(np.searchsorted(pos, moff))
+    lab = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
     rel = pos - moff[lab]
-    ncl = ncols_l[lab]
-    row = rel // ncl
-    col = rel - row * ncl
-    # (label, col, row) order via ONE sort of ONE composite key instead
-    # of a 3-key lexsort (3 stable argsorts + 3 gathers): within a
-    # label's block, col * nrows + row < nrows * ncols, so
-    # moff[lab] + col * nrows + row is unique per set pixel and its
-    # numeric order IS the (lab, col, row) lexicographic order. The
-    # sorted keys decode straight back to (lab, col, row) — no argsort,
-    # no gathers. A DRAM roofline on a 32-core host measured the pixel
-    # extraction at 47 of the raster phase's 86 ms, with the kernel ~60%
-    # bandwidth-bound at 32 procs — traffic, not compute, pays.
-    # row/col return as int32 (patch dims are always < 2^31: the shared
-    # bool buffer itself bounds nrows*ncols per label) so the kernel's
-    # per-candidate passes run in the 4-byte domain.
-    nrl = (moff[lab + 1] - moff[lab]) // np.maximum(ncl, 1)
-    key = np.sort(moff[lab] + col * nrl + row)
-    lab = np.searchsorted(moff, key, side="right") - 1
-    rel = key - moff[lab]
-    nrl = (moff[lab + 1] - moff[lab]) // np.maximum(ncols_l[lab], 1)
+    nrl = nrows_l[lab]
     col = rel // np.maximum(nrl, 1)
     row = rel - col * nrl
-    return masks, lab, row.astype(np.int32), col.astype(np.int32)
+    return lab, row.astype(np.int32), col.astype(np.int32)
 
 
 def _burn_label_edges(
@@ -507,38 +273,29 @@ def _burn_label_edges(
     ncols_l: np.ndarray,
     minr_l: np.ndarray,
     maxr_l: np.ndarray,
-    col_major: bool = False,
-) -> list[np.ndarray]:
-    """Shared batched burn: scanline fill + boundary supercover for a
-    flat edge list labeled by patch index (the tail of the round-5
-    ``rasterize_all_touched_many``, shared with the CSR flat path).
+) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
+    """Scanline fill + boundary supercover for a flat edge list labelled
+    by patch index; returns ``(masks, buf, moff)``.
 
-    With ``col_major=True`` each patch is laid out column-major in the
-    shared buffer (flat index ``col * nrows + row``), so the pixel
-    extraction's nonzero() emits (label, col, row) order natively (r6
-    late — the geometry math is untouched; only the flat index mapping
-    and the mask views change, and patches are small enough, ~1 KB, to
-    stay cache-resident either way). The returned masks are transposed
-    views with identical boolean content and (nrows, ncols) shape.
+    Every patch is laid out column-major in one shared buffer (flat
+    index ``moff[label] + col * nrows + row``), so :func:`_set_pixels`'
+    ``nonzero`` emits (label, col, row) order natively; patches are
+    small (~1 KB) and stay cache-resident either way. The returned
+    masks are transposed views with (nrows, ncols) shape.
     """
     n = len(nrows_l)
     sizes = nrows_l * ncols_l
     moff = np.concatenate([[0], np.cumsum(sizes)])
     buf = np.zeros(int(moff[-1]), dtype=bool)
-    if col_major:
-        masks = [
-            buf[moff[i] : moff[i + 1]].reshape(int(ncols_l[i]), int(nrows_l[i])).T
-            for i in range(n)
-        ]
-    else:
-        masks = [
-            buf[moff[i] : moff[i + 1]].reshape(int(nrows_l[i]), int(ncols_l[i]))
-            for i in range(n)
-        ]
+    masks = [
+        buf[moff[i] : moff[i + 1]].reshape(int(ncols_l[i]), int(nrows_l[i])).T
+        for i in range(n)
+    ]
     if x0.size == 0:
         return masks, buf, moff
 
-    # ---- interior fill (batched _scanline_fill) ----
+    # ---- interior fill: pixel centres inside the rings, as scanline
+    # spans (the crossing rule of _pip_even_odd) ----
     ymin = np.minimum(y0, y1)
     ymax = np.maximum(y0, y1)
     with np.errstate(invalid="ignore"):
@@ -552,7 +309,7 @@ def _burn_label_edges(
         eidx, rows = _expand_ranges(rstart.astype(np.int64), counts)
     if eidx.size:
         py = rows + 0.5
-        cond = (y0[eidx] > py) != (y1[eidx] > py)  # the dense path's test
+        cond = (y0[eidx] > py) != (y1[eidx] > py)  # _pip_even_odd's test
         eidx, rows, py = eidx[cond], rows[cond], py[cond]
     if eidx.size:
         cy0 = y0[eidx]
@@ -562,8 +319,7 @@ def _burn_label_edges(
         rowoff = np.concatenate([[0], np.cumsum(maxr_l - minr_l + 1)])
         gkey = rowoff[slab] + (rows - minr_l[slab])
         # (gkey, xs) order via ONE int64 sort of a rank-composite key
-        # instead of the 2-key lexsort (r6: the pixel-extraction
-        # composite-key lesson transfers — xs is float, so its order is
+        # instead of the 2-key lexsort (xs is float, so its order is
         # encoded as a rank from one value argsort; argsort and lexsort
         # share NaN-last semantics, and equal-xs tie order is invisible
         # downstream because only the VALUES are consumed). The sorted
@@ -609,12 +365,9 @@ def _burn_label_edges(
             c0 = c0f.astype(np.int64)  # garbage only where scounts == 0
         sidx, cols = _expand_ranges(c0, scounts)
         if sidx.size:
-            if col_major:
-                buf[moff[rlab[sidx]] + cols * nrows_l[rlab[sidx]] + rr[sidx]] = True
-            else:
-                buf[moff[rlab[sidx]] + rr[sidx] * ncols_l[rlab[sidx]] + cols] = True
+            buf[moff[rlab[sidx]] + cols * nrows_l[rlab[sidx]] + rr[sidx]] = True
 
-    # ---- boundary supercover (batched _supercover_mark_all) ----
+    # ---- boundary supercover: _mark_edge_supercover over all edges ----
     nrowsE = nrows_l[lab]
     ylo = np.minimum(y0, y1)
     yhi = np.maximum(y0, y1)
@@ -649,6 +402,10 @@ def _burn_label_edges(
     thi = np.minimum(np.maximum(t0, t1), 1.0)
     flat_dy = dy == 0
     keep = flat_dy | (thi >= tlo)
+    # flat edges take x1 directly, NOT x0 + dx: recomputing the endpoint
+    # through dx re-rounds (e.g. x0=-1, x1=1.4e-45 gives dx=1.0 exactly
+    # and x0+dx=0.0, collapsing the span onto the grid line) — the
+    # scalar reference uses the endpoints verbatim, so must we
     xa = np.where(flat_dy, sx0, sx0 + tlo * dx)
     xb = np.where(flat_dy, sx1, sx0 + thi * dx)
     rows, xa, xb = rows[keep], xa[keep], xb[keep]
@@ -673,10 +430,7 @@ def _burn_label_edges(
     inc = (cols >= 0) & (cols < ncolsE[ridx])
     ridx, cols = ridx[inc], cols[inc]
     if ridx.size:
-        if col_major:
-            buf[moff[slab[ridx]] + cols * nrows_l[slab[ridx]] + rows[ridx]] = True
-        else:
-            buf[moff[slab[ridx]] + rows[ridx] * ncolsE[ridx] + cols] = True
+        buf[moff[slab[ridx]] + cols * nrows_l[slab[ridx]] + rows[ridx]] = True
     return masks, buf, moff
 
 

@@ -204,9 +204,8 @@ def run_tile_kernel(
     g_lis = pairs_pdf.loc[geom_mask, "label_idx"].values
     g_wkbs = [bytes(g) for g in pairs_pdf.loc[geom_mask, "geometry"].values]
     # ONE batched WKB parse + projection + burn for ALL of this image's
-    # labels (round 5 batched the burn — rasterize_all_touched_many;
-    # this removes the last per-label Python, the ~40 us/label
-    # decode_rings/vstack/bounds loop, from the raster path)
+    # labels: no per-label Python on the raster path (per-call numpy
+    # overhead, not arithmetic, dominated a per-label burn)
     pts, ring_starts, label_ring_starts, gtypes = wkb.decode_batch(g_wkbs)
     nlab = len(g_wkbs)
     lab_pt_start = ring_starts[label_ring_starts]

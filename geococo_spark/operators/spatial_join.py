@@ -227,7 +227,6 @@ def spatial_join(
     label_count: int | None = None,
     output_geometry: bool = True,
     dedupe: bool = True,
-    broadcast_side: str = "labels",
 ) -> DataFrame:
     """Join tiles to intersecting labels.
 
@@ -250,15 +249,6 @@ def spatial_join(
         False when the caller re-attaches geometry from the labels table
         (pipeline does): the WKB then stays out of the pair rows, which
         shrink ~10x on dense-label workloads
-    :param broadcast_side: which side the caller KNOWS is small (round
-        8, guide §8 "use what you know that the optimizer does not").
-        ``"labels"`` (default — the pipeline shape: tiles ≫ labels)
-        keeps the existing broadcast/salted selection on the label
-        side; ``"tiles"`` broadcasts the tile-cell side instead and
-        streams the labels, for callers joining a huge label table
-        against a small static grid — the label side then never
-        collects to the driver or shuffles at all. Join output rows are
-        identical either way.
     :return: one row per intersecting (tile, label) pair, with all tile
         and label columns
     """
@@ -278,13 +268,6 @@ def spatial_join(
     tile_cells = cells.with_cell_cover(
         tiles, cell_size, "tile_minx", "tile_miny", "tile_maxx", "tile_maxy"
     )
-
-    if broadcast_side == "tiles":
-        joined = lbl_cells.join(F.broadcast(tile_cells), "cell", "inner")
-        joined = joined.filter(_bbox_overlap())
-        return _finish_join(joined, geometry, cell_size, exact, dedupe, output_geometry)
-    elif broadcast_side != "labels":
-        raise ValueError(f"unknown broadcast_side: {broadcast_side!r}")
 
     n_labels = label_count if label_count is not None else labels.count()
 
@@ -314,20 +297,6 @@ def spatial_join(
         joined = tile_salted.join(lbl_salted, ["cell", "salt"], "inner").drop("salt")
 
     joined = joined.filter(_bbox_overlap())
-    return _finish_join(joined, geometry, cell_size, exact, dedupe, output_geometry)
-
-
-def _finish_join(
-    joined: DataFrame,
-    geometry: str,
-    cell_size: float,
-    exact: bool,
-    dedupe: bool,
-    output_geometry: bool,
-) -> DataFrame:
-    """Shared tail of :func:`spatial_join` (both broadcast orientations
-    and the salted path): refpoint dedupe, exact residual, column
-    cleanup."""
     if dedupe:
         # reference-point dedupe (classic SpatialHadoop/Sedona technique):
         # a (tile, label) pair is joined once per SHARED cover cell; keep

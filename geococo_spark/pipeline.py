@@ -697,10 +697,22 @@ def _knn_fallback(
         "label_id", "tile_id", "knn_distance"
     )
     if metrics is not None:
-        n_assigned = assigned.select("label_id").distinct().count()
-        metrics.add("knn_fallbacks", n_assigned)
-        # residual labels with no tile within max_rings
-        metrics.add("knn_unassigned", unmatched.count() - n_assigned)
+        # one action for both counts: every assigned label is unmatched,
+        # so the hits of unmatched ⟕ distinct(assigned ids) are the
+        # fallbacks and the misses the labels with no tile within
+        # max_rings
+        hits = assigned.select("label_id").distinct().withColumn("_hit", F.lit(1))
+        row = (
+            unmatched.select("label_id")
+            .join(hits, "label_id", "left")
+            .agg(
+                F.count("_hit").alias("fallbacks"),
+                (F.count(F.lit(1)) - F.count("_hit")).alias("unassigned"),
+            )
+            .first()
+        )
+        metrics.add("knn_fallbacks", int(row["fallbacks"]))
+        metrics.add("knn_unassigned", int(row["unassigned"]))
     return assigned
 
 

@@ -140,16 +140,6 @@ class TestLocalRelations:
             time.tzset()
         assert after == before
 
-    def test_registered_sources_stay_local(self, spark):
-        state = CocoState.create(spark)
-        ids = state.register_sources(["b.tif", "a.tif"], CAPTURED)
-        assert ids == {"b.tif": 1, "a.tif": 2}
-        assert state.register_source("c.tif", None) == 3
-        assert state.register_source("a.tif", None) == 2
-        assert rdd_scans(state.sources) == []
-        rows = [tuple(r) for r in state.sources.orderBy("id").collect()]
-        assert rows == [(1, "b.tif", CAPTURED), (2, "a.tif", CAPTURED), (3, "c.tif", None)]
-
 
 class TestShardManifestCounts:
     @pytest.mark.parametrize("key", ["image_shards", "annotation_shards"])

@@ -61,6 +61,23 @@ class TestKnnFallbackInPipeline:
         assert m.snapshot()["knn_fallbacks"] == 1
         assert m.snapshot()["knn_unassigned"] == 0
 
+    def test_label_past_max_rings_is_unassigned(self, spark):
+        """A label farther than max_rings=64 cells from every tile gets
+        no assignment and is counted in knn_unassigned, not in
+        knn_fallbacks."""
+        centers = [(10, -10), (30, -30), (50, -50), (70, -70), (30000, -40)]
+        labels = datagen.labels_df(spark, centers=centers, buffers=[1, 2, 3, 4, 2])
+        m = EngineMetrics(spark)
+        state = pipeline.append_dataset(
+            spark, CocoState.create(spark), datagen.images_df(spark, 1), labels,
+            images_dir="d", window_bounds=[(100, 100), (256, 256)],
+            id_attribute="category_id", name_attribute="class_names",
+            knn_fallback=True, metrics=m,
+        )
+        assert state.knn_assignments.count() == 0
+        assert m.snapshot()["knn_fallbacks"] == 0
+        assert m.snapshot()["knn_unassigned"] == 1
+
     def test_fallback_pins_nothing(self, spark):
         """The fallback persists nothing of its own: on the far-label
         input, an append with it leaves as many new persisted RDDs as an

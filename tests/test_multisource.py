@@ -140,17 +140,6 @@ class TestDistributedSourceRegistration:
 
 
 class TestReviewRegressions:
-    def test_register_sources_empty_list(self, spark):
-        """ADVICE r03: register_sources([]) crashed on schema inference
-        from an empty dataset — it must return {} and bump nothing."""
-        from geococo_spark.coco import CocoState
-
-        state = CocoState.create(spark)
-        v0 = state.info["version"]
-        assert state.register_sources([], None) == {}
-        assert state.info["version"] == v0
-        assert state.sources.count() == 0
-
     def test_bulk_bump_matches_looped(self):
         from geococo_spark.coco import bulk_bump, bump_version
         for start in ("0.0.0", "1.2.3", "9.0.7"):
@@ -164,23 +153,25 @@ class TestReviewRegressions:
                     assert bulk_bump(start, n_minor, n_patch) == v
 
     def test_register_source_then_distributed_keeps_ids_unique(self, spark):
-        """Mixing the dict-based register_source with the distributed
-        path must not reuse ids (cache-staleness regression from the
-        round-2 review)."""
+        """Two successive register_sources_df calls must not reuse ids:
+        the second sees the first's row and continues after it
+        (cache-staleness regression from the round-2 review)."""
         from datetime import datetime
         from geococo_spark.coco import CocoState
 
         state = CocoState.create(spark)
-        first = state.register_source("a.tif", None)
-        assert first == 1
-        mapping = {
-            r.file_name: r.id
-            for r in state.register_sources_df(
-                spark.createDataFrame([("a.tif",), ("b.tif",)], ["file_name"]),
-                datetime(2021, 1, 1),
-                incoming_count=2,
-            ).collect()
-        }
-        assert mapping == {"a.tif": 1, "b.tif": 2}  # 'a' reused, 'b' new
+
+        def register(names):
+            return {
+                r.file_name: r.id
+                for r in state.register_sources_df(
+                    spark.createDataFrame([(n,) for n in names], ["file_name"]),
+                    datetime(2021, 1, 1),
+                    incoming_count=len(names),
+                ).collect()
+            }
+
+        assert register(["a.tif"]) == {"a.tif": 1}
+        assert register(["a.tif", "b.tif"]) == {"a.tif": 1, "b.tif": 2}  # 'a' reused, 'b' new
         rows = sorted((r.id, r.file_name) for r in state.sources.collect())
         assert rows == [(1, "a.tif"), (2, "b.tif")]

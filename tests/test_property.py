@@ -124,74 +124,6 @@ def pixel_rings(draw):
     return np.array(pts, dtype=np.float64)
 
 
-class TestScanlineFillEquivalence:
-    @NO_DEADLINE
-    @given(pixel_rings())
-    def test_scanline_matches_pip(self, ring):
-        """Scanline interior fill == pixel-center even-odd PIP, including
-        vertices exactly on pixel-center rows and degenerate rings."""
-        shape = (16, 16)
-        cols = np.arange(shape[1])
-        rows = np.arange(shape[0])
-        cg, rg = np.meshgrid(cols + 0.5, rows + 0.5)
-        pip = rasterize._pip_even_odd(cg.ravel(), rg.ravel(), [ring]).reshape(shape)
-        scan = np.zeros(shape, dtype=bool)
-        rasterize._scanline_fill(scan, [ring], 0, shape[0] - 1)
-        np.testing.assert_array_equal(scan, pip)
-
-
-class TestSupercoverEquivalence:
-    @NO_DEADLINE
-    @given(pixel_rings())
-    def test_vectorized_matches_scalar(self, ring):
-        """The vectorized all-edges supercover must mark EXACTLY the
-        cells the scalar reference marks (incl. grid-aligned edges,
-        degenerate points, and out-of-grid spans)."""
-        shape = (16, 16)
-        scalar = np.zeros(shape, dtype=bool)
-        for i in range(len(ring) - 1):
-            rasterize._mark_edge_supercover(
-                scalar, float(ring[i, 0]), float(ring[i, 1]),
-                float(ring[i + 1, 0]), float(ring[i + 1, 1]),
-            )
-        vector = np.zeros(shape, dtype=bool)
-        rasterize._supercover_mark_all(vector, [ring])
-        np.testing.assert_array_equal(vector, scalar)
-
-    def test_batched_flat_edge_denormal_endpoint(self):
-        """The round-5 denormal regression must also hold through the
-        batched path (it reuses the same endpoint-verbatim rule)."""
-        ring = np.array(
-            [[-1.0, 0.0], [1.40129846e-45, 0.0], [0.0, -1.0], [-1.0, 0.0]]
-        )
-        single = rasterize.rasterize_all_touched(
-            [ring], (1.0, 0.0, 0.0, 0.0, 1.0, 0.0), (16, 16)
-        )
-        (batched,) = rasterize.rasterize_all_touched_many([[ring]], [(16, 16)])
-        np.testing.assert_array_equal(batched, single)
-
-    def test_flat_edge_denormal_endpoint(self):
-        """Round-5 regression (hypothesis find): a flat gridline edge
-        whose endpoint is a denormal (x1=1.4e-45) collapsed to a zero
-        span when the vectorized path recomputed it as x0 + dx (dx
-        rounds to 1.0 exactly); the scalar reference uses x1 verbatim
-        and marks (0,0)."""
-        ring = np.array(
-            [[-1.0, 0.0], [1.40129846e-45, 0.0], [0.0, -1.0], [-1.0, 0.0]]
-        )
-        shape = (16, 16)
-        scalar = np.zeros(shape, dtype=bool)
-        for i in range(len(ring) - 1):
-            rasterize._mark_edge_supercover(
-                scalar, float(ring[i, 0]), float(ring[i, 1]),
-                float(ring[i + 1, 0]), float(ring[i + 1, 1]),
-            )
-        vector = np.zeros(shape, dtype=bool)
-        rasterize._supercover_mark_all(vector, [ring])
-        assert vector[0, 0]
-        np.testing.assert_array_equal(vector, scalar)
-
-
 class TestWkbProperties:
     @NO_DEADLINE
     @given(convex_polygons())
@@ -242,67 +174,6 @@ class TestPredicateProperties:
         assert far > 0
 
 
-class TestBatchedRasterizeEquivalence:
-    """rasterize_all_touched_many (the kernel's one-pass-per-image burn)
-    must be PIXEL-IDENTICAL to per-label rasterize_all_touched — over
-    mixed batches of adversarial rings (gridline-exact coords, degenerate
-    spans, out-of-patch labels, empty ring lists, varying patch shapes)."""
-
-    # pixel-space batch vs world-space singles under an e=+1 identity
-    # transform: world_to_pixel is (x - 0)/1 — bit-exact passthrough
-    _ID = (1.0, 0.0, 0.0, 0.0, 1.0, 0.0)
-
-    @NO_DEADLINE
-    @given(
-        st.lists(
-            st.tuples(
-                st.lists(pixel_rings(), min_size=0, max_size=2),
-                st.tuples(st.integers(1, 20), st.integers(1, 20)),
-            ),
-            min_size=0,
-            max_size=6,
-        )
-    )
-    def test_batched_matches_single(self, labels):
-        rings_lists = [list(rings) for rings, _ in labels]
-        shapes = [shape for _, shape in labels]
-        got = rasterize.rasterize_all_touched_many(rings_lists, shapes)
-        assert len(got) == len(labels)
-        for (rings, shape), batched in zip(labels, got):
-            single = rasterize.rasterize_all_touched(list(rings), self._ID, shape)
-            np.testing.assert_array_equal(batched, single)
-
-    @NO_DEADLINE
-    @given(
-        st.lists(
-            st.tuples(
-                st.floats(-1e6, 1e6),
-                st.floats(-1e6, 1e6),
-                st.floats(-1e6, 1e6),
-                st.floats(-1e6, 1e6),
-            ),
-            min_size=1,
-            max_size=8,
-        )
-    )
-    def test_batched_matches_single_far_coords(self, quads):
-        """Labels far outside the patch (the fill's widened row window
-        casts huge floats to int64 only for zero-count ranges — pin that
-        the results still match the per-label path)."""
-        labels = []
-        for x0, y0, x1, y1 in quads:
-            ring = np.array(
-                [[x0, y0], [x1, y0], [x1, y1], [x0, y0]], dtype=np.float64
-            )
-            labels.append(([ring], (12, 12)))
-        got = rasterize.rasterize_all_touched_many(
-            [r for r, _ in labels], [s for _, s in labels]
-        )
-        for (rings, shape), batched in zip(labels, got):
-            single = rasterize.rasterize_all_touched(rings, self._ID, shape)
-            np.testing.assert_array_equal(batched, single)
-
-
 def _csr_from_ring_lists(rings_lists):
     """Build the decode_batch CSR layout from python ring lists."""
     ring_npts = [len(r) for rl in rings_lists for r in rl]
@@ -317,39 +188,101 @@ def _csr_from_ring_lists(rings_lists):
     return pts, ring_starts, label_ring_starts
 
 
-class TestFlatRasterizeEquivalence:
-    """rasterize_all_touched_flat (the kernel's zero-per-label-Python CSR
-    path) must be pixel-identical to rasterize_all_touched_many over the
-    same adversarial batches — incl. empty ring lists, out-of-patch
-    labels, and far coords that would overflow a naive int64 cast."""
+def _scalar_all_touched(rings_px, shape):
+    """The scalar reference composition for one label: the bbox
+    early-out, the pixel-centre even-odd PIP over the bbox rows and the
+    per-edge supercover loop."""
+    nrows, ncols = shape
+    mask = np.zeros(shape, dtype=bool)
+    if not rings_px:
+        return mask
+    allpts = np.vstack(rings_px)
+    minc = max(int(np.floor(allpts[:, 0].min())), 0)
+    maxc = min(int(np.ceil(allpts[:, 0].max())), ncols - 1)
+    minr = max(int(np.floor(allpts[:, 1].min())), 0)
+    maxr = min(int(np.ceil(allpts[:, 1].max())), nrows - 1)
+    if minc > maxc or minr > maxr:
+        return mask
+    cg, rg = np.meshgrid(np.arange(ncols) + 0.5, np.arange(minr, maxr + 1) + 0.5)
+    inside = rasterize._pip_even_odd(cg.ravel(), rg.ravel(), rings_px)
+    mask[minr : maxr + 1] = inside.reshape(cg.shape)
+    for ring in rings_px:
+        for i in range(len(ring) - 1):
+            rasterize._mark_edge_supercover(
+                mask, float(ring[i, 0]), float(ring[i, 1]),
+                float(ring[i + 1, 0]), float(ring[i + 1, 1]),
+            )
+    return mask
+
+
+def _burn_flat(rings_lists, shapes, return_pixels=False):
+    pts, ring_starts, label_ring_starts = _csr_from_ring_lists(rings_lists)
+    return rasterize.rasterize_all_touched_flat(
+        np.ascontiguousarray(pts[:, 0]),
+        np.ascontiguousarray(pts[:, 1]),
+        ring_starts,
+        label_ring_starts,
+        np.array([s[0] for s in shapes], dtype=np.int64),
+        np.array([s[1] for s in shapes], dtype=np.int64),
+        return_pixels=return_pixels,
+    )
+
+
+def _assert_flat_matches_scalar(rings_lists, shapes):
+    got = _burn_flat(rings_lists, shapes)
+    assert len(got) == len(shapes)
+    for rings, shape, mask in zip(rings_lists, shapes, got):
+        assert mask.shape == tuple(shape)
+        np.testing.assert_array_equal(mask, _scalar_all_touched(rings, shape))
+
+
+def _box_labels(quads, shape=(12, 12)):
+    rings_lists = [
+        [np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y0]], dtype=np.float64)]
+        for x0, y0, x1, y1 in quads
+    ]
+    return rings_lists, [shape] * len(quads)
+
+
+class TestFlatMatchesScalar:
+    """rasterize_all_touched_flat (the kernel's burn) must mark exactly
+    the pixels of the scalar reference composition, label by label —
+    over gridline-exact rings, degenerate spans, out-of-patch labels,
+    and far (1e6) and huge (1e300) coordinates that would overflow a
+    naive int64 cast."""
+
+    # world_to_pixel under this e=+1 identity transform is (x - 0)/1 — a
+    # bit-exact passthrough, so world rings are their own pixel rings
+    _ID = (1.0, 0.0, 0.0, 0.0, 1.0, 0.0)
+
+    @NO_DEADLINE
+    @given(pixel_rings())
+    def test_single_ring_matches_scalar(self, ring):
+        _assert_flat_matches_scalar([[ring]], [(16, 16)])
+
+    @NO_DEADLINE
+    @given(pixel_rings())
+    def test_wrapper_matches_scalar(self, ring):
+        mask = rasterize.rasterize_all_touched([ring], self._ID, (16, 16))
+        np.testing.assert_array_equal(mask, _scalar_all_touched([ring], (16, 16)))
 
     @NO_DEADLINE
     @given(
         st.lists(
             st.tuples(
-                st.lists(pixel_rings(), min_size=0, max_size=2),
-                st.tuples(st.integers(1, 20), st.integers(1, 20)),
+                st.floats(-1e6, 1e6),
+                st.floats(-1e6, 1e6),
+                st.floats(-1e6, 1e6),
+                st.floats(-1e6, 1e6),
             ),
-            min_size=0,
-            max_size=6,
+            min_size=1,
+            max_size=8,
         )
     )
-    def test_flat_matches_many(self, labels):
-        rings_lists = [list(rings) for rings, _ in labels]
-        shapes = [shape for _, shape in labels]
-        pts, ring_starts, label_ring_starts = _csr_from_ring_lists(rings_lists)
-        flat = rasterize.rasterize_all_touched_flat(
-            np.ascontiguousarray(pts[:, 0]),
-            np.ascontiguousarray(pts[:, 1]),
-            ring_starts,
-            label_ring_starts,
-            np.array([s[0] for s in shapes], dtype=np.int64),
-            np.array([s[1] for s in shapes], dtype=np.int64),
-        )
-        many = rasterize.rasterize_all_touched_many(rings_lists, shapes)
-        assert len(flat) == len(many)
-        for a, b in zip(flat, many):
-            np.testing.assert_array_equal(a, b)
+    def test_far_coords_match_scalar(self, quads):
+        """Labels far outside the patch: the fill's widened row window
+        casts huge floats to int64 only for zero-count ranges."""
+        _assert_flat_matches_scalar(*_box_labels(quads))
 
     @NO_DEADLINE
     @given(
@@ -364,36 +297,91 @@ class TestFlatRasterizeEquivalence:
             max_size=8,
         )
     )
-    def test_flat_matches_many_huge_coords(self, quads):
-        """1e300-scale labels: the flat path's clamped-float bbox early-out
-        must skip them without ever casting the raw floor to int64."""
-        rings_lists, shapes = [], []
-        for x0, y0, x1, y1 in quads:
-            ring = np.array(
-                [[x0, y0], [x1, y0], [x1, y1], [x0, y0]], dtype=np.float64
-            )
-            rings_lists.append([ring])
-            shapes.append((12, 12))
-        pts, ring_starts, label_ring_starts = _csr_from_ring_lists(rings_lists)
-        flat = rasterize.rasterize_all_touched_flat(
-            np.ascontiguousarray(pts[:, 0]),
-            np.ascontiguousarray(pts[:, 1]),
-            ring_starts,
-            label_ring_starts,
-            np.array([s[0] for s in shapes], dtype=np.int64),
-            np.array([s[1] for s in shapes], dtype=np.int64),
+    def test_huge_coords_match_scalar(self, quads):
+        """1e300-scale labels: the clamped-float bbox early-out must skip
+        them without ever casting the raw floor to int64."""
+        _assert_flat_matches_scalar(*_box_labels(quads))
+
+
+# mixed batches: empty ring lists, gridline-exact rings, degenerate spans,
+# out-of-patch labels and varying patch shapes
+_mixed_labels = st.lists(
+    st.tuples(
+        st.lists(pixel_rings(), min_size=0, max_size=2),
+        st.tuples(st.integers(1, 20), st.integers(1, 20)),
+    ),
+    min_size=0,
+    max_size=6,
+)
+
+
+class TestFlatRasterizeEquivalence:
+    """The flat burn over a whole mixed batch must match the scalar
+    reference composition label by label."""
+
+    @NO_DEADLINE
+    @given(_mixed_labels)
+    def test_flat_matches_many(self, labels):
+        _assert_flat_matches_scalar(
+            [list(rings) for rings, _ in labels], [shape for _, shape in labels]
         )
-        many = rasterize.rasterize_all_touched_many(rings_lists, shapes)
-        for a, b in zip(flat, many):
-            np.testing.assert_array_equal(a, b)
+
+
+class TestBatchedRasterizeEquivalence:
+    """Burning a batch in one pass must give each label the mask it
+    gets when burnt alone through the one-label wrapper: no pixel may
+    leak between labels of the batch."""
+
+    @NO_DEADLINE
+    @given(_mixed_labels)
+    def test_batched_matches_single(self, labels):
+        got = _burn_flat(
+            [list(rings) for rings, _ in labels], [shape for _, shape in labels]
+        )
+        assert len(got) == len(labels)
+        for (rings, shape), batched in zip(labels, got):
+            single = rasterize.rasterize_all_touched(
+                list(rings), TestFlatMatchesScalar._ID, shape
+            )
+            np.testing.assert_array_equal(batched, single)
+
+
+class TestSupercoverEquivalence:
+    # a flat gridline edge whose endpoint is a denormal (x1=1.4e-45)
+    _DENORMAL_RING = np.array(
+        [[-1.0, 0.0], [1.40129846e-45, 0.0], [0.0, -1.0], [-1.0, 0.0]]
+    )
+
+    def test_flat_edge_denormal_endpoint(self):
+        """Hypothesis find: the denormal-endpoint edge collapsed to a zero
+        span when the burn recomputed it as x0 + dx (dx rounds to 1.0
+        exactly); the scalar reference uses x1 verbatim and marks (0,0)."""
+        ring = self._DENORMAL_RING
+        (mask,) = _burn_flat([[ring]], [(16, 16)])
+        assert mask[0, 0]
+        np.testing.assert_array_equal(mask, _scalar_all_touched([ring], (16, 16)))
+
+    def test_batched_flat_edge_denormal_endpoint(self):
+        """The denormal endpoint must also survive in the middle of a
+        batch, after an empty label and before an ordinary box."""
+        ring = self._DENORMAL_RING
+        box = np.array([[2.0, 2.0], [5.5, 2.0], [5.5, 6.0], [2.0, 2.0]])
+        rings_lists = [[], [ring], [box]]
+        shapes = [(16, 16)] * 3
+        _, mask, _ = _burn_flat(rings_lists, shapes)
+        assert mask[0, 0]
+        single = rasterize.rasterize_all_touched(
+            [ring], TestFlatMatchesScalar._ID, (16, 16)
+        )
+        np.testing.assert_array_equal(mask, single)
+        _assert_flat_matches_scalar(rings_lists, shapes)
 
 
 class TestFlatPixelExtraction:
     """rasterize_all_touched_flat(return_pixels=True) must list exactly
     the set pixels of each mask, sorted (label, col, row) — the order
-    the kernel's RLE pass assumes. Pins the round-6 composite-key sort
-    (one np.sort replacing the 3-key lexsort) against a from-scratch
-    reconstruction."""
+    the kernel's RLE pass assumes — against a from-scratch
+    reconstruction from the masks."""
 
     @NO_DEADLINE
     @given(
@@ -407,16 +395,9 @@ class TestFlatPixelExtraction:
         )
     )
     def test_pixels_match_masks(self, labels):
-        rings_lists = [list(rings) for rings, _ in labels]
-        shapes = [shape for _, shape in labels]
-        pts, ring_starts, label_ring_starts = _csr_from_ring_lists(rings_lists)
-        masks, pl, pr, pc = rasterize.rasterize_all_touched_flat(
-            np.ascontiguousarray(pts[:, 0]),
-            np.ascontiguousarray(pts[:, 1]),
-            ring_starts,
-            label_ring_starts,
-            np.array([s[0] for s in shapes], dtype=np.int64),
-            np.array([s[1] for s in shapes], dtype=np.int64),
+        masks, pl, pr, pc = _burn_flat(
+            [list(rings) for rings, _ in labels],
+            [shape for _, shape in labels],
             return_pixels=True,
         )
         expect = []

@@ -310,6 +310,167 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# pixel fixtures: labels the q_coco_* queries burn onto 100x100 tiles
+# --------------------------------------------------------------------------
+
+_BOX_COLS = ["label_minx", "label_miny", "label_maxx", "label_maxy"]
+_STAR_COLS = ["px", "py", "s"]
+_STAR_DXY = (
+    (1.0, 0.35, 0.0, -0.35, -1.0, -0.35, 0.0, 0.35),
+    (0.0, 0.35, 1.0, 0.35, 0.0, -0.35, -1.0, -0.35),
+)
+
+
+def _half_pixel_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label boxes with .25/.75 fractional extents (no edge on a grid line)."""
+    return _t(spark, sf_dir, "customer").repartition(
+        spark.sparkContext.defaultParallelism, "c_custkey"
+    ).selectExpr(
+        "c_custkey AS label_id",
+        f"CAST({_PX} - ({_S}) + 0.25 AS DOUBLE) AS label_minx",
+        f"CAST({_PY} - ({_S}) + 0.25 AS DOUBLE) AS label_miny",
+        f"CAST({_PX} + ({_S}) + 0.75 AS DOUBLE) AS label_maxx",
+        f"CAST({_PY} + ({_S}) + 0.75 AS DOUBLE) AS label_maxy",
+    )
+
+
+def _star_centers(spark: SparkSession, sf_dir: str, multi: bool = False) -> DataFrame:
+    """Star centers and sizes with the bbox of one star, or of the two
+    sub-stars of :func:`_multistar_rings` when ``multi``."""
+    # the second sub-star is shifted by 0.35s right and down
+    down, right = ("(0.35 * s) - ", "(0.35 * s) + ") if multi else ("", "")
+    return _t(spark, sf_dir, "customer").repartition(
+        spark.sparkContext.defaultParallelism, "c_custkey"
+    ).selectExpr(
+        "c_custkey AS label_id",
+        f"CAST({_PX} AS DOUBLE) AS px",
+        f"CAST({_PY} AS DOUBLE) AS py",
+        f"CAST({_S} AS DOUBLE) AS s",
+    ).selectExpr(
+        "label_id", "px", "py", "s",
+        "px - s AS label_minx",
+        f"py - {down}s AS label_miny",
+        f"px + {right}s AS label_maxx",
+        "py + s AS label_maxy",
+    )
+
+
+def _closed(xs, ys):
+    """(L, R, P) vertex coordinates -> (L, R, P + 1, 2) closed rings."""
+    import numpy as np
+
+    xy = np.stack([xs, ys], axis=-1)
+    return np.concatenate([xy, xy[:, :, :1]], axis=2)
+
+
+def _box_rings(x0, y0, x1, y1):
+    import numpy as np
+
+    return _closed(np.stack([x0, x1, x1, x0], 1)[:, None], np.stack([y0, y0, y1, y1], 1)[:, None])
+
+
+def _star_rings(cx, cy, s):
+    import numpy as np
+
+    dx, dy = (np.array(d) for d in _STAR_DXY)
+    return _closed((cx[:, None] + s[:, None] * dx)[:, None], (cy[:, None] + s[:, None] * dy)[:, None])
+
+
+def _multistar_rings(cx, cy, s):
+    """Two sub-stars per label, sub-star j at (cx + 0.35s*j, cy - 0.35s*j)."""
+    import numpy as np
+
+    dx, dy = (np.array(d) for d in _STAR_DXY)
+    j = np.array([0.0, 1.0])
+    cxj = cx[:, None] + (0.35 * s)[:, None] * j
+    cyj = cy[:, None] - (0.35 * s)[:, None] * j
+    return _closed(
+        cxj[:, :, None] + s[:, None, None] * dx, cyj[:, :, None] + s[:, None, None] * dy
+    )
+
+
+def _coco_masks(spark: SparkSession, labels: DataFrame, cols: list[str], rings) -> DataFrame:
+    """Every bbox-joined (tile, label) pair of ``labels`` on the 10x10
+    grid of 100x100-pixel tiles, with ``area``, ``bbox`` ("x,y,w,h") and
+    ``rle_counts`` of its all_touched mask and ``ann_id`` in (ti, tj,
+    label_id) order.
+
+    The masks come from the tile kernel's own code: one
+    ``rasterize_all_touched_flat(..., return_pixels=True)`` burn and one
+    ``indices_to_counts_batch`` + ``counts_to_strings_batch`` encode per
+    Arrow batch, with no per-row Python. ``rings(*cols)`` maps the
+    batch's ``cols`` (float64 arrays) to an (L, R, P, 2) block of closed
+    world-coordinate rings, built with the same per-element float ops as
+    a per-label loop would use. Each pair burns a full 100x100 patch
+    (10 KB), so an Arrow batch of n pairs holds n * 10 KB of mask.
+    """
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from geococo_spark.geometry import rasterize, rle
+    from geococo_spark.operators import ids, spatial_join
+
+    @pandas_udf("area long, bbox string, rle_counts string")
+    def _mask_stats(*series):
+        *label_cols, tminx, tmaxy = (v.to_numpy(dtype=np.float64) for v in series)
+        xy = rings(*label_cols)
+        n, n_rings, n_pts, _ = xy.shape
+        # the tile transform (a=1, e=-1, c=tile_minx, f=tile_maxy) applied
+        # as rasterize.world_to_pixel does: (x - c) / a, (y - f) / e
+        px = (xy[..., 0] - tminx[:, None, None]) / 1.0
+        py = (xy[..., 1] - tmaxy[:, None, None]) / -1.0
+        side = np.full(n, 100, dtype=np.int64)
+        _, lab, row, col = rasterize.rasterize_all_touched_flat(
+            px.ravel(),
+            py.ravel(),
+            np.arange(0, n * n_rings * n_pts + 1, n_pts),
+            np.arange(0, n * n_rings + 1, n_rings),
+            side,
+            side,
+            return_pixels=True,
+        )
+        # pixels come sorted (label, col, row): column-major per label
+        starts = np.searchsorted(lab, np.arange(n + 1))
+        counts, cstarts = rle.indices_to_counts_batch(
+            col.astype(np.int64) * 100 + row, starts, side * side
+        )
+        area = np.diff(starts)
+        # rasterize.bounding_rect per label; empty masks stay 0,0,0,0
+        bbox = np.zeros((n, 4), dtype=np.int64)
+        has = area > 0
+        if has.any():
+            first = starts[:-1][has]
+            last = starts[1:][has] - 1
+            rmin = np.minimum.reduceat(row, first)
+            rmax = np.maximum.reduceat(row, first)
+            bbox[has] = np.column_stack(
+                [col[first], rmin, col[last] - col[first] + 1, rmax - rmin + 1]
+            )
+        return pd.DataFrame(
+            {
+                "area": area,
+                "bbox": [f"{x},{y},{w},{h}" for x, y, w, h in bbox.tolist()],
+                "rle_counts": [
+                    r.decode("ascii") for r in rle.counts_to_strings_batch(counts, cstarts)
+                ],
+            }
+        )
+
+    pairs = spatial_join.spatial_join(
+        _tiles_grid(spark),
+        labels,
+        cell_size=100.0,
+        exact=False,
+        geometry="label_id",  # unused in bbox-only mode
+    )
+    stats = pairs.withColumn("m", _mask_stats(*cols, "tile_minx", "tile_maxy")).select(
+        "*", "m.*"
+    )
+    return ids.assign_sequential_ids(stats, ["ti", "tj", "label_id"], "ann_id")
+
+
+# --------------------------------------------------------------------------
 # queries
 # --------------------------------------------------------------------------
 
@@ -760,160 +921,38 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_coco_boxes(spark, sf_dir):
-        # VERDICT r03 #5: per-annotation (area, bbox) through the REAL
-        # kernel rasterizer (rasterize_all_touched, a one-label call into
-        # rasterize_all_touched_flat — the burn the tile kernel runs —
-        # + bounding_rect), pinned by a closed-form DuckDB oracle.
-        # Axis-aligned boxes at half-pixel offsets (.25/.75 fractional
-        # parts): no box edge can sit on a pixel grid line, so GDAL's
+        # per-annotation (area, bbox) of axis-aligned boxes at half-pixel
+        # offsets (.25/.75 fractional parts) through the kernel's burn
+        # and bbox rule (_coco_masks), pinned by a closed-form DuckDB
+        # oracle: no box edge can sit on a pixel grid line, so GDAL's
         # all_touched burns exactly the rectangle of cells
         # [floor(x0)..floor(x1)]x[floor(y0)..floor(y1)] clipped to the
-        # tile — area and bbox are integer closed-form.
-        # (Gridline-exact edges and their corner-exclusion
-        # rules stay pinned by the rasterize property tests.) This
-        # shrinks the pixel-only trust surface to genuinely polygonal
-        # masks: join, ids, and box rasterization are all oracle-exact.
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        from geococo_spark.geometry import rasterize
-        from geococo_spark.operators import spatial_join
-
-        boxes = _t(spark, sf_dir, "customer").repartition(
-            spark.sparkContext.defaultParallelism, "c_custkey"
-        ).selectExpr(
-            "c_custkey AS label_id",
-            f"CAST({_PX} - ({_S}) + 0.25 AS DOUBLE) AS label_minx",
-            f"CAST({_PY} - ({_S}) + 0.25 AS DOUBLE) AS label_miny",
-            f"CAST({_PX} + ({_S}) + 0.75 AS DOUBLE) AS label_maxx",
-            f"CAST({_PY} + ({_S}) + 0.75 AS DOUBLE) AS label_maxy",
-        )
-        pairs = spatial_join.spatial_join(
-            _tiles_grid(spark),
-            boxes,
-            cell_size=100.0,
-            exact=False,
-            geometry="label_id",  # unused in bbox-only mode
-        )
-
-        @pandas_udf(StringType())
-        def _box_mask_stats(minx, miny, maxx, maxy, tminx, tmaxy):
-            # the tile transform the pipeline kernel uses: a=1, e=-1,
-            # c=tile_minx, f=tile_maxy (north-up, 100x100 pixel tiles)
-            out = []
-            for x0, y0, x1, y1, tc, tf in zip(minx, miny, maxx, maxy, tminx, tmaxy):
-                ring = [
-                    [x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0],
-                ]
-                import numpy as np
-
-                mask = rasterize.rasterize_all_touched(
-                    [np.asarray(ring, dtype=np.float64)],
-                    (1.0, 0.0, float(tc), 0.0, -1.0, float(tf)),
-                    (100, 100),
-                )
-                bb = rasterize.bounding_rect(mask)
-                out.append(f"{int(mask.sum())}|{bb[0]},{bb[1]},{bb[2]},{bb[3]}")
-            return pd.Series(out)
-
-        stats = pairs.withColumn(
-            "stats",
-            _box_mask_stats(
-                "label_minx", "label_miny", "label_maxx", "label_maxy",
-                "tile_minx", "tile_maxy",
-            ),
-        )
-        anns = ids.assign_sequential_ids(stats, ["ti", "tj", "label_id"], "ann_id")
-        return anns.select(
-            "tile_id",
-            "label_id",
-            "ann_id",
-            F.split(F.col("stats"), r"\|")[0].cast("long").alias("area"),
-            F.split(F.col("stats"), r"\|")[1].alias("bbox"),
-        )
+        # tile — area and bbox are integer closed-form. (Gridline-exact
+        # edges and their corner-exclusion rules stay pinned by the
+        # rasterize property tests.)
+        anns = _coco_masks(spark, _half_pixel_boxes(spark, sf_dir), _BOX_COLS, _box_rings)
+        return anns.select("tile_id", "label_id", "ann_id", "area", "bbox")
 
     def q_coco_rle(spark, sf_dir):
-        # VERDICT r04 #4: COCO RLE *bytes* through the REAL kernel
-        # encode path (rasterize_all_touched, i.e. the kernel's
-        # rasterize_all_touched_flat burn -> column-major set-pixel
-        # indices -> rle.encode_from_indices, the per-mask form of the
-        # tile kernel's batched RLE pass), pinned by a
-        # closed-form DuckDB oracle that reimplements the public COCO
-        # varint spec (6-bit chars offset by 48, counts[i>2] delta-coded
-        # vs counts[i-2]) over the clipped-rectangle run structure:
+        # COCO RLE *bytes* of the same boxes through the kernel's burn
+        # and batched encoder (_coco_masks), pinned by a closed-form
+        # DuckDB oracle that reimplements the public COCO varint spec
+        # (6-bit chars offset by 48, counts[i>2] delta-coded vs
+        # counts[i-2]) over the clipped-rectangle run structure:
         # leading zeros c0*100+r0, alternating (r1-r0+1)-one-runs and
         # (100-h)-gaps, full-height columns merging into one run. This
         # covers R5 end-to-end (reference analog coco_processing.py:170).
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        from geococo_spark.geometry import rasterize, rle
-        from geococo_spark.operators import spatial_join
-
-        boxes = _t(spark, sf_dir, "customer").repartition(
-            spark.sparkContext.defaultParallelism, "c_custkey"
-        ).selectExpr(
-            "c_custkey AS label_id",
-            f"CAST({_PX} - ({_S}) + 0.25 AS DOUBLE) AS label_minx",
-            f"CAST({_PY} - ({_S}) + 0.25 AS DOUBLE) AS label_miny",
-            f"CAST({_PX} + ({_S}) + 0.75 AS DOUBLE) AS label_maxx",
-            f"CAST({_PY} + ({_S}) + 0.75 AS DOUBLE) AS label_maxy",
-        )
-        pairs = spatial_join.spatial_join(
-            _tiles_grid(spark),
-            boxes,
-            cell_size=100.0,
-            exact=False,
-            geometry="label_id",  # unused in bbox-only mode
-        )
-
-        @pandas_udf(StringType())
-        def _box_rle(minx, miny, maxx, maxy, tminx, tmaxy):
-            out = []
-            for x0, y0, x1, y1, tc, tf in zip(minx, miny, maxx, maxy, tminx, tmaxy):
-                ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
-                mask = rasterize.rasterize_all_touched(
-                    [np.asarray(ring, dtype=np.float64)],
-                    (1.0, 0.0, float(tc), 0.0, -1.0, float(tf)),
-                    (100, 100),
-                )
-                # same flat-index construction as the tile kernel:
-                # column-major (col, row) pairs sorted by (col, row)
-                scols, srows = np.nonzero(mask.T)
-                flat = scols.astype(np.int64) * 100 + srows
-                enc = rle.encode_from_indices(flat, 100, 100)
-                out.append(
-                    f"{enc['counts'].decode('ascii')}|{rle.area(enc)}"
-                )
-            return pd.Series(out)
-
-        stats = pairs.withColumn(
-            "rle",
-            _box_rle(
-                "label_minx", "label_miny", "label_maxx", "label_maxy",
-                "tile_minx", "tile_maxy",
-            ),
-        )
-        anns = ids.assign_sequential_ids(stats, ["ti", "tj", "label_id"], "ann_id")
+        anns = _coco_masks(spark, _half_pixel_boxes(spark, sf_dir), _BOX_COLS, _box_rings)
         return anns.select(
-            "tile_id",
-            "label_id",
-            "ann_id",
-            F.split(F.col("rle"), r"\|")[0].alias("rle_counts"),
-            F.split(F.col("rle"), r"\|")[1].cast("long").alias("rle_area"),
+            "tile_id", "label_id", "ann_id", "rle_counts", F.col("area").alias("rle_area")
         )
 
     def q_coco_stars(spark, sf_dir):
-        # Round 5: the pixel trust surface extended from axis-aligned
-        # boxes (q_coco_boxes/q_coco_rle closed forms) to genuinely
-        # CONCAVE polygons: the REAL all_touched rasterizer
+        # the pixel trust surface extended from axis-aligned boxes to
+        # genuinely CONCAVE polygons: the kernel's burn
         # (rasterize_all_touched_flat's scanline fill + boundary
-        # supercover, the burn behind every kernel mask) runs on
-        # 8-vertex star polygons and its area, bbox AND COCO RLE bytes
-        # are pinned by a DuckDB
+        # supercover) and encoder run on 8-vertex star polygons, and
+        # their area, bbox AND COCO RLE bytes are pinned by a DuckDB
         # oracle that re-implements the same fill/supercover formulas
         # from scratch in SQL (crossing pairing via window functions,
         # Liang-Barsky row clipping, run detection via lag, the public
@@ -921,154 +960,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # vertical edges by construction, so the gridline special rules
         # stay pinned by the rasterize property tests (same division of
         # labor as q_coco_boxes).
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        from geococo_spark.geometry import rasterize, rle
-        from geococo_spark.operators import spatial_join
-
-        stars = _t(spark, sf_dir, "customer").repartition(
-            spark.sparkContext.defaultParallelism, "c_custkey"
-        ).selectExpr(
-            "c_custkey AS label_id",
-            f"CAST({_PX} AS DOUBLE) AS px",
-            f"CAST({_PY} AS DOUBLE) AS py",
-            f"CAST({_S} AS DOUBLE) AS s",
-        ).selectExpr(
-            "label_id", "px", "py", "s",
-            "px - s AS label_minx",
-            "py - s AS label_miny",
-            "px + s AS label_maxx",
-            "py + s AS label_maxy",
-        )
-        pairs = spatial_join.spatial_join(
-            _tiles_grid(spark),
-            stars,
-            cell_size=100.0,
-            exact=False,
-            geometry="label_id",  # unused in bbox-only mode
-        )
-
-        @pandas_udf(StringType())
-        def _star_mask_stats(pxs, pys, ss, tminx, tmaxy):
-            dx = np.array([1.0, 0.35, 0.0, -0.35, -1.0, -0.35, 0.0, 0.35])
-            dy = np.array([0.0, 0.35, 1.0, 0.35, 0.0, -0.35, -1.0, -0.35])
-            out = []
-            for cx, cy, s, tc, tf in zip(pxs, pys, ss, tminx, tmaxy):
-                xs = cx + s * dx
-                ys = cy + s * dy
-                ring = np.column_stack(
-                    [np.append(xs, xs[0]), np.append(ys, ys[0])]
-                )
-                mask = rasterize.rasterize_all_touched(
-                    [ring], (1.0, 0.0, float(tc), 0.0, -1.0, float(tf)), (100, 100)
-                )
-                bb = rasterize.bounding_rect(mask)
-                scols, srows = np.nonzero(mask.T)
-                flat = scols.astype(np.int64) * 100 + srows
-                enc = rle.encode_from_indices(flat, 100, 100)
-                out.append(
-                    f"{int(mask.sum())}|{bb[0]},{bb[1]},{bb[2]},{bb[3]}|"
-                    f"{enc['counts'].decode('ascii')}"
-                )
-            return pd.Series(out)
-
-        stats = pairs.withColumn(
-            "stats", _star_mask_stats("px", "py", "s", "tile_minx", "tile_maxy")
-        )
-        anns = ids.assign_sequential_ids(stats, ["ti", "tj", "label_id"], "ann_id")
-        return anns.select(
-            "tile_id",
-            "label_id",
-            "ann_id",
-            F.split(F.col("stats"), r"\|")[0].cast("long").alias("area"),
-            F.split(F.col("stats"), r"\|")[1].alias("bbox"),
-            F.split(F.col("stats"), r"\|")[2].alias("rle_counts"),
-        )
+        anns = _coco_masks(spark, _star_centers(spark, sf_dir), _STAR_COLS, _star_rings)
+        return anns.select("tile_id", "label_id", "ann_id", "area", "bbox", "rle_counts")
 
     def q_coco_multistars(spark, sf_dir):
-        # MULTI-RING even-odd through the real rasterizer: two
-        # overlapping sub-stars per label (sub-star j centered at
+        # MULTI-RING even-odd through the kernel's burn: two overlapping
+        # sub-stars per label (sub-star j centered at
         # (px + 0.35s*j, py - 0.35s*j)) — where they overlap, even-odd
         # parity carves HOLES, and the supercover still outlines both
         # boundaries; the SQL oracle is the same from-scratch
         # fill/supercover/varint implementation over all 16 edges
         # (flattened-ring crossing parity == per-ring XOR). Pins the
-        # engine's MultiPolygon/hole mask semantics
-        # (wkb.decode_rings flattening) hash-exact, beyond q_coco_stars'
-        # single rings.
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        from geococo_spark.geometry import rasterize, rle
-        from geococo_spark.operators import spatial_join
-
-        stars = _t(spark, sf_dir, "customer").repartition(
-            spark.sparkContext.defaultParallelism, "c_custkey"
-        ).selectExpr(
-            "c_custkey AS label_id",
-            f"CAST({_PX} AS DOUBLE) AS px",
-            f"CAST({_PY} AS DOUBLE) AS py",
-            f"CAST({_S} AS DOUBLE) AS s",
-        ).selectExpr(
-            "label_id", "px", "py", "s",
-            "px - s AS label_minx",
-            "py - (0.35 * s) - s AS label_miny",
-            "px + (0.35 * s) + s AS label_maxx",
-            "py + s AS label_maxy",
+        # engine's MultiPolygon/hole mask semantics (flattened rings,
+        # as wkb.decode_batch hands them to the kernel) hash-exact,
+        # beyond q_coco_stars' single rings.
+        anns = _coco_masks(
+            spark, _star_centers(spark, sf_dir, multi=True), _STAR_COLS, _multistar_rings
         )
-        pairs = spatial_join.spatial_join(
-            _tiles_grid(spark),
-            stars,
-            cell_size=100.0,
-            exact=False,
-            geometry="label_id",  # unused in bbox-only mode
-        )
-
-        @pandas_udf(StringType())
-        def _multistar_mask_stats(pxs, pys, ss, tminx, tmaxy):
-            dx = np.array([1.0, 0.35, 0.0, -0.35, -1.0, -0.35, 0.0, 0.35])
-            dy = np.array([0.0, 0.35, 1.0, 0.35, 0.0, -0.35, -1.0, -0.35])
-            out = []
-            for cx, cy, s, tc, tf in zip(pxs, pys, ss, tminx, tmaxy):
-                rings = []
-                for j in (0.0, 1.0):
-                    cxj = cx + (0.35 * s) * j
-                    cyj = cy - (0.35 * s) * j
-                    xs = cxj + s * dx
-                    ys = cyj + s * dy
-                    rings.append(
-                        np.column_stack([np.append(xs, xs[0]), np.append(ys, ys[0])])
-                    )
-                mask = rasterize.rasterize_all_touched(
-                    rings, (1.0, 0.0, float(tc), 0.0, -1.0, float(tf)), (100, 100)
-                )
-                bb = rasterize.bounding_rect(mask)
-                scols, srows = np.nonzero(mask.T)
-                flat = scols.astype(np.int64) * 100 + srows
-                enc = rle.encode_from_indices(flat, 100, 100)
-                out.append(
-                    f"{int(mask.sum())}|{bb[0]},{bb[1]},{bb[2]},{bb[3]}|"
-                    f"{enc['counts'].decode('ascii')}"
-                )
-            return pd.Series(out)
-
-        stats = pairs.withColumn(
-            "stats", _multistar_mask_stats("px", "py", "s", "tile_minx", "tile_maxy")
-        )
-        anns = ids.assign_sequential_ids(stats, ["ti", "tj", "label_id"], "ann_id")
-        return anns.select(
-            "tile_id",
-            "label_id",
-            "ann_id",
-            F.split(F.col("stats"), r"\|")[0].cast("long").alias("area"),
-            F.split(F.col("stats"), r"\|")[1].alias("bbox"),
-            F.split(F.col("stats"), r"\|")[2].alias("rle_counts"),
-        )
+        return anns.select("tile_id", "label_id", "ann_id", "area", "bbox", "rle_counts")
 
     def q_coco_pipeline(spark, sf_dir):
         return entry(spark)
@@ -1153,9 +1062,10 @@ def _coco_rle_oracle_sql() -> str:
     gaps 100-h; full-height columns (h = 100) merge into a single run of
     m*100. The compressed form delta-codes counts[i > 2] against
     counts[i-2], so interior runs collapse to '0' chars and only five
-    distinct varints remain per mask (validated against
-    rle.encode_from_indices over 2000+ random boxes incl. full-height
-    sweeps and the degenerate corners)."""
+    distinct varints remain per mask (the closed form was validated
+    against the engine's sparse encoder over 2000+ random boxes incl.
+    full-height sweeps and the degenerate corners; q_coco_rle runs the
+    kernel's batched encoder against it)."""
     vc = ",\n         ".join(
         _varint_cols("z0", "vz")
         + _varint_cols("hrun", "vh")

@@ -541,42 +541,30 @@ class CocoState:
         """
         from geococo_spark.operators import ids as ids_ops
 
-        n_existing_known = self.cached_counts.get("sources")
-        if n_existing_known == 0 and incoming_count is not None:
-            # fresh-state fast path (common first append): no existence
-            # join, no stats job — everything derived from the known
-            # incoming count; the id window stays lazy in the main DAG
-            incoming = file_names.select("file_name").distinct()
-            self.info["version"] = bulk_bump(self.info["version"], incoming_count, 0)
-            mapping = ids_ops.assign_sequential_ids(
-                incoming, ["file_name"], "id", n_rows=incoming_count
-            ).select("file_name", F.col("id").cast("long"))
-            self.sources = self.sources.unionByName(
-                mapping.select(
-                    "id", "file_name",
-                    F.lit(date_captured).cast("timestamp").alias("date_captured"),
-                )
-            )
-            self.cached_counts["sources"] = incoming_count
-            return mapping
-
         existing = self.sources.select("file_name", F.col("id").alias("_src_id"))
         incoming = file_names.select("file_name").distinct()
+        # on a fresh state the sources table is an empty LocalRelation,
+        # so the optimizer prunes this join and its filters below
         joined = incoming.join(F.broadcast(existing), "file_name", "left")
-        stats = joined.agg(
-            F.count(F.lit(1)).alias("n_in"),
-            F.sum(F.col("_src_id").isNotNull().cast("int")).alias("n_matched"),
-            F.max(F.when(F.col("_src_id").isNull(), F.col("file_name"))).alias("max_new"),
-        ).first()
-        n_in = int(stats["n_in"])
-        n_matched = int(stats["n_matched"] or 0)
-        n_new = n_in - n_matched
+        if self.cached_counts.get("sources") == 0 and incoming_count is not None:
+            # nothing can match: no stats job, every incoming name is new
+            n_new, n_matched = incoming_count, 0
+        else:
+            stats = joined.agg(
+                F.count(F.lit(1)).alias("n_in"),
+                F.sum(F.col("_src_id").isNotNull().cast("int")).alias("n_matched"),
+                F.max(F.when(F.col("_src_id").isNull(), F.col("file_name"))).alias("max_new"),
+            ).first()
+            n_matched = int(stats["n_matched"] or 0)
+            n_new = int(stats["n_in"]) - n_matched
         if n_new:
             # patch bumps that survive = matched names sorted after the
             # last new name (every earlier patch is zeroed by a minor bump)
-            p_after = joined.filter(
-                F.col("_src_id").isNotNull() & (F.col("file_name") > F.lit(stats["max_new"]))
-            ).count()
+            p_after = 0
+            if n_matched:
+                p_after = joined.filter(
+                    F.col("_src_id").isNotNull() & (F.col("file_name") > F.lit(stats["max_new"]))
+                ).count()
             self.info["version"] = bulk_bump(self.info["version"], n_new, p_after)
         else:
             self.info["version"] = bulk_bump(self.info["version"], 0, n_matched)

@@ -189,8 +189,9 @@ def rasterize_all_touched_flat(
     with an empty ring list yields an all-zero mask.
 
     Returns the list of (nrows, ncols) bool masks. With
-    ``return_pixels=True`` returns ``(masks, pix_lab, pix_row, pix_col)``
-    where the ``pix_*`` arrays list every SET pixel of every label mask,
+    ``return_pixels=True`` returns ``(None, pix_lab, pix_row, pix_col)``
+    — no per-label mask views are built — where the ``pix_*`` arrays
+    list every SET pixel of every label mask,
     sorted by ``(label, col, row)`` — i.e. column-major within each
     label, the order COCO RLE wants — extracted with one ``nonzero``
     over the shared mask buffer (the kernel's per-(tile,label)
@@ -237,10 +238,14 @@ def rasterize_all_touched_flat(
     emask = valid[elab]
     kidx = kidx[emask]
     edges = (px[kidx], py[kidx], px[kidx + 1], py[kidx + 1], elab[emask])
-    masks, buf, moff = _burn_label_edges(*edges, nrows_l, ncols_l, minr_l, maxr_l)
-    if not return_pixels:
-        return masks
-    return (masks, *_set_pixels(buf, moff, nrows_l))
+    buf, moff = _burn_label_edges(*edges, nrows_l, ncols_l, minr_l, maxr_l)
+    if return_pixels:
+        return (None, *_set_pixels(buf, moff, nrows_l))
+    # each patch is column-major in buf: the masks are transposed views
+    return [
+        buf[moff[i] : moff[i + 1]].reshape(int(ncols_l[i]), int(nrows_l[i])).T
+        for i in range(n)
+    ]
 
 
 def _set_pixels(buf: np.ndarray, moff: np.ndarray, nrows_l: np.ndarray):
@@ -273,26 +278,20 @@ def _burn_label_edges(
     ncols_l: np.ndarray,
     minr_l: np.ndarray,
     maxr_l: np.ndarray,
-) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray]:
     """Scanline fill + boundary supercover for a flat edge list labelled
-    by patch index; returns ``(masks, buf, moff)``.
+    by patch index; returns ``(buf, moff)``.
 
     Every patch is laid out column-major in one shared buffer (flat
     index ``moff[label] + col * nrows + row``), so :func:`_set_pixels`'
     ``nonzero`` emits (label, col, row) order natively; patches are
-    small (~1 KB) and stay cache-resident either way. The returned
-    masks are transposed views with (nrows, ncols) shape.
+    small (~1 KB) and stay cache-resident either way.
     """
-    n = len(nrows_l)
     sizes = nrows_l * ncols_l
     moff = np.concatenate([[0], np.cumsum(sizes)])
     buf = np.zeros(int(moff[-1]), dtype=bool)
-    masks = [
-        buf[moff[i] : moff[i + 1]].reshape(int(ncols_l[i]), int(nrows_l[i])).T
-        for i in range(n)
-    ]
     if x0.size == 0:
-        return masks, buf, moff
+        return buf, moff
 
     # ---- interior fill: pixel centres inside the rings, as scanline
     # spans (the crossing rule of _pip_even_odd) ----
@@ -390,7 +389,7 @@ def _burn_label_edges(
     inr = (rows >= 0) & (rows < nrowsE[eidx])
     eidx, rows = eidx[inr], rows[inr]
     if eidx.size == 0:
-        return masks, buf, moff
+        return buf, moff
     sx0, sy0 = x0[eidx], y0[eidx]
     sx1 = x1[eidx]
     dx = (x1 - x0)[eidx]
@@ -411,7 +410,7 @@ def _burn_label_edges(
     rows, xa, xb = rows[keep], xa[keep], xb[keep]
     slab = lab[eidx[keep]]
     if rows.size == 0:
-        return masks, buf, moff
+        return buf, moff
     ncolsE = ncols_l[slab]
     clo = np.minimum(xa, xb)
     chi = np.maximum(xa, xb)
@@ -431,7 +430,7 @@ def _burn_label_edges(
     ridx, cols = ridx[inc], cols[inc]
     if ridx.size:
         buf[moff[slab[ridx]] + cols * nrows_l[slab[ridx]] + rows[ridx]] = True
-    return masks, buf, moff
+    return buf, moff
 
 
 def bounding_rect(mask: np.ndarray) -> list[int]:

@@ -10,6 +10,13 @@ LEB128-like variable-length code using 6 bits per ASCII char offset by
 
 The format is specified publicly (cocodataset.org and the pycocotools
 docs); this is an independent implementation.
+
+There is one encoder on the engine path: the batched sparse pair
+:func:`indices_to_counts_batch` + :func:`counts_to_strings_batch`, which
+the tile kernel runs over every annotation of a tile group at once. The
+dense :func:`encode` (:func:`mask_to_counts` + :func:`counts_to_string`)
+and :func:`decode` (:func:`string_to_counts`) are the per-mask
+reference the property and known-answer tests check it against.
 """
 
 from __future__ import annotations
@@ -72,43 +79,19 @@ def string_to_counts(s: bytes) -> np.ndarray:
     return np.asarray(counts, dtype=np.int64)
 
 
-def indices_to_counts(idx: np.ndarray, total: int) -> np.ndarray:
-    """RLE counts from SORTED flat (column-major) indices of set pixels.
-
-    Equivalent to ``mask_to_counts`` on the dense mask but O(#set pixels)
-    — the tile kernel uses it to encode a small patch embedded in a large
-    tile without materializing the tile-sized mask (377k tiny masks per
-    bench run made the dense path an allocation storm).
-    """
-    idx = np.asarray(idx, dtype=np.int64)
-    if idx.size == 0:
-        return np.array([total], dtype=np.int64)
-    brk = np.nonzero(np.diff(idx) > 1)[0]
-    starts = np.concatenate([idx[:1], idx[brk + 1]])
-    ends = np.concatenate([idx[brk] + 1, idx[-1:] + 1])
-    n = len(starts)
-    trailing = total - int(ends[-1])
-    counts = np.empty(2 * n + (1 if trailing > 0 else 0), dtype=np.int64)
-    counts[0] = starts[0]
-    counts[1::2] = ends - starts
-    counts[2::2][: n - 1] = starts[1:] - ends[:-1]
-    if trailing > 0:
-        counts[-1] = trailing
-    return counts
-
-
 def indices_to_counts_batch(
     idx: np.ndarray, ann_starts: np.ndarray, totals: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Batched :func:`indices_to_counts` over MANY annotations at once.
+    """RLE counts of MANY annotations at once, from their set pixels.
 
-    ``idx`` concatenates each annotation's sorted column-major set-pixel
+    ``idx`` concatenates each annotation's SORTED column-major set-pixel
     indices; ``ann_starts`` is the CSR boundary array (A+1); ``totals``
     each annotation's ``h*w``. Returns ``(counts, count_starts)`` — the
-    concatenated int64 counts and their CSR boundaries. Per-annotation
-    slices are exactly what :func:`indices_to_counts` returns
-    (property-pinned), computed with zero per-annotation Python — the
-    tile kernel's per-pair RLE loop was ~50% of kernel core-seconds.
+    concatenated int64 counts and their CSR boundaries. Each
+    annotation's slice is what :func:`mask_to_counts` gives for its
+    dense mask (property-pinned), computed in O(#set pixels) with zero
+    per-annotation Python: the kernel never materializes a tile-sized
+    mask, and a per-pair RLE loop was ~50% of kernel core-seconds.
     """
     idx = np.asarray(idx, dtype=np.int64)
     totals = np.asarray(totals, dtype=np.int64)
@@ -202,14 +185,6 @@ def counts_to_strings_batch(counts: np.ndarray, cstarts: np.ndarray) -> list[byt
     buf = chars.tobytes()
     ann_char = char_start[cstarts]
     return [buf[ann_char[a] : ann_char[a + 1]] for a in range(n_ann)]
-
-
-def encode_from_indices(idx: np.ndarray, h: int, w: int) -> dict:
-    """Sorted column-major set-pixel indices -> same dict as :func:`encode`."""
-    return {
-        "size": [int(h), int(w)],
-        "counts": counts_to_string(indices_to_counts(idx, h * w)),
-    }
 
 
 def encode(mask: np.ndarray) -> dict:

@@ -1,16 +1,13 @@
 """Batched WKB validity checks for the label validator (F4).
 
 The reference validates labels with pandera's ``is_valid`` Check over
-shapely geometries (reference geococo/utils.py:248). The engine's
-equivalent ran one Python loop iteration per geometry (decode + ring
-predicates) inside a pandas UDF — the last row-at-a-time Python on the
-append prologue's hot path. This module replaces the
-loop body with numpy batch passes over ALL rings of the Arrow batch at
-once:
+shapely geometries (reference geococo/utils.py:248). Here one function,
+:func:`wkb_valid_batch`, decides a whole Arrow batch with numpy passes
+over ALL rings at once:
 
-- header parsing stays a (cheap) per-geometry loop — WKB is a
-  variable-length format — but each ring lands as a zero-copy
-  ``np.frombuffer`` view,
+- one CSR parse of the batch (:func:`geococo_spark.geometry.wkb.decode_batch`):
+  the header walk is a cheap per-geometry loop — WKB is a
+  variable-length format — and every coordinate lands in one gather,
 - ring closure + shoelace area are computed for every ring in one
   concatenated pass (``np.add.reduceat`` over ring segment boundaries),
 - self-intersection (``ring_is_simple``) is batched per ring-length
@@ -18,12 +15,15 @@ once:
   one vectorized pass decides the whole group
   (:func:`geococo_spark.geometry.predicates.rings_simple_batch`).
 
-Validity semantics are identical to the old per-row loop (pinned by a
-parity property test): polygonal type, >= 1 ring, every ring closed with
->= 4 points, non-zero area, no self-intersection.
+Validity semantics: polygonal type, >= 1 ring, every ring closed with
+>= 4 points, non-zero area, no self-intersection; a geometry that does
+not parse is invalid. The tests check this against a scalar per-geometry
+loop over ``wkb.decode_rings`` and the ``predicates`` ring functions.
 """
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 
@@ -34,19 +34,35 @@ def wkb_valid_batch(geoms) -> np.ndarray:
     """Validity of each WKB geometry in ``geoms`` (iterable of
     bytes-like); returns a boolean numpy array of the same length.
 
-    Fast path: ONE CSR parse for the whole batch (wkb.decode_batch) and
-    fully-vectorized closure/area/simplicity — no per-geometry Python.
-    A malformed WKB anywhere in the batch falls back to the original
-    per-geometry loop (semantics identical, pinned by the parity test);
+    ONE CSR parse for the whole batch and fully-vectorized
+    closure/area/simplicity — no per-geometry Python beyond the header
+    walk. If the batch does not parse, each geometry is parsed alone,
+    the ones that fail are invalid, and the same pass runs on the rest:
     malformed inputs are the exception, not the rule, on the append
     prologue.
     """
+    geoms = list(geoms)
+    ok = np.ones(len(geoms), dtype=bool)
+    # a null row fails bytes(), a short or garbage one the header walk
+    parse_errors = (IndexError, TypeError, ValueError, struct.error)
     try:
-        wkbs = [bytes(g) for g in geoms]
-        pts, ring_starts, label_ring_starts, _ = wkb.decode_batch(wkbs)
-    except Exception:
-        return _wkb_valid_batch_loop(geoms)
-    n_geoms = len(wkbs)
+        parsed = wkb.decode_batch([bytes(g) for g in geoms])
+    except parse_errors:
+        for i, g in enumerate(geoms):
+            try:
+                wkb.decode_batch([bytes(g)])
+            except parse_errors:
+                ok[i] = False
+        parsed = wkb.decode_batch([bytes(g) for g, k in zip(geoms, ok) if k])
+    ok[ok] = _rings_valid(*parsed[:3])
+    return ok
+
+
+def _rings_valid(
+    pts: np.ndarray, ring_starts: np.ndarray, label_ring_starts: np.ndarray
+) -> np.ndarray:
+    """Per-geometry validity of a parsed CSR batch (see module doc)."""
+    n_geoms = len(label_ring_starts) - 1
     ok = np.ones(n_geoms, dtype=bool)
     rc = np.diff(label_ring_starts)
     ok &= rc > 0
@@ -84,63 +100,4 @@ def wkb_valid_batch(geoms) -> np.ndarray:
             stacked = pts[gstarts[:, None] + np.arange(npts)]
             bad = ~predicates.rings_simple_batch(stacked)
             ok[owner_all[grp[bad]]] = False
-    return ok
-
-
-def _wkb_valid_batch_loop(geoms) -> np.ndarray:
-    """Per-geometry fallback (original implementation) — isolates a
-    malformed WKB to its own row instead of failing the batch."""
-    n_geoms = len(geoms)
-    ok = np.ones(n_geoms, dtype=bool)
-    ring_list: list[np.ndarray] = []
-    owner: list[int] = []
-    for i, g in enumerate(geoms):
-        try:
-            rings = wkb.decode_rings(bytes(g))
-        except Exception:
-            ok[i] = False
-            continue
-        if not rings:
-            ok[i] = False
-            continue
-        if any(len(r) < 4 for r in rings):
-            ok[i] = False
-            continue
-        ring_list.extend(rings)
-        owner.extend([i] * len(rings))
-    if not ring_list:
-        return ok
-
-    owner_arr = np.asarray(owner, dtype=np.int64)
-    lens = np.fromiter((len(r) for r in ring_list), dtype=np.int64, count=len(ring_list))
-    pts = np.concatenate(ring_list, axis=0)
-    ends = np.cumsum(lens)
-    starts = ends - lens
-
-    # closure: first point == last point, both coordinates
-    closed = (pts[starts] == pts[ends - 1]).all(axis=1)
-
-    # shoelace area per ring in one pass: per-edge cross terms
-    # c_i = x_i*y_{i+1} - x_{i+1}*y_i, boundary-spanning terms zeroed
-    # (for a closed ring the wrap term is exactly 0, so summing the
-    # n-1 interior terms equals ring_area's roll-based sum)
-    x, y = pts[:, 0], pts[:, 1]
-    c = np.empty(len(pts), dtype=np.float64)
-    c[:-1] = x[:-1] * y[1:] - x[1:] * y[:-1]
-    c[-1] = 0.0
-    c[ends - 1] = 0.0
-    areas = 0.5 * np.add.reduceat(c, starts)
-
-    ring_ok = closed & (np.abs(areas) != 0.0)
-
-    # self-intersection, batched per ring-length group
-    for npts in np.unique(lens):
-        idx = np.nonzero(lens == npts)[0]
-        live = idx[ring_ok[idx]]  # closure/area failures skip the O(n^2) test
-        if len(live) == 0:
-            continue
-        stacked = np.stack([ring_list[k] for k in live])
-        ring_ok[live] &= predicates.rings_simple_batch(stacked)
-
-    ok[owner_arr[~ring_ok]] = False
     return ok

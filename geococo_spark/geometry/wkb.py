@@ -117,8 +117,9 @@ def decode_batch(wkbs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     - ``gtypes`` — uint32 ``(L,)`` raw WKB type codes (3=Polygon,
       6=MultiPolygon).
 
-    Raises on big-endian, Point, or non-Polygon MultiPolygon children —
-    the same contract as :func:`decode_rings`.
+    Raises on big-endian, Point, non-Polygon MultiPolygon children or a
+    geometry whose rings run past its own bytes — the same contract as
+    :func:`decode_rings`.
     """
     n_geoms = len(wkbs)
     gtypes = np.empty(n_geoms, dtype=np.uint32)
@@ -164,6 +165,10 @@ def decode_batch(wkbs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
                 nrings_label += nrings
         else:
             raise ValueError(f"decode_batch: expected polygonal geometry, got type {gtype}")
+        if off > len(gb):
+            # the gather below reads the concatenated buffer, so a
+            # truncated geometry would silently borrow the next one's bytes
+            raise ValueError(f"decode_batch: geometry {i} is truncated ({len(gb)} < {off} bytes)")
         label_ring_counts[i] = nrings_label
         base += len(gb)
     npts = np.asarray(ring_npts, dtype=np.int64)

@@ -41,32 +41,15 @@ class _DecodeCache:
     memory; cached arrays are frozen read-only because every kernel step
     below either slices (views) or copies."""
 
+    # per worker, and local mode runs one Python worker per core
     DEFAULT_MAX_BYTES = 128 * 1024 * 1024
 
-    def __init__(self, max_bytes: int | None = None):
-        if max_bytes is None:
-            max_bytes = self._default_budget()
+    def __init__(self, max_bytes: int = DEFAULT_MAX_BYTES):
         self.max_bytes = max_bytes
         self._entries: "dict[bytes, np.ndarray]" = {}
         self._total = 0
         self.hits = 0
         self.misses = 0
-
-    @staticmethod
-    def _default_budget() -> int:
-        """Per-worker byte budget (ADVICE r04: the old fixed 512 MB
-        multiplied by one-Python-worker-per-core — ~16 GB aggregate at 32
-        cores). Default 128 MB, overridable via the
-        ``GEOCOCO_DECODE_CACHE_MB`` env var (set
-        ``spark.executorEnv.GEOCOCO_DECODE_CACHE_MB`` on a real cluster;
-        local-mode workers inherit the driver env). 0 disables caching."""
-        import os
-
-        try:
-            mb = int(os.environ.get("GEOCOCO_DECODE_CACHE_MB", ""))
-        except ValueError:
-            return _DecodeCache.DEFAULT_MAX_BYTES
-        return max(mb, 0) * 1024 * 1024
 
     def clear(self) -> None:
         self._entries.clear()
@@ -484,9 +467,7 @@ def cogroup_kernel(
     by (image_id, band) when the pipeline band-splits mega-rasters).
 
     ``acc`` (accumulator dict) serializes into the worker closure so the
-    kernel can report engine metrics (checkpoint.EngineMetrics).
-    The per-worker decode cache takes its byte budget from the
-    ``GEOCOCO_DECODE_CACHE_MB`` env var (see :class:`_DecodeCache`)."""
+    kernel can report engine metrics (checkpoint.EngineMetrics)."""
 
     def _fn(image_pdf: pd.DataFrame, pairs_pdf: pd.DataFrame) -> pd.DataFrame:
         import time as _time

@@ -32,15 +32,13 @@ def assign_sequential_ids(
     small_threshold: int = 1_000_000,
     num_partitions: int | None = None,
     n_rows: int | None = None,
-    assume_large: bool = False,
     pin_input: bool = False,
 ) -> DataFrame:
     """Add ``id_col`` = offset + 1, offset + 2, ... in ``order_cols`` order.
 
     ``offset`` carries the resume/append contract: ids continue from the
     existing table count (A7, geococo/coco_models.py:24-29).
-    ``n_rows`` (a known count) or ``assume_large=True`` skips the
-    path-decision count() job — the two-pass path never needs the total.
+    ``n_rows`` (a known count) skips the path-decision count() job.
     ``pin_input=True`` persists ``df`` when the decision count must run:
     the count and the windowed output otherwise each execute the full
     upstream plan (round 8: an expensive join upstream ran twice per
@@ -48,13 +46,12 @@ def assign_sequential_ids(
     session-level cleanup (a benchmarked query released per run, or
     ``spark.catalog.clearCache`` between runs).
     """
-    if not assume_large:
-        if pin_input and n_rows is None:
-            df = df.persist()
-        n = n_rows if n_rows is not None else df.count()
-        if n <= small_threshold:
-            w = Window.orderBy(*order_cols)
-            return df.withColumn(id_col, (F.row_number().over(w) + F.lit(offset)).cast("long"))
+    if pin_input and n_rows is None:
+        df = df.persist()
+    n = n_rows if n_rows is not None else df.count()
+    if n <= small_threshold:
+        w = Window.orderBy(*order_cols)
+        return df.withColumn(id_col, (F.row_number().over(w) + F.lit(offset)).cast("long"))
 
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = (

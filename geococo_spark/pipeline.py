@@ -58,8 +58,8 @@ class SchemaValidationError(ValueError):
 @pandas_udf(BooleanType())
 def _geometry_is_valid(geom: pd.Series) -> pd.Series:
     # numpy batch passes over the whole Arrow batch, no per-row Python —
-    # semantics pinned against the old per-geometry loop by a property
-    # test (tests/test_geometry.py)
+    # semantics pinned against a scalar per-geometry reference loop
+    # (tests/test_geometry.py)
     return pd.Series(validate.wkb_valid_batch(geom.to_numpy()))
 
 
@@ -116,7 +116,6 @@ def validate_labels(
     id_attribute: str | None = "category_id",
     name_attribute: str | None = None,
     super_attribute: str | None = None,
-    return_count: bool = False,
 ) -> DataFrame:
     """F4 — schema-on-read validation + coercion (geococo/utils.py:228-265).
 
@@ -130,8 +129,6 @@ def validate_labels(
     out, present_id = _coerce_labels(labels, id_attribute, name_attribute, super_attribute)
     counts = out.agg(*_row_check_exprs(id_attribute, present_id)).first()
     _raise_on_violations(counts, id_attribute)
-    if return_count:
-        return out, int(counts["n"])
     return out
 
 
@@ -289,8 +286,9 @@ def _prologue(
         *[F.min(f"l_{c}").alias(f"l_{c}") for c in lab_agg_df.columns],
         F.count(F.lit(1)).alias("n_images"),
         # image_id is the table key; a duplicate would silently inflate
-        # source ids + version bumps in register_sources_df's fresh-state
-        # fast path (ADVICE r02) — verified here in the same agg pass
+        # source ids + version bumps in register_sources_df, which takes
+        # n_images as the distinct count (ADVICE r02) — verified here in
+        # the same agg pass
         F.countDistinct("image_id").alias("n_distinct_ids"),
         F.countDistinct("crs").alias("n_crs"),
         F.min("crs").alias("crs"),

@@ -165,3 +165,66 @@ class TestShardManifestCounts:
         assert p in msg and key in msg
         assert f"count {true_count + 5} " in msg and f" {true_count} rows" in msg
         assert os.path.basename(doc[key]["dir"]) in msg
+
+
+def names(spark, *file_names):
+    """A one-column ``file_name`` DataFrame that is not a Python scan."""
+    return spark.range(len(file_names)).select(
+        F.element_at(F.array(*[F.lit(n) for n in file_names]), F.col("id").cast("int") + 1)
+        .alias("file_name")
+    )
+
+
+def jobs_of(spark, group, fn):
+    """(result of ``fn()``, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSourceRegistration:
+    def test_fresh_state_runs_no_job(self, spark):
+        state = CocoState.create(spark)
+        incoming = names(spark, "b.tif", "a.tif", "c.tif")
+        mapping, n_jobs = jobs_of(
+            spark,
+            "register-fresh",
+            lambda: state.register_sources_df(incoming, CAPTURED, incoming_count=3),
+        )
+        assert n_jobs == 0
+        assert state.info["version"] == "0.3.0"  # 0.0.0 + three minor bumps
+        assert state.cached_counts["sources"] == 3
+        assert "Join" not in optimized(mapping).toString()
+        got = sorted((r["file_name"], r["id"]) for r in mapping.collect())
+        assert got == [("a.tif", 1), ("b.tif", 2), ("c.tif", 3)]
+        assert sorted(r["id"] for r in state.sources.collect()) == [1, 2, 3]
+
+    def test_no_match_skips_the_patch_count(self, spark):
+        # nothing matched: the stats job alone, as when nothing is new
+        def register(group, *file_names):
+            state = small_state(spark)
+            state.sources = state_table(
+                spark,
+                [(1, "raster.tif", CAPTURED), (2, "second.tif", CAPTURED)],
+                schemas.COCO_SOURCES,
+            )
+            state.cached_counts["sources"] = 2
+            mapping, n_jobs = jobs_of(
+                spark,
+                group,
+                lambda: state.register_sources_df(
+                    names(spark, *file_names), None, incoming_count=len(file_names)
+                ),
+            )
+            return state, mapping, n_jobs
+
+        _, _, stats_only = register("register-all-matched", "second.tif", "raster.tif")
+        state, mapping, n_jobs = register("register-no-match", "z.tif", "y.tif")
+        assert n_jobs == stats_only
+        assert state.info["version"] == "0.3.0"
+        got = sorted((r["file_name"], r["id"]) for r in mapping.collect())
+        assert got == [("y.tif", 3), ("z.tif", 4)]

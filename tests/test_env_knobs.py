@@ -1,6 +1,8 @@
-"""The append path reads no environment knobs: behaviour comes from
-parameters and Spark conf. The one exception is the pairs probe that the
-traced benchmark switches on (``SPARK_GRAFT_PAIRS_PROBE``)."""
+"""The engine reads no environment knobs: behaviour comes from
+parameters and Spark conf. Every module under ``geococo_spark/`` is
+guarded except ``session.py``, whose master, memory and PYTHONPATH
+settings are deployment choices. The one allowed key is the pairs probe
+that the traced benchmark switches on (``SPARK_GRAFT_PAIRS_PROBE``)."""
 
 import ast
 import pathlib
@@ -8,7 +10,11 @@ import pathlib
 import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
-GUARDED = ["geococo_spark/pipeline.py", "geococo_spark/operators/spatial_join.py"]
+GUARDED = sorted(
+    p.relative_to(ROOT).as_posix()
+    for p in (ROOT / "geococo_spark").rglob("*.py")
+    if p.name != "session.py"
+)
 ALLOWED = {"SPARK_GRAFT_PAIRS_PROBE"}
 
 
@@ -42,6 +48,12 @@ def test_env_reads_detector():
         "b = os.environ['X']\nc = getenv('Y', '1')\nd = environ.get(k)\n"
     )
     assert [key for _, key in env_reads(src)] == ["SPARK_GRAFT_PAIRS_PROBE", "X", "Y", None]
+
+
+def test_guard_covers_the_package():
+    assert "geococo_spark/pipeline.py" in GUARDED
+    assert "geococo_spark/kernels/tile_kernel.py" in GUARDED
+    assert "geococo_spark/session.py" not in GUARDED
 
 
 @pytest.mark.parametrize("path", GUARDED)

@@ -93,8 +93,8 @@ class TestPredicates:
 
 
 def _valid_reference_loop(g: bytes) -> bool:
-    """The pre-vectorization per-geometry validity loop (the semantics
-    wkb_valid_batch must preserve exactly)."""
+    """Scalar per-geometry validity over the scalar WKB decoder and ring
+    predicates: the semantics wkb_valid_batch must reproduce exactly."""
     try:
         rings = wkb.decode_rings(bytes(g))
         ok = len(rings) > 0
@@ -154,24 +154,23 @@ class TestValidateBatch:
     def test_parity_with_reference_loop(self):
         from geococo_spark.geometry import validate
 
-        geoms = self._fixtures()
+        geoms = self._fixtures() + [None]  # a null row
         expected = [_valid_reference_loop(g) for g in geoms]
         got = validate.wkb_valid_batch(geoms)
         assert got.tolist() == expected
         assert expected.count(True) >= 42 and expected.count(False) >= 6
 
     def test_fast_path_parity(self):
-        """The CSR fast path (no malformed WKB in the batch) must match
-        the per-geometry fallback exactly — the full-fixture parity test
-        above always falls back because it contains garbage bytes."""
+        """A batch that parses in one piece (no malformed WKB) must match
+        the scalar reference exactly — the full-fixture parity test
+        above parses geometry by geometry because it contains garbage
+        bytes."""
         from geococo_spark.geometry import validate
 
         geoms = [g for g in self._fixtures() if len(g) > 5 and wkb.geom_type(bytes(g)) != "Point"]
-        # the clean batch must actually take the fast path
+        # the clean batch must actually parse in one piece
         wkb.decode_batch([bytes(g) for g in geoms])  # raises -> fixture broke
         got = validate.wkb_valid_batch(geoms)
-        ref = validate._wkb_valid_batch_loop(geoms)
-        assert got.tolist() == ref.tolist()
         assert got.tolist() == [_valid_reference_loop(g) for g in geoms]
 
     def test_fast_path_parity_random(self):
@@ -190,8 +189,26 @@ class TestValidateBatch:
             else:
                 geoms.append(wkb.encode_polygon([ring]))
         got = validate.wkb_valid_batch(geoms)
-        ref = validate._wkb_valid_batch_loop(geoms)
-        assert got.tolist() == ref.tolist()
+        assert got.tolist() == [_valid_reference_loop(g) for g in geoms]
+
+    def test_truncated_geometry_does_not_borrow_next_bytes(self):
+        """A geometry cut short by its last vertex is invalid even when
+        the next WKB in the batch opens with exactly that vertex's bytes
+        (the batch parse gathers coordinates from the joined buffer)."""
+        import struct
+
+        from geococo_spark.geometry import validate
+
+        nxt = wkb.encode_polygon([square(0, 0, 4, 4)])
+        x, y = struct.unpack("<dd", nxt[:16])
+        ring = np.array([[x, y], [x + 1, y], [x + 1, y + 1], [x, y + 1], [x, y]])
+        full = wkb.encode_polygon([ring])
+        trunc = full[:-16]
+        assert validate.wkb_valid_batch([full, nxt]).tolist() == [True, True]
+        assert validate.wkb_valid_batch([trunc, nxt]).tolist() == [False, True]
+        assert [_valid_reference_loop(g) for g in (trunc, nxt)] == [False, True]
+        with pytest.raises(ValueError, match="truncated"):
+            wkb.decode_batch([trunc, nxt])
 
     def test_empty_batch(self):
         from geococo_spark.geometry import validate

@@ -92,7 +92,10 @@ def test_mask_counts_column_major(rows, counts, _bbox):
     h, w = mask.shape
     assert rle.mask_to_counts(mask).tolist() == counts
     idx = np.flatnonzero(mask.ravel(order="F"))
-    assert rle.indices_to_counts(idx, h * w).tolist() == counts
+    got, cstarts = rle.indices_to_counts_batch(
+        idx, np.array([0, idx.size]), np.array([h * w])
+    )
+    assert got.tolist() == counts and cstarts.tolist() == [0, len(counts)]
     enc = rle.encode(mask)
     assert enc["size"] == [h, w]
     assert rle.area(enc) == int(mask.sum())

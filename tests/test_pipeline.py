@@ -116,8 +116,9 @@ class TestAppendDataset:
 
     def test_duplicate_image_id_raises(self, spark):
         """ADVICE r02: a duplicate image_id would inflate source ids and
-        version bumps in the fresh-state registration fast path — the
-        prologue must reject it (image_id is the table key)."""
+        version bumps in source registration, which takes the image count
+        as the distinct count — the prologue must reject it (image_id is
+        the table key)."""
         state = CocoState.create(spark)
         one = datagen.images_df(spark, 1)
         images = one.unionByName(one)
@@ -462,16 +463,6 @@ class TestKernelScaleShape:
         h = cache.hits
         _, hit = cache.get(imgs[1])              # was evicted -> miss
         assert not hit and cache.hits == h and cache.misses == 4
-
-    def test_decode_cache_env_budget(self, monkeypatch):
-        from geococo_spark.kernels.tile_kernel import _DecodeCache
-
-        monkeypatch.setenv("GEOCOCO_DECODE_CACHE_MB", "64")
-        assert _DecodeCache().max_bytes == 64 * 1024 * 1024
-        monkeypatch.setenv("GEOCOCO_DECODE_CACHE_MB", "not-a-number")
-        assert _DecodeCache().max_bytes == _DecodeCache.DEFAULT_MAX_BYTES
-        monkeypatch.delenv("GEOCOCO_DECODE_CACHE_MB")
-        assert _DecodeCache().max_bytes == _DecodeCache.DEFAULT_MAX_BYTES
 
     def test_adversarial_skew_full_pipeline(self, spark, tmp_path):
         """VERDICT r03 #7: salt + band interplay under worst-case skew —

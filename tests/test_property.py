@@ -51,24 +51,13 @@ class TestRleProperties:
         counts = rle.mask_to_counts(mask)
         assert counts.sum() == mask.size
 
-    @NO_DEADLINE
-    @given(masks())
-    def test_encode_from_indices_matches_dense(self, mask):
-        # the kernel's sparse path (patch indices, column-major) must be
-        # byte-identical to dense encode of the same mask
-        cols, rows = np.nonzero(mask.T)
-        idx = cols.astype(np.int64) * mask.shape[0] + rows
-        sparse = rle.encode_from_indices(idx, *mask.shape)
-        dense = rle.encode(mask)
-        assert sparse["size"] == dense["size"]
-        assert sparse["counts"] == dense["counts"]
-
 
 class TestBatchedRleEquivalence:
     """indices_to_counts_batch / counts_to_strings_batch (the kernel's
-    zero-per-annotation RLE pass) must be byte-identical to the
-    per-annotation encode_from_indices over mixed batches — empty
-    annotations, full masks, single pixels, varying tile sizes."""
+    zero-per-annotation RLE pass) must match the dense per-mask encoder
+    (mask_to_counts / encode) count for count and byte for byte over
+    mixed batches — empty annotations, full masks, single pixels,
+    varying tile sizes."""
 
     @NO_DEADLINE
     @given(
@@ -103,11 +92,13 @@ class TestBatchedRleEquivalence:
         counts, cstarts = rle.indices_to_counts_batch(flat, ann_starts, totals)
         strs = rle.counts_to_strings_batch(counts, cstarts)
         for a, (idx, h, w) in enumerate(anns):
+            flat = np.zeros(h * w, dtype=bool)
+            flat[idx] = True
+            mask = flat.reshape((h, w), order="F")
             np.testing.assert_array_equal(
-                counts[cstarts[a] : cstarts[a + 1]], rle.indices_to_counts(idx, h * w)
+                counts[cstarts[a] : cstarts[a + 1]], rle.mask_to_counts(mask)
             )
-            ref = rle.encode_from_indices(idx, h, w)
-            assert strs[a] == ref["counts"]
+            assert strs[a] == rle.encode(mask)["counts"]
 
 
 @st.composite
@@ -395,11 +386,11 @@ class TestFlatPixelExtraction:
         )
     )
     def test_pixels_match_masks(self, labels):
-        masks, pl, pr, pc = _burn_flat(
-            [list(rings) for rings, _ in labels],
-            [shape for _, shape in labels],
-            return_pixels=True,
-        )
+        rings_lists = [list(rings) for rings, _ in labels]
+        shapes = [shape for _, shape in labels]
+        masks = _burn_flat(rings_lists, shapes)
+        no_masks, pl, pr, pc = _burn_flat(rings_lists, shapes, return_pixels=True)
+        assert no_masks is None  # the pixel path builds no mask views
         expect = []
         for i, m in enumerate(masks):
             cols, rows = np.nonzero(m.T)  # column-major enumeration
